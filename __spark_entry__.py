@@ -176,14 +176,10 @@ def entry(spark: SparkSession) -> DataFrame:
     the exploded violations table under stable (conv_id, turn_idx) order."""
     sf_dir = "/root/testdata/sf0.001"
     events = _load(spark, sf_dir, "events")
-    t = transcripts_from_events(events)
-    run = ValidationRun(_engine())
-    res = run.run(
-        spark,
-        t,
-        conversations=conversations_dim(events),
-        tools=tools_dim(spark),
-        persist_input=True,  # derived fixture input (see _q_transcript_violations)
+    # persist: derived fixture input (see _q_transcript_violations)
+    t = transcripts_from_events(events).persist()
+    res = ValidationRun(_engine()).run(
+        spark, t, conversations=conversations_dim(events), tools=tools_dim(spark)
     )
     return res.violations
 
@@ -298,14 +294,10 @@ FROM t WHERE tool IS NOT NULL AND tool NOT IN {TOOLS_IN}
 
 def _q_partition_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = _load(spark, sf_dir, "events")
-    t = transcripts_from_events(events)
-    run = ValidationRun(_engine())
-    res = run.run(
-        spark,
-        t,
-        conversations=conversations_dim(events),
-        tools=tools_dim(spark),
-        persist_input=True,  # derived input + branch fan-out (see above)
+    # persist: derived input + branch fan-out (see _q_transcript_violations)
+    t = transcripts_from_events(events).persist()
+    res = ValidationRun(_engine()).run(
+        spark, t, conversations=conversations_dim(events), tools=tools_dim(spark)
     )
     return res.verdicts
 
@@ -348,7 +340,8 @@ SELECT r.part,
        CAST(r.n_schema_viol + coalesce(c.n_check, 0) AS BIGINT) AS n_violations,
        CAST(r.n_invalid_rows AS BIGINT) AS n_invalid_rows,
        CAST(r.n_rows AS BIGINT) AS n_rows
-FROM rowv r LEFT JOIN checks c ON r.part = c.part
+-- null-safe: a NULL-ts row's part is NULL and its check rows still count
+FROM rowv r LEFT JOIN checks c ON r.part IS NOT DISTINCT FROM c.part
 """
 
 

@@ -1,21 +1,29 @@
 """ValidationRun — the end-to-end pipeline (SURVEY.md §3.3 Spark lifecycle).
 
 source scan (pending partitions only) → fused row-check projection →
-fork: violations (explode, stable order) / per-partition verdicts →
-engine checks (uniqueness, referential, drift, gaps, stats) →
-combined per-partition verdict → manifest record.
+engine checks (uniqueness, referential, opt-in sequence/shape) →
+violations (schema + engine-check rows, range-sorted) / per-partition
+verdicts → stats, drift, gaps → manifest record (``run_and_write``).
 
-One scan feeds everything; shuffles: uniqueness groupBy (salted),
+One verdict definition, ``_verdicts``: a partition passes iff none of its
+rows has a schema error and no engine-check row falls in it. The row
+checks aggregate in ``engine.partition_verdicts``; the engine-check rows
+are counted per part and joined null-safely, so a NULL-ts partition
+(part NULL) keeps its uniqueness/RI rows — the partition-level
+counterpart of the null-safe key semantics of the uniqueness check.
+
+Shuffles: uniqueness (hashed phase-1 groupBy + candidate re-group), the
 verdict/histogram groupBys (partition-keyed, AQE-coalesced), the lag
-window (conv-keyed). RI joins are broadcast. At 100 TB each stage's
-shuffle carries aggregates, not rows — the only row-volume movement is
-the window for ts-gaps and the violations sort, both keyed to stay skew-
-safe (salting + repartitionByRange).
+window (conv-keyed) and the violations range sort. RI joins are
+broadcast. Every output is a separate action that re-reads the input, so
+production input should be a materialized table, not an expensive
+derivation.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,7 +48,6 @@ class RunResult:
     stats: DataFrame
     drift: DataFrame
     gaps: DataFrame
-    extras: dict = field(default_factory=dict)
 
 
 def day_part(ts_col: str = "ts") -> Column:
@@ -66,14 +73,31 @@ class ValidationRun:
         self.category = category
         self.name = name
 
+    def _verdicts(self, validated: DataFrame, checks: DataFrame) -> DataFrame:
+        """Per-partition verdict from the validated rows and the engine-check
+        violation rows (``checks``: one row per violation, ``part`` column)."""
+        rows = self.engine.partition_verdicts(validated, day_part())
+        counts = checks.groupBy(F.col("part").alias("check_part")).agg(
+            F.count(F.lit(1)).alias("n_check")
+        )
+        return (
+            rows.join(counts, rows["part"].eqNullSafe(counts["check_part"]), "left")
+            .fillna(0, subset=["n_check"])
+            .select(
+                "part",
+                (F.col("pass") & (F.col("n_check") == 0)).alias("pass"),
+                (F.col("n_violations") + F.col("n_check")).alias("n_violations"),
+                "n_invalid_rows",
+                "n_rows",
+            )
+        )
+
     def run(
         self,
         spark: SparkSession,
         transcripts: DataFrame,
         conversations: DataFrame | None = None,
         tools: DataFrame | None = None,
-        baseline_role_hist: DataFrame | None = None,
-        persist_input: bool = False,
         pending_filtered: bool = False,
         sequence_checks: bool = False,
         shape_checks: bool = False,
@@ -82,31 +106,13 @@ class ValidationRun:
         part = day_part()
 
         # pending_filtered=True: the caller already excluded validated
-        # partitions (run_and_write's pre-filter, or a table adapter's
-        # partition-pruned scan_pending) — don't anti-join a second time
+        # partitions (a table adapter's partition-pruned scan_pending) —
+        # don't anti-join a second time
         if self.manifest is not None and not pending_filtered:
             transcripts = self.manifest.filter_pending(spark, transcripts, part)
 
-        # The run fans out into several ACTIONS (violations, verdicts,
-        # stats, drift, gaps) sharing the same input lineage, and Spark
-        # reuses exchanges only within one physical plan — so each action
-        # re-evaluates the input. The right input is therefore a
-        # MATERIALIZED table (parquet/Iceberg scan: cheap, parallel,
-        # OS/page-cache friendly), which is what the engine's contract
-        # assumes. persist_input=True exists for inputs that are expensive
-        # derivations, but measured at 4M rows the columnar cache build
-        # (dictionary-encoding text columns) costs more than re-running a
-        # window — prefer materializing instead.
-        if persist_input:
-            transcripts = transcripts.persist()
-
         # ---- row-level schema checks (one fused projection, no shuffle)
         validated = self.engine.validate_data(transcripts, self.category, self.name)
-
-        # ---- violations fork: row checks + engine checks, unioned in one
-        #      (conv_id, turn_idx, check, violation) shape. No per-branch
-        #      sort here — ONE repartitionByRange after the union (sorting
-        #      each branch separately would range-partition twice).
         row_viol = (
             validated.filter(F.size("errors") > 0)
             .select(
@@ -118,28 +124,27 @@ class ValidationRun:
             )
         )
 
+        # ---- engine checks, all in one (conv_id, turn_idx, part, check,
+        #      violation) shape.
         # method="hash": phase-1 shuffle carries (8-byte hash, count)
         # instead of the string key tuple — measured 20% faster at 16M rows
         # locally and ~4x fewer shuffle bytes (the win grows with network
         # shuffle); map-side combine absorbs hot keys, exact tail verify.
-        # The salted two-phase stays available (and oracle-covered via
-        # transcript_violations) for engines/keys where hashing is
-        # undesirable.
-        uniq = uniqueness_violations(
-            transcripts, ["conv_id", "turn_idx"], method="hash"
-        ).select(
-            "conv_id", "turn_idx", part.alias("part"),
-            F.lit("uniqueness").alias("check"), "violation",
-        )
-
-        viol_parts = [row_viol, uniq]
+        checks = [
+            uniqueness_violations(
+                transcripts, ["conv_id", "turn_idx"], method="hash"
+            ).select(
+                "conv_id", "turn_idx", part.alias("part"),
+                F.lit("uniqueness").alias("check"), "violation",
+            )
+        ]
         if sequence_checks:
             # opt-in (default off keeps existing outputs byte-stable):
             # gap / ts-regression / role-stutter rows from ONE conv-keyed
             # window exchange (checks/sequence.py)
             from pacts_spark.checks.sequence import sequence_violations
 
-            viol_parts.append(
+            checks.append(
                 sequence_violations(
                     transcripts.withColumn("part", part), passthrough=("part",)
                 ).select(
@@ -156,7 +161,7 @@ class ValidationRun:
             # closer anchors close/too-long rows).
             from pacts_spark.checks.sequence import conversation_shape_violations
 
-            viol_parts.append(
+            checks.append(
                 conversation_shape_violations(
                     transcripts, part_col=part, **(shape_kwargs or {})
                 ).select(
@@ -165,41 +170,28 @@ class ValidationRun:
                 )
             )
         if conversations is not None:
-            viol_parts.append(
+            checks.append(
                 ri_violations(transcripts, conversations, "conv_id").select(
                     "conv_id", "turn_idx", part.alias("part"),
                     F.lit("referential_conv").alias("check"), "violation",
                 )
             )
         if tools is not None:
-            viol_parts.append(
+            checks.append(
                 ri_violations(transcripts, tools, "tool").select(
                     "conv_id", "turn_idx", part.alias("part"),
                     F.lit("referential_tool").alias("check"), "violation",
                 )
             )
-        violations = viol_parts[0]
-        for v in viol_parts[1:]:
-            violations = violations.unionByName(v)
-        violations = violations.repartitionByRange(
-            "conv_id", "turn_idx"
-        ).sortWithinPartitions("conv_id", "turn_idx", "check", "violation")
+        engine_viol = reduce(DataFrame.unionByName, checks)
 
-        # ---- per-partition verdict: row verdicts + per-check counts
-        row_verd = self.engine.partition_verdicts(validated, part)
-        extra_counts = (
-            violations.filter(F.col("check") != "schema")
-            .groupBy("part")
-            .agg(F.count(F.lit(1)).alias("n_check_violations"))
-        )
-        verdicts = (
-            row_verd.join(extra_counts, "part", "left")
-            .fillna(0, subset=["n_check_violations"])
-            .withColumn(
-                "n_violations", F.col("n_violations") + F.col("n_check_violations")
-            )
-            .withColumn("pass", F.col("pass") & (F.col("n_check_violations") == 0))
-            .drop("n_check_violations")
+        # ONE repartitionByRange after the union (sorting each branch
+        # separately would range-partition twice). The verdicts read the
+        # unsorted engine-check union, so their action has no range exchange.
+        violations = (
+            row_viol.unionByName(engine_viol)
+            .repartitionByRange("conv_id", "turn_idx")
+            .sortWithinPartitions("conv_id", "turn_idx", "check", "violation")
         )
 
         # ---- metrics
@@ -208,13 +200,10 @@ class ValidationRun:
             ["conv_id", "turn_idx", "role", "text", "tool"],
             partition_col=part,
         )
-        role_hist = category_histogram(transcripts, "role", part)
-        baseline = (
-            baseline_role_hist
-            if baseline_role_hist is not None
-            else category_histogram(transcripts, "role")
+        drift = drift_scores(
+            category_histogram(transcripts, "role", part),
+            category_histogram(transcripts, "role"),
         )
-        drift = drift_scores(role_hist, baseline)
         gaps = gap_quantiles(transcripts, partition_col=part)
 
         # NOTE: run() does NOT record to the manifest — recording before the
@@ -226,11 +215,10 @@ class ValidationRun:
         return RunResult(
             validated=validated,
             violations=violations,
-            verdicts=verdicts,
+            verdicts=self._verdicts(validated, engine_viol),
             stats=stats,
             drift=drift,
             gaps=gaps,
-            extras={"input": transcripts} if persist_input else {},
         )
 
     def run_and_write(
@@ -244,59 +232,33 @@ class ValidationRun:
         seq: int = 0,
         pending_filtered: bool = False,
     ) -> dict:
-        """Production-shaped run: MINIMUM number of actions.
+        """Production-shaped run of ``run()``: two actions, then the
+        manifest record.
 
-        ``run()`` returns five lazy DataFrames; collecting each separately
-        re-evaluates shared lineage and pays per-action driver/stage
-        scheduling overhead (measured ~5-8s per action regardless of data
-        size — the Amdahl term that caps scaling). This variant:
-
-          action 1: write the violations table (the only full-data pass —
-                    all check branches evaluate inside ONE job);
-          action 2: per-partition verdicts = cheap row-count agg over the
-                    input joined with violation counts read back from the
-                    WRITTEN violations (kilobytes), then manifest record.
+          action 1: write ``run().violations`` (all check branches evaluate
+                    inside ONE job);
+          action 2: write the verdicts — ``_verdicts`` over run()'s
+                    validated frame and the engine-check rows read back
+                    from the WRITTEN violations, so no engine check runs
+                    twice. Same definition, so the same rows, as
+                    ``run().verdicts``.
 
         Returns {"violations_path", "verdicts_path"}.
         """
-        part = day_part()
-        if self.manifest is not None and not pending_filtered:
-            transcripts = self.manifest.filter_pending(spark, transcripts, part)
-
         res = self.run(
             spark,
             transcripts,
             conversations=conversations,
             tools=tools,
-            persist_input=False,
-            pending_filtered=True,  # filtered just above (or by the caller)
+            pending_filtered=pending_filtered,
         )
         # manifest.record happens ONLY after both output writes succeed
         # (below) — see run()'s note on crash-safe resume ordering.
         vio_path = f"{out_dir}/violations"
         res.violations.write.mode("overwrite").parquet(vio_path)
-
-        written = spark.read.parquet(vio_path)
-        vio_counts = written.groupBy("part").agg(
-            F.count(F.lit(1)).alias("n_violations"),
-        )
-        # n_invalid_rows comes from the VALIDATED frame (same fused
-        # projection run() aggregates), not from the written violation
-        # rows: distinct-(conv_id,turn_idx) over exploded rows undercounts
-        # when duplicate-key rows each carry schema errors, and a
-        # violation-free partition must read 0, not NULL
-        validated = self.engine.validate_data(transcripts, self.category, self.name)
-        row_counts = validated.groupBy(part.alias("part")).agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum((~F.col("valid")).cast("long")).alias("n_invalid_rows"),
-        )
-        verdicts = (
-            row_counts.join(vio_counts, "part", "left")
-            .fillna(0, subset=["n_violations"])
-            .withColumn("pass", F.col("n_violations") == 0)
-        )
+        checks = spark.read.parquet(vio_path).filter(F.col("check") != "schema")
         verd_path = f"{out_dir}/verdicts"
-        verdicts.write.mode("overwrite").parquet(verd_path)
+        self._verdicts(res.validated, checks).write.mode("overwrite").parquet(verd_path)
         if self.manifest is not None:
             self.manifest.record(
                 spark.read.parquet(verd_path), run_id=run_id, seq=seq

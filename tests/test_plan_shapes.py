@@ -68,6 +68,29 @@ def test_validator_is_scan_project_only_on_materialized_table(
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
 
 
+def test_verdicts_plan_has_no_range_sort_or_explode(spark, engine, tmp_path):
+    """On a materialized transcripts table the verdict action aggregates
+    the row checks and the UNSORTED engine-check union: the violations'
+    range exchange (and its sampling job) and the schema-error explode
+    belong to the violations output only."""
+    from pacts_spark.runner import ValidationRun
+    from pacts_spark.transcripts import conversations_dim, tools_dim
+
+    path = str(tmp_path / "turns")
+    entry._transcripts(spark, str(SF_SMALL)).write.parquet(path)
+    events = spark.read.parquet(f"{SF_SMALL}/events.parquet")
+    res = ValidationRun(engine).run(
+        spark,
+        spark.read.parquet(path),
+        conversations=conversations_dim(events),
+        tools=tools_dim(spark),
+    )
+    plan = _plan(res.verdicts)
+    assert "rangepartitioning" not in plan, plan
+    assert "Generate" not in plan, plan
+    assert "rangepartitioning" in _plan(res.violations)
+
+
 def test_ri_check_is_broadcast_anti_join(spark):
     from pacts_spark.checks import ri_violations
 

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from datetime import datetime
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -120,13 +122,46 @@ def test_run_and_write(spark, engine, transcripts, tmp_path):
     # verdict totals must agree with the written violations
     tot_v = verd.agg(F.sum("n_violations")).collect()[0][0]
     assert tot_v == vio.count()
-    # equivalence with the lazy run(): same per-part violation counts
+    # equivalence with the lazy run(): the same whole verdict row per part
     res = ValidationRun(engine).run(spark, transcripts, tools=tools_dim(spark))
-    lazy_counts = {
-        str(r.part): r.n_violations for r in res.verdicts.collect()
+    assert _verdict_rows(res.verdicts) == _verdict_rows(verd)
+
+
+def _verdict_rows(verdicts) -> dict:
+    return {
+        r.part: (r["pass"], r.n_violations, r.n_invalid_rows, r.n_rows)
+        for r in verdicts.collect()
     }
-    written_counts = {str(r.part): r.n_violations for r in verd.collect()}
-    assert lazy_counts == written_counts
+
+
+def test_null_ts_partition_verdicts(spark, engine, tmp_path):
+    """A NULL ts puts its row in the NULL partition; that partition's
+    uniqueness and RI rows still count against it (null-safe part join),
+    in run() and run_and_write() alike, and the manifest records it failed."""
+    t = spark.createDataFrame(
+        [
+            ("conv-1", 1, "user", "hi", None, None),
+            ("conv-1", 1, "assistant", "yo", None, "tool-9"),
+            ("conv-2", 1, "user", "a", datetime(2025, 1, 1, 9), None),
+            ("conv-2", 2, "assistant", "b", datetime(2025, 1, 2, 9), "tool-0"),
+        ],
+        "conv_id string, turn_idx int, role string, text string, "
+        "ts timestamp, tool string",
+    )
+    # 2 ts-required schema errors + 2 duplicate-key rows + 1 unknown tool
+    expected = (False, 5, 2, 2)
+    res = ValidationRun(engine).run(spark, t, tools=tools_dim(spark))
+    assert _verdict_rows(res.verdicts)[None] == expected
+
+    manifest = ValidationManifest(tmp_path / "m")
+    out = ValidationRun(engine, manifest=manifest).run_and_write(
+        spark, t, str(tmp_path / "out"), tools=tools_dim(spark),
+        run_id="null-ts", seq=1,
+    )
+    written = spark.read.parquet(out["verdicts_path"])
+    assert _verdict_rows(written) == _verdict_rows(res.verdicts)
+    status = [r.status for r in manifest.read(spark).collect() if r.part is None]
+    assert status == ["failed"]
 
 
 def test_run_sequence_checks_opt_in(spark, engine, transcripts):
