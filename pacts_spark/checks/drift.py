@@ -6,9 +6,13 @@ versioning v1→v2, SchemaLoader.java:257-259) to distribution stability.
 
 Scale design: histogram building is one ``groupBy(partition, category)``
 with map-side combine — the shuffle carries one row per (partition,
-category), i.e. bytes, not terabytes. Score computation joins two
-histograms on category; both sides are tiny post-aggregation, so the join
-is a broadcast regardless of input scale. The grouped-pandas variant
+category), i.e. bytes, not terabytes. Scoring needs one row per part:
+its histogram as a map (one ``groupBy(part)``), crossed with the
+baseline as ONE broadcast row (its map and total); the KL and
+chi-squared terms fold over the sorted union of both maps' categories
+inside that row. No join builds the domain: drift over a table's
+histograms plans 6 exchanges, histograms and output sort included (21
+when three joins and a crossJoin/union/distinct built the domain). The grouped-pandas variant
 (``drift_scores_pandas``) demonstrates the applyInPandas path for score
 math that outgrows Column expressions; both produce identical numbers.
 
@@ -48,59 +52,71 @@ def drift_scores(current: DataFrame, baseline: DataFrame) -> DataFrame:
 
     Inputs are ``category_histogram`` outputs (current may be per-part;
     baseline is one reference histogram with part ignored). Laplace
-    add-one smoothing over the union domain.
+    add-one smoothing over the union domain. A NULL category is one more
+    domain category with n = m = 0.
     """
-    base = baseline.groupBy("category").agg(F.sum("n").alias("m"))
-    cur = current.groupBy("part", "category").agg(F.sum("n").alias("n"))
+    cat, n = F.col("category"), F.col("n")
 
-    # union domain per part: full outer join on category within each part
-    parts = cur.select("part").distinct()
-    domain = parts.crossJoin(base.select("category")).unionByName(
-        cur.select("part", "category")
-    ).distinct()
-    j = (
-        domain.join(cur, ["part", "category"], "left")
-        .join(F.broadcast(base), ["category"], "left")
-        .fillna(0, subset=["n", "m"])
-    )
-    totals = j.groupBy("part").agg(
-        F.sum("n").alias("tot_n"),
-        F.sum("m").alias("tot_m"),
-        F.count(F.lit(1)).alias("n_cats"),
-    )
-    j2 = j.join(totals, "part")
-    p = (F.col("n") + F.lit(1)) / (F.col("tot_n") + F.col("n_cats"))
-    q = (F.col("m") + F.lit(1)) / (F.col("tot_m") + F.col("n_cats"))
-    # chi-squared vs expected counts scaled from the smoothed baseline
-    expected = q * F.col("tot_n")
-    kl_term = p * F.log(p / q)
-    chi_term = (F.col("n") - expected) * (F.col("n") - expected) / expected
+    def hist(count: Column) -> list[Column]:
+        # a map cannot hold a NULL key: the NULL category is a flag
+        named = cat.isNotNull()
+        return [
+            F.map_from_entries(F.collect_list(F.when(named, F.struct(cat, count)))),
+            F.coalesce(F.sum(F.when(named, count)), F.lit(0)),
+            F.coalesce(F.max(cat.isNull()), F.lit(False)),
+        ]
 
-    def _ordered_sum(term):
-        # DETERMINISTIC left fold in category order: a bare F.sum adds
-        # doubles in shuffle-arrival order, so the last ulp — and, at a
-        # 0.5e-6 boundary, the round-6 output — could differ between
-        # runs and engines (the CLAUDE.md round-6 boundary risk). The
-        # category set per part is histogram-sized, so the collect_list
-        # is bounded. The SQL twin folds list(term ORDER BY category)
-        # via list_reduce; the pandas twin iterates sorted(cats).
-        return F.aggregate(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("category").alias("c"), term.alias("t")))
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x.getField("t"),
-        )
-
-    return (
-        j2.groupBy("part")
-        .agg(
-            F.round(_ordered_sum(kl_term), 6).alias("kl_divergence"),
-            F.round(_ordered_sum(chi_term), 6).alias("chi_squared"),
-            F.max("n_cats").alias("n_categories"),
-        )
-        .orderBy("part")
+    cur = (
+        current.groupBy("part", "category")
+        .agg(F.sum("n").alias("n"))
+        .groupBy("part")
+        .agg(*[c.alias(a) for c, a in zip(hist(n), ["cur", "tot_n", "cur_null"])])
+        .filter(F.col("part").isNotNull())
     )
+    base = (
+        baseline.groupBy("category")
+        .agg(F.sum("n").alias("n"))
+        .agg(*[c.alias(a) for c, a in zip(hist(n), ["base", "tot_m", "base_null"])])
+    )
+    # the part's domain: the sorted union of both histograms' categories,
+    # the NULL category first (where array_sort of structs puts it)
+    cats = F.array_sort(F.array_union(F.map_keys("cur"), F.map_keys("base")))
+    j = cur.crossJoin(F.broadcast(base)).select(
+        "part", "cur", "base", "tot_n", "tot_m",
+        F.when(
+            F.col("cur_null") | F.col("base_null"), F.array_prepend(cats, F.lit(None))
+        ).otherwise(cats).alias("cats"),
+    ).withColumn("n_cats", F.size("cats").cast("long"))
+
+    def ordered_sum(term) -> Column:
+        # DETERMINISTIC left fold in category order: the last ulp — and,
+        # at a 0.5e-6 boundary, the round-6 output — depends on the
+        # addition order (the CLAUDE.md round-6 boundary risk). The SQL
+        # twin folds list(term ORDER BY category) via list_reduce; the
+        # pandas twin iterates sorted(cats).
+        def step(acc: Column, c: Column) -> Column:
+            n = F.coalesce(F.col("cur")[c], F.lit(0))
+            m = F.coalesce(F.col("base")[c], F.lit(0))
+            p = (n + F.lit(1)) / (F.col("tot_n") + F.col("n_cats"))
+            q = (m + F.lit(1)) / (F.col("tot_m") + F.col("n_cats"))
+            return acc + term(n, p, q)
+
+        return F.aggregate(F.col("cats"), F.lit(0.0), step)
+
+    def kl_term(n, p, q):
+        return p * F.log(p / q)
+
+    def chi_term(n, p, q):
+        # chi-squared vs expected counts scaled from the smoothed baseline
+        expected = q * F.col("tot_n")
+        return (n - expected) * (n - expected) / expected
+
+    return j.select(
+        "part",
+        F.round(ordered_sum(kl_term), 6).alias("kl_divergence"),
+        F.round(ordered_sum(chi_term), 6).alias("chi_squared"),
+        F.col("n_cats").alias("n_categories"),
+    ).orderBy("part")
 
 
 def drift_scores_pandas(current: DataFrame, baseline: DataFrame) -> DataFrame:

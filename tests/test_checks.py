@@ -47,6 +47,77 @@ def test_column_stats_partitioned(transcripts):
     assert any(r.n_nulls > 0 for (p, c), r in by.items() if c == "text")
 
 
+_PARITY_COLS = ["s", "i", "b", "d"]
+
+
+@pytest.fixture(scope="module")
+def mixed(spark):
+    """string/int/bigint/double columns with NULLs and a NULL part."""
+    return spark.createDataFrame(
+        [
+            ("p", "a", 1, 10, 1.5),
+            ("p", None, None, 10, -0.0),
+            ("p", "b", 1, None, 0.0),
+            ("p", "b", 7, 2**40, float("nan")),
+            ("q", "c", 3, 4, float("nan")),
+            ("q", "c", None, 4, 2.5),
+            (None, "a", 2, 3, None),
+            (None, None, 2, None, 1.5),
+        ],
+        "part string, s string, i int, b bigint, d double",
+    )
+
+
+def _standalone(df, c, distinct):
+    """One column's stats row per part, from its own aggregate."""
+    return {
+        (r.part, c): (r.n_rows, r.n_nulls, r.n_distinct, r.min_value, r.max_value)
+        for r in df.groupBy("part")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(F.col(c).isNull().cast("long")).alias("n_nulls"),
+            distinct(c).alias("n_distinct"),
+            F.min(F.col(c).cast("string")).alias("min_value"),
+            F.max(F.col(c).cast("string")).alias("max_value"),
+        )
+        .collect()
+    }
+
+
+@pytest.mark.parametrize("exact", [False, True])
+def test_column_stats_parity_with_standalone_aggregates(mixed, exact):
+    """Every column's row equals that column's own aggregate: HLL++ at the
+    same rsd (one sketch per column type hashes each value in its own
+    type, as a per-column sketch does), or count(DISTINCT) when exact."""
+    rsd = 0.05
+    distinct = F.count_distinct if exact else (lambda c: F.approx_count_distinct(c, rsd))
+    want = {}
+    for c in _PARITY_COLS:
+        want.update(_standalone(mixed, c, distinct))
+    got = {
+        (r.part, r.column): (r.n_rows, r.n_nulls, r.n_distinct, r.min_value, r.max_value)
+        for r in column_stats(
+            mixed, _PARITY_COLS, partition_col="part", exact_distinct=exact, rsd=rsd
+        ).collect()
+    }
+    assert got == want
+    assert len(got) == 3 * len(_PARITY_COLS)  # parts p, q and NULL
+
+
+@pytest.mark.parametrize("exact", [False, True])
+def test_column_stats_empty_input(mixed, exact):
+    empty = mixed.limit(0)
+    # without a partition column: one row per column, as a global
+    # aggregate gives (n_nulls and null_ppm NULL, n_distinct 0)
+    rows = column_stats(empty, _PARITY_COLS, exact_distinct=exact).collect()
+    assert sorted(tuple(r) for r in rows) == sorted(
+        ("__all__", c, 0, None, None, 0, None, None) for c in _PARITY_COLS
+    )
+    assert column_stats(
+        empty, _PARITY_COLS, partition_col="part", exact_distinct=exact
+    ).collect() == []
+
+
 def test_duplicate_keys_salted_equals_unsalted(transcripts):
     plain = {
         (r.conv_id, r.turn_idx): r.dup_count
@@ -109,6 +180,21 @@ def test_drift_known_shift_and_pandas_parity(spark):
     q = [51 / 102, 51 / 102]
     kl = sum(pi * math.log(pi / qi) for pi, qi in zip(p, q))
     assert abs(col_row.kl_divergence - round(kl, 6)) < 1e-9
+
+
+def test_drift_null_category_and_null_part(spark):
+    """A NULL category is one more domain category with n = m = 0 (it is
+    not a map key); the part with a NULL key is dropped."""
+    cur = spark.createDataFrame(
+        [("p", "a", 90), ("p", None, 10), (None, "a", 5)],
+        "part string, category string, n long",
+    )
+    base = spark.createDataFrame(
+        [("x", "a", 50), ("x", "b", 50), ("x", None, 3)],
+        "part string, category string, n long",
+    )
+    rows = [tuple(r) for r in drift_scores(cur, base).collect()]
+    assert rows == [("p", 0.626433, 91.764706, 3)]
 
 
 def test_ts_gaps_and_quantiles(spark):

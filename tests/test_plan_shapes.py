@@ -5,13 +5,15 @@ tests PIN the load-bearing shapes so a refactor cannot silently
 reintroduce a scale-killer:
 
 - no CartesianProduct anywhere in the driver-contract queries (the one
-  deliberate cross join — drift's parts x categories grid — broadcasts
+  deliberate cross join — drift's parts x one baseline row — broadcasts
   an aggregate-sized side and must never degrade to a cartesian);
 - the row validator against a MATERIALIZED table is scan -> projection
   with zero exchanges (the whole-corpus fast path);
 - referential integrity is a broadcast LEFT ANTI hash join (never a
   shuffle join on the fact side);
-- column stats compute every column's aggregates in ONE shuffle;
+- column stats compute every column's aggregates in ONE shuffle, with
+  one distinct sketch per column type;
+- drift scores plan at most 6 exchanges;
 - the validator's scan is column-pruned to the columns the schema
   actually checks.
 
@@ -117,6 +119,41 @@ def test_colstats_all_columns_in_one_shuffle(spark):
         )
     )
     assert plan.count("Exchange hashpartitioning") == 1, plan
+
+
+def test_colstats_one_sketch_per_column_type(spark):
+    """An HLL++ sketch at rsd 0.01 has a fixed cost per task (1,639
+    buffer longs); the five transcripts columns have two types (string,
+    int), so the aggregate holds two sketches, not five."""
+    import re
+
+    from pacts_spark.checks import column_stats
+
+    t = entry._transcripts(spark, str(SF_SMALL))
+    cols = ["conv_id", "turn_idx", "role", "text", "tool"]
+    n_types = len({t.schema[c].dataType for c in cols})
+    plan = column_stats(t, cols, partition_col="role")._jdf.queryExecution()
+    opt = plan.optimizedPlan().toString()
+    assert n_types == 2
+    assert len(re.findall(r"approx_count_distinct\(", opt)) == n_types, opt
+
+
+def test_drift_plan_has_at_most_six_exchanges(spark, tmp_path):
+    """Drift over a table's role histograms: the two histogram shuffles,
+    one groupBy(part), the baseline's single-row aggregate, its broadcast
+    and the output sort — no join-built (part, category) domain."""
+    from pacts_spark.checks import category_histogram, drift_scores
+    from pacts_spark.runner import day_part
+
+    path = str(tmp_path / "turns")
+    entry._transcripts(spark, str(SF_SMALL)).write.parquet(path)
+    t = spark.read.parquet(path)
+    plan = _plan(
+        drift_scores(
+            category_histogram(t, "role", day_part()), category_histogram(t, "role")
+        )
+    )
+    assert plan.count("Exchange") <= 6, plan
 
 
 def test_validator_scan_is_column_pruned(spark, engine):
