@@ -471,7 +471,8 @@ domain AS (
 j AS (
   SELECT d.part, d.category, coalesce(cur.n, 0) AS n, coalesce(base.m, 0) AS m
   FROM domain d
-  LEFT JOIN cur ON d.part = cur.part AND d.category = cur.category
+  -- null-safe on part: the NULL-ts partition is scored, not dropped
+  LEFT JOIN cur ON d.part IS NOT DISTINCT FROM cur.part AND d.category = cur.category
   LEFT JOIN base ON d.category = base.category
 ),
 tot AS (
@@ -492,7 +493,7 @@ SELECT j.part,
                  (((j.m + 1.0) / (t2.tot_m + t2.n_cats)) * t2.tot_n)
              ORDER BY j.category), (a, b) -> a + b), 6) AS chi_squared,
        max(t2.n_cats) AS n_categories
-FROM j JOIN tot t2 ON j.part = t2.part
+FROM j JOIN tot t2 ON j.part IS NOT DISTINCT FROM t2.part
 GROUP BY j.part
 """
 

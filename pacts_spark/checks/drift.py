@@ -53,7 +53,8 @@ def drift_scores(current: DataFrame, baseline: DataFrame) -> DataFrame:
     Inputs are ``category_histogram`` outputs (current may be per-part;
     baseline is one reference histogram with part ignored). Laplace
     add-one smoothing over the union domain. A NULL category is one more
-    domain category with n = m = 0.
+    domain category with n = m = 0; a NULL part (rows with a NULL
+    partition key, e.g. NULL ts) is scored like any other part.
     """
     cat, n = F.col("category"), F.col("n")
 
@@ -71,7 +72,6 @@ def drift_scores(current: DataFrame, baseline: DataFrame) -> DataFrame:
         .agg(F.sum("n").alias("n"))
         .groupBy("part")
         .agg(*[c.alias(a) for c, a in zip(hist(n), ["cur", "tot_n", "cur_null"])])
-        .filter(F.col("part").isNotNull())
     )
     base = (
         baseline.groupBy("category")

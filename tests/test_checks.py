@@ -184,7 +184,7 @@ def test_drift_known_shift_and_pandas_parity(spark):
 
 def test_drift_null_category_and_null_part(spark):
     """A NULL category is one more domain category with n = m = 0 (it is
-    not a map key); the part with a NULL key is dropped."""
+    not a map key); the part with a NULL key is scored like any other."""
     cur = spark.createDataFrame(
         [("p", "a", 90), ("p", None, 10), (None, "a", 5)],
         "part string, category string, n long",
@@ -194,7 +194,32 @@ def test_drift_null_category_and_null_part(spark):
         "part string, category string, n long",
     )
     rows = [tuple(r) for r in drift_scores(cur, base).collect()]
-    assert rows == [("p", 0.626433, 91.764706, 3)]
+    # domain (NULL, a, b) for both parts; NULL part: n = (0, 5, 0)
+    assert rows == [(None, 0.45876, 5.098039, 3), ("p", 0.626433, 91.764706, 3)]
+
+
+def test_drift_scores_null_ts_partition(spark):
+    """Rows with a NULL ts form the NULL part: stats and verdicts report
+    it, so drift must too (no kernel drops rows silently)."""
+    from pacts_spark.runner import day_part
+
+    df = spark.createDataFrame(
+        [("2024-01-01 10:00:00", "user")] * 6
+        + [("2024-01-01 11:00:00", "assistant")] * 4
+        + [(None, "user"), (None, "tool"), (None, "tool")],
+        "ts string, role string",
+    ).select(F.to_timestamp("ts").alias("ts"), "role")
+    # string part: the pandas twin's output schema declares part string
+    cur = category_histogram(df, "role", day_part().cast("string"))
+    base = category_histogram(df, "role")
+    got = [tuple(r) for r in drift_scores(cur, base).collect()]
+    assert [r[0] for r in got] == [None, "2024-01-01"]
+    assert [r[3] for r in got] == [3, 3]  # domain: assistant, tool, user
+    ref = sorted(
+        (tuple(r) for r in drift_scores_pandas(cur, base).collect()),
+        key=lambda r: r[0] is not None,
+    )
+    assert got == ref
 
 
 def test_ts_gaps_and_quantiles(spark):
