@@ -10,11 +10,11 @@ category), i.e. bytes, not terabytes. Scoring needs one row per part:
 its histogram as a map (one ``groupBy(part)``), crossed with the
 baseline as ONE broadcast row (its map and total); the KL and
 chi-squared terms fold over the sorted union of both maps' categories
-inside that row. No join builds the domain: drift over a table's
-histograms plans 6 exchanges, histograms and output sort included (21
-when three joins and a crossJoin/union/distinct built the domain). The grouped-pandas variant
-(``drift_scores_pandas``) demonstrates the applyInPandas path for score
-math that outgrows Column expressions; both produce identical numbers.
+inside that row. No join builds the (part, category) domain: drift over a
+table's histograms plans 6 exchanges, histograms and output sort
+included. The grouped-pandas variant (``drift_scores_pandas``)
+demonstrates the applyInPandas path for score math that outgrows Column
+expressions; both produce identical numbers.
 
 Smoothing: add-one (Laplace) over the UNION of category domains — fully
 deterministic and expressible in both Spark and ANSI SQL, so the DuckDB
@@ -58,28 +58,28 @@ def drift_scores(current: DataFrame, baseline: DataFrame) -> DataFrame:
     """
     cat, n = F.col("category"), F.col("n")
 
-    def hist(count: Column) -> list[Column]:
+    def hist(counts: str, total: str, has_null: str) -> list[Column]:
         # a map cannot hold a NULL key: the NULL category is a flag
         named = cat.isNotNull()
         return [
-            F.map_from_entries(F.collect_list(F.when(named, F.struct(cat, count)))),
-            F.coalesce(F.sum(F.when(named, count)), F.lit(0)),
-            F.coalesce(F.max(cat.isNull()), F.lit(False)),
+            F.map_from_entries(F.collect_list(F.when(named, F.struct(cat, n)))).alias(counts),
+            F.coalesce(F.sum(F.when(named, n)), F.lit(0)).alias(total),
+            F.coalesce(F.max(cat.isNull()), F.lit(False)).alias(has_null),
         ]
 
     cur = (
         current.groupBy("part", "category")
         .agg(F.sum("n").alias("n"))
         .groupBy("part")
-        .agg(*[c.alias(a) for c, a in zip(hist(n), ["cur", "tot_n", "cur_null"])])
+        .agg(*hist("cur", "tot_n", "cur_null"))
     )
     base = (
         baseline.groupBy("category")
         .agg(F.sum("n").alias("n"))
-        .agg(*[c.alias(a) for c, a in zip(hist(n), ["base", "tot_m", "base_null"])])
+        .agg(*hist("base", "tot_m", "base_null"))
     )
     # the part's domain: the sorted union of both histograms' categories,
-    # the NULL category first (where array_sort of structs puts it)
+    # the NULL category first (ascending order puts NULL first)
     cats = F.array_sort(F.array_union(F.map_keys("cur"), F.map_keys("base")))
     j = cur.crossJoin(F.broadcast(base)).select(
         "part", "cur", "base", "tot_n", "tot_m",

@@ -17,9 +17,9 @@ verdict groupBys (partition-keyed, AQE-coalesced), stats (ONE groupBy on
 (part, column) over the rows exploded per column), drift (the two role
 histograms, one groupBy(part) of the current one, the baseline reduced
 to one broadcast row, and the output sort), the lag window (conv-keyed)
-and the violations range sort. RI joins are broadcast. Every output is a separate action that re-reads the input, so
-production input should be a materialized table, not an expensive
-derivation.
+and the violations range sort. RI joins are broadcast. Every output is a
+separate action that re-reads the input, so production input should be
+a materialized table, not an expensive derivation.
 """
 
 from __future__ import annotations
