@@ -91,9 +91,8 @@ def drift_scores(current: DataFrame, baseline: DataFrame) -> DataFrame:
     def ordered_sum(term) -> Column:
         # DETERMINISTIC left fold in category order: the last ulp — and,
         # at a 0.5e-6 boundary, the round-6 output — depends on the
-        # addition order (the CLAUDE.md round-6 boundary risk). The SQL
-        # twin folds list(term ORDER BY category) via list_reduce; the
-        # pandas twin iterates sorted(cats).
+        # addition order. The SQL twin folds list(term ORDER BY category)
+        # via list_reduce; the pandas twin iterates sorted(cats).
         def step(acc: Column, c: Column) -> Column:
             n = F.coalesce(F.col("cur")[c], F.lit(0))
             m = F.coalesce(F.col("base")[c], F.lit(0))
