@@ -1,10 +1,9 @@
 """Engine-level constraint checks mandated by BASELINE.json north_star.
 
 Each module is a pure-DataFrame implementation (built-in aggregates, no
-Python in the hot path) designed for 100 TB: map-side partial aggregation,
-broadcast anti-joins for dims, salting for skewed keys, AQE-friendly
-shuffle keys. Grouped pandas UDF variants exist only where the math isn't
-expressible in Columns (t-digest merge)."""
+Python in the hot path) designed for 100 TB: map-side partial aggregation
+(which also absorbs hot keys), broadcast anti-joins for dims, AQE-friendly
+shuffle keys."""
 
 from pacts_spark.checks.stats import column_stats
 from pacts_spark.checks.uniqueness import duplicate_keys, uniqueness_violations

@@ -120,8 +120,8 @@ def drift_scores(current: DataFrame, baseline: DataFrame) -> DataFrame:
 
 def drift_scores_pandas(current: DataFrame, baseline: DataFrame) -> DataFrame:
     """applyInPandas twin of :func:`drift_scores` — same math, computed per
-    part inside a grouped Arrow batch (the pattern for score functions that
-    outgrow Column expressions, e.g. t-digest merges)."""
+    part inside a grouped Arrow batch; the tests' reference for the Column
+    version."""
     base_pdf = (
         baseline.groupBy("category").agg(F.sum("n").alias("m")).toPandas()
     )

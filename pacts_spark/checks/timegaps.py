@@ -8,16 +8,30 @@ Scale design: ``lag`` over ``Window.partitionBy(conv_id).orderBy(turn_idx)``
 shuffles once on conv_id. A whale conversation makes one fat window
 partition — unavoidable for exact per-conv ordering, but the window
 computes lag in a single streaming pass (no buffering of the whole
-partition for lag-1). Quantiles: ``percentile_approx`` (t-digest-style
-mergeable sketch, built-in — constant memory, one extra tiny shuffle) for
-the 100 TB path; ``exact=True`` uses ``percentile`` for oracle-comparable
-runs. Negative gaps double as the out-of-order-turn violation signal.
+partition for lag-1). Quantiles: ``percentile_approx`` (Spark's built-in
+Greenwald–Khanna ``QuantileSummaries``: a mergeable sketch whose rank
+error is bounded by n/accuracy — constant memory, one extra tiny shuffle)
+for the 100 TB path; ``exact=True`` uses ``percentile``, the reference
+the tests compare the sketch against. ``gap_quantiles_discrete`` is the
+integer-microsecond variant the oracle twin checks. Negative gaps double
+as the out-of-order-turn violation signal.
 """
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def _turn_order(conv_col: str, order_col: str, ts_col: str) -> Window:
+    """The turns of each conversation in order — NULLS LAST pinned (Spark
+    defaults nulls-first, DuckDB twin nulls-last — unpinned NULL keys
+    shift every lag)."""
+    return Window.partitionBy(conv_col).orderBy(
+        F.col(order_col).asc_nulls_last(), F.col(ts_col).asc_nulls_last()
+    )
 
 
 def ts_gaps(
@@ -28,12 +42,7 @@ def ts_gaps(
 ) -> DataFrame:
     """Per-turn gap (seconds) to the previous turn of the same conversation;
     first turn of each conversation has NULL gap."""
-    w = Window.partitionBy(conv_col).orderBy(
-        # NULLS LAST pinned (Spark defaults nulls-first, DuckDB twin
-        # nulls-last — unpinned NULL keys shift every lag)
-        F.col(order_col).asc_nulls_last(), F.col(ts_col).asc_nulls_last()
-    )
-    prev = F.lag(F.col(ts_col)).over(w)
+    prev = F.lag(F.col(ts_col)).over(_turn_order(conv_col, order_col, ts_col))
     # cast-to-double keeps sub-second precision (unix_timestamp truncates);
     # NTZ → TIMESTAMP first (session tz is UTC, so the epoch matches
     # DuckDB's epoch() on the same NTZ value)
@@ -41,129 +50,14 @@ def ts_gaps(
     return df.withColumn("gap_seconds", as_sec(F.col(ts_col)) - as_sec(prev))
 
 
-class TDigest:
-    """Minimal deterministic t-digest (merging variant, k1-style size
-    bound): mergeable centroid sketch for quantiles over unbounded
-    streams. Public-knowledge algorithm (Dunning & Ertl, "Computing
-    extremely accurate quantiles using t-digests").
-
-    Determinism: input buffers are sorted before compression and
-    compression is a single left-to-right pass, so the same multiset of
-    values always yields the same centroids regardless of arrival order.
-    """
-
-    __slots__ = ("delta", "means", "weights")
-
-    def __init__(self, delta: int = 100):
-        self.delta = delta
-        self.means: list[float] = []
-        self.weights: list[float] = []
-
-    def add_sorted(self, values, weights=None) -> None:
-        if weights is None:
-            weights = [1.0] * len(values)
-        merged_m = []
-        merged_w = []
-        i = j = 0
-        while i < len(self.means) or j < len(values):
-            if j >= len(values) or (
-                i < len(self.means) and self.means[i] <= values[j]
-            ):
-                merged_m.append(self.means[i]); merged_w.append(self.weights[i]); i += 1
-            else:
-                merged_m.append(float(values[j])); merged_w.append(float(weights[j])); j += 1
-        self._compress(merged_m, merged_w)
-
-    def merge(self, other: "TDigest") -> "TDigest":
-        self.add_sorted(other.means, other.weights)
-        return self
-
-    def _compress(self, means, weights) -> None:
-        total = sum(weights)
-        if not means:
-            self.means, self.weights = [], []
-            return
-        out_m = [means[0]]
-        out_w = [weights[0]]
-        cum = 0.0
-        for m, w in zip(means[1:], weights[1:]):
-            q0 = cum / total
-            q2 = (cum + out_w[-1] + w) / total
-            # k1 size bound approximation: centroid may absorb while the
-            # spanned quantile range stays under 1/delta scaled by 4q(1-q)
-            limit = 4.0 * total * max(q0, 1e-12) * max(1.0 - q2, 1e-12) / self.delta
-            if out_w[-1] + w <= max(limit, 1.0):
-                out_m[-1] = (out_m[-1] * out_w[-1] + m * w) / (out_w[-1] + w)
-                out_w[-1] += w
-            else:
-                cum += out_w[-1]
-                out_m.append(m)
-                out_w.append(w)
-        self.means, self.weights = out_m, out_w
-
-    def quantile(self, q: float) -> float:
-        if not self.means:
-            return float("nan")
-        total = sum(self.weights)
-        target = q * total
-        cum = 0.0
-        for i, w in enumerate(self.weights):
-            if cum + w >= target:
-                return self.means[i]
-            cum += w
-        return self.means[-1]
-
-
-def gap_quantiles_tdigest(
-    df: DataFrame,
-    partition_col: Column | str | None = None,
-    quantiles: list[float] = (0.5, 0.9, 0.99),
-    delta: int = 200,
-    conv_col: str = "conv_id",
-    order_col: str = "turn_idx",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """t-digest gap quantiles per partition via applyInPandas — the
-    custom-sketch path the north_star names explicitly.
-
-    Sandbox shape: one grouped Arrow batch per partition builds one
-    digest. At 100 TB the same TDigest.merge makes it a two-level
-    treeAggregate: per-task partial digests → merged per partition (the
-    class is mergeable and deterministic); Spark's built-in
-    percentile_approx (used by :func:`gap_quantiles`) is the JVM-side
-    equivalent and remains the default hot path.
-    """
-    import pandas as pd
-
-    gaps = ts_gaps(df, conv_col, order_col, ts_col).filter(
-        F.col("gap_seconds").isNotNull()
-    )
-    if partition_col is None:
-        gaps = gaps.withColumn("part", F.lit("__all__"))
-    else:
-        pcol = (
-            F.col(partition_col) if isinstance(partition_col, str) else partition_col
-        )
-        gaps = gaps.withColumn("part", pcol.cast("string"))
-    qlist = list(quantiles)
-
-    def digest(pdf: pd.DataFrame) -> pd.DataFrame:
-        td = TDigest(delta=delta)
-        td.add_sorted(sorted(pdf["gap_seconds"].tolist()))
-        row = [pdf["part"].iloc[0]] + [
-            round(td.quantile(q), 6) for q in qlist
-        ] + [len(pdf)]
-        cols = ["part"] + [f"p{int(q * 100)}" for q in qlist] + ["n_gaps"]
-        return pd.DataFrame([row], columns=cols)
-
-    schema = (
-        "part string, "
-        + ", ".join(f"p{int(q * 100)} double" for q in qlist)
-        + ", n_gaps long"
-    )
-    return gaps.select("part", "gap_seconds").groupBy("part").applyInPandas(
-        digest, schema
-    )
+def _percent_names(percents: list[Decimal]) -> list[str]:
+    """Quantile column names from exact percents: ``p`` + the percent with
+    ``.`` as ``_`` (0.29 → p29, 0.999 → p99_9). Raises ``ValueError`` when
+    two quantiles would share a column."""
+    names = ["p" + format(p.normalize(), "f").replace(".", "_") for p in percents]
+    if len(set(names)) < len(names):
+        raise ValueError(f"quantiles map to duplicate columns: {names}")
+    return names
 
 
 def gap_quantiles_discrete(
@@ -186,11 +80,7 @@ def gap_quantiles_discrete(
     the exact verifier.
     """
     us = lambda c: F.unix_micros(c.cast("timestamp"))  # noqa: E731
-    w = Window.partitionBy(conv_col).orderBy(
-        # NULLS LAST pinned (Spark defaults nulls-first, DuckDB twin
-        # nulls-last — unpinned NULL keys shift every lag)
-        F.col(order_col).asc_nulls_last(), F.col(ts_col).asc_nulls_last()
-    )
+    w = _turn_order(conv_col, order_col, ts_col)
     gaps = df.withColumn(
         "gap_us", us(F.col(ts_col)) - F.lag(us(F.col(ts_col))).over(w)
     ).filter(F.col("gap_us").isNotNull())
@@ -206,14 +96,15 @@ def gap_quantiles_discrete(
         F.row_number().over(pw.orderBy("gap_us")).alias("rn"),
         F.count(F.lit(1)).over(pw).alias("n"),
     )
+    names = _percent_names([Decimal(num * 100) / den for num, den in quantile_fracs])
     aggs = [
         F.max(
             F.when(
                 F.col("rn") == F.expr(f"({num} * n + {den} - 1) div {den}"),
                 F.col("gap_us"),
             )
-        ).alias(f"p{num * 100 // den}_us")
-        for num, den in quantile_fracs
+        ).alias(f"{name}_us")
+        for (num, den), name in zip(quantile_fracs, names)
     ] + [
         F.min("gap_us").alias("min_gap_us"),
         F.max("gap_us").alias("max_gap_us"),
@@ -241,9 +132,8 @@ def gap_quantiles(
         qcol = F.expr(f"percentile(gap_seconds, array({', '.join(map(str, qlist))}))")
     else:
         qcol = F.percentile_approx("gap_seconds", qlist, 10000)
-    aggs = [
-        F.round(qcol[i], 6).alias(f"p{int(q * 100)}") for i, q in enumerate(qlist)
-    ] + [
+    names = _percent_names([Decimal(str(q)) * 100 for q in qlist])
+    aggs = [F.round(qcol[i], 6).alias(name) for i, name in enumerate(names)] + [
         F.min("gap_seconds").alias("min_gap"),
         F.max("gap_seconds").alias("max_gap"),
         F.sum((F.col("gap_seconds") < 0).cast("long")).alias("n_negative_gaps"),

@@ -4,48 +4,45 @@ Scales up the reference's implicit envelope-identity contract (UUID
 target_id/profile_id uniqueness in SpringBootMessageTest.java:105,264-265)
 to a distributed duplicate-key detector.
 
-Scale design (north_rule: "skew handled explicitly"): the naive
-``groupBy(keys).count()`` already map-side-combines, but a whale
-conversation (one conv_id = hot hash bucket when aggregating BY conv alone,
-or a single reducer receiving the whale's whole key range) can straggle.
-``duplicate_keys`` therefore does SALTED TWO-PHASE aggregation:
+Semantics, stated once: ``K`` (an ordered list of columns) is unique on
+a table when no two rows agree on ``K`` under null-safe equality
+(``<=>``, SQL ``IS NOT DISTINCT FROM``): NULL is one more value, so two
+rows ``(NULL, 1)`` duplicate each other — the equality of ``GROUP BY``.
+In the terms of PAPERS ICDE 2019 ("Entity Integrity, Referential
+Integrity, and Query Optimization with Embedded Uniqueness
+Constraints"), SQL's ``UNIQUE(K)`` is the embedded uniqueness constraint
+``K : K`` — it constrains only the fragment of rows complete on ``K``,
+so rows with a NULL key part are exempt. This check is stricter: it
+also reports duplicates among incomplete keys (the embedded reading is
+this check over ``df.dropna(subset=K)``). The DuckDB twins state the
+same semantics: ``GROUP BY`` keeps the NULL group and the join-back is
+``IS NOT DISTINCT FROM``.
 
-  phase 1: groupBy(keys..., salt) count        -- salt spreads identical
-                                                  key-groups over S reducers
-  phase 2: groupBy(keys...) sum(partial)       -- tiny input (distinct keys)
-
-Salt is deterministic (hash of a payload column mod S, never rand()) so
-reruns are reproducible (SURVEY.md §7(d)). AQE skew-join/coalesce is on in
-session.py as the second line of defense.
+Scale design (north_rule: "skew handled explicitly"): every aggregate is
+a groupBy whose partial (map-side) aggregation collapses a hot key to one
+row per mapper before the exchange, so a whale conversation or a
+billion-fold duplicate never straggles a reducer — no salt is needed for
+a count. ``duplicate_keys`` is the plain groupBy count;
+``duplicate_keys_hashed`` (the runner's path) shuffles an 8-byte hash of
+the key first and re-groups only the candidate tail on the true key.
+``uniqueness_violations`` joins the duplicate set back null-safely.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def duplicate_keys(
-    df: DataFrame,
-    keys: list[str],
-    salt_col: str | Column | None = None,
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Keys appearing more than once, with their multiplicity.
-
-    Returns ``keys... , dup_count`` for groups with count > 1, salted
-    two-phase when ``salt_col`` is given (use a high-entropy payload column
-    like ``text``; identical full-duplicate rows still collide on their
-    salt, which is harmless — the whale key's VOLUME is what gets spread).
-    """
-    if salt_col is not None:
-        sc = F.col(salt_col) if isinstance(salt_col, str) else salt_col
-        salted = df.withColumn("__salt", F.pmod(F.xxhash64(sc), F.lit(salt_buckets)))
-        partial = salted.groupBy(*keys, "__salt").agg(F.count(F.lit(1)).alias("__c"))
-        counts = partial.groupBy(*keys).agg(F.sum("__c").alias("dup_count"))
-    else:
-        counts = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("dup_count"))
-    return counts.filter(F.col("dup_count") > 1)
+def duplicate_keys(df: DataFrame, keys: list[str]) -> DataFrame:
+    """Keys appearing more than once, with their multiplicity:
+    ``keys..., dup_count`` for groups with count > 1 (NULL key parts
+    group together)."""
+    return (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("dup_count"))
+        .filter(F.col("dup_count") > 1)
+    )
 
 
 def duplicate_keys_hashed(
@@ -55,8 +52,8 @@ def duplicate_keys_hashed(
 ) -> DataFrame:
     """Shuffle-lean EXACT duplicate detector for wide/string keys.
 
-    The salted two-phase (``duplicate_keys``) still ships one row per
-    distinct key THROUGH the shuffle carrying the full key tuple — for
+    The plain groupBy (``duplicate_keys``) ships one row per distinct key
+    per mapper THROUGH the shuffle carrying the full key tuple — for
     ``(conv_id string, turn_idx)`` at 10^12 rows that is the pipeline's
     single biggest byte mover. This variant:
 
@@ -94,15 +91,14 @@ def duplicate_keys_hashed(
 def uniqueness_violations(
     df: DataFrame,
     keys: list[str],
-    salt_col: str | Column | None = None,
-    salt_buckets: int = 16,
     broadcast_dups: bool = True,
-    method: str = "salt",
+    method: str = "group",
 ) -> DataFrame:
     """Exploded per-row violation form: every row whose key is duplicated,
     tagged with the reference-style message catalog extension
     ``Duplicate key: (k1=v1, k2=v2) appears N times``.
 
+    ``method="group"`` finds the duplicate set with :func:`duplicate_keys`;
     ``method="hash"`` swaps in :func:`duplicate_keys_hashed` (8-byte-hash
     phase-1 shuffle + exact tail verify) — identical output, the
     shuffle-lean choice for wide string keys at full scale.
@@ -116,13 +112,10 @@ def uniqueness_violations(
     if method == "hash":
         dups = duplicate_keys_hashed(df, keys, broadcast_candidates=broadcast_dups)
     else:
-        dups = duplicate_keys(df, keys, salt_col=salt_col, salt_buckets=salt_buckets)
+        dups = duplicate_keys(df, keys)
     if broadcast_dups:
         dups = F.broadcast(dups)
-    # null-SAFE join-back: a duplicated key containing NULL (e.g. two
-    # rows with conv_id NULL, turn_idx 1) is counted by duplicate_keys
-    # (groupBy keeps the NULL group) but a plain equi-join would drop its
-    # violation rows — <=> keeps them (still a hash-join key in Spark)
+    # null-safe join-back (module docstring); <=> is still a hash-join key
     dups_r = dups.select(
         *[F.col(k).alias(f"__dk_{k}") for k in keys], "dup_count"
     )

@@ -2,11 +2,10 @@
 
 The oracle harness can only verify the EXACT twins (approx sketches are
 not SQL-reproducible), so the sketch paths that actually run at scale —
-``approx_count_distinct`` (checks/stats.py), ``percentile_approx``
-(checks/timegaps.py:gap_quantiles) and the custom TDigest
-(checks/timegaps.py:gap_quantiles_tdigest) — get differential tolerance
-tests here against their exact counterparts on inputs large enough for
-the error statistics to mean something (1M distinct keys / 4M gaps).
+``approx_count_distinct`` (checks/stats.py) and ``percentile_approx``
+(checks/timegaps.py:gap_quantiles) — get differential tolerance tests
+here against their exact counterparts on inputs large enough for the
+error statistics to mean something (1M distinct keys / 4M gaps).
 
 Tolerance constants (documented, not folklore):
 
@@ -21,10 +20,6 @@ Tolerance constants (documented, not folklore):
   near-uniform gap distribution that is ~range * 1e-4 * 2. We assert the
   rank-space guarantee directly: the approx answer must lie between the
   exact values at ranks floor(q*n) ± 2*n/10000.
-- TDigest(delta=200): k1 bound keeps centroid quantile spans under
-  ~4*q(1-q)/delta; we assert the same rank-band as percentile_approx
-  with a 4x wider epsilon (2% of n) — loose, but a real regression
-  (e.g. a broken merge) lands orders of magnitude outside it.
 """
 
 from __future__ import annotations
@@ -33,11 +28,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pacts_spark.checks.stats import column_stats
-from pacts_spark.checks.timegaps import (
-    TDigest,
-    gap_quantiles,
-    gap_quantiles_discrete,
-)
+from pacts_spark.checks.timegaps import gap_quantiles, gap_quantiles_discrete
 
 
 @pytest.fixture(scope="module")
@@ -77,16 +68,10 @@ def test_approx_count_distinct_within_3rsd(spark):
     assert exact == exact_n
 
 
-def _rank_band(sorted_gaps, q, n, eps_ranks):
-    lo = max(0, int(q * n) - eps_ranks)
-    hi = min(n - 1, int(q * n) + eps_ranks)
-    return sorted_gaps[lo], sorted_gaps[hi]
-
-
 @pytest.fixture(scope="module")
 def exact_gap_ranks(spark, gaps_4m):
-    """Exact sorted-gap values at the ranks needed by both approx tests,
-    via the oracled-exact discrete-quantile path + percentile()."""
+    """Exact sorted-gap values at the edges of the percentile_approx rank
+    band, via the oracled-exact discrete-quantile path + percentile()."""
     exact = gap_quantiles_discrete(gaps_4m).collect()[0]
     n = exact["n_gaps"]
     # full exact quantile ladder in SECONDS at fine granularity around the
@@ -98,18 +83,12 @@ def exact_gap_ranks(spark, gaps_4m):
     qs = []
     for q in (0.5, 0.9, 0.99):
         r = int(q * n)
-        qs += [max(0, r - eps) / n, min(n - 1, r + eps) / n, max(0, r - 4 * eps) / n,
-               min(n - 1, r + 4 * eps) / n]
+        qs += [max(0, r - eps) / n, min(n - 1, r + eps) / n]
     arr = ", ".join(f"{x:.8f}" for x in qs)
     vals = gaps.agg(
         F.expr(f"percentile(gap_seconds, array({arr}))").alias("v")
     ).collect()[0]["v"]
-    bands = {}
-    for i, q in enumerate((0.5, 0.9, 0.99)):
-        bands[q] = {
-            "narrow": (vals[4 * i], vals[4 * i + 1]),
-            "wide": (vals[4 * i + 2], vals[4 * i + 3]),
-        }
+    bands = {q: (vals[2 * i], vals[2 * i + 1]) for i, q in enumerate((0.5, 0.9, 0.99))}
     return {"n": n, "bands": bands}
 
 
@@ -118,42 +97,8 @@ def test_percentile_approx_rank_guarantee(spark, gaps_4m, exact_gap_ranks):
     of the exact quantile on ~4M gaps."""
     approx = gap_quantiles(gaps_4m, exact=False).collect()[0]
     for q, col in ((0.5, "p50"), (0.9, "p90"), (0.99, "p99")):
-        lo, hi = exact_gap_ranks["bands"][q]["narrow"]
+        lo, hi = exact_gap_ranks["bands"][q]
         assert lo <= approx[col] <= hi, (
             f"percentile_approx p{int(q*100)}={approx[col]} outside exact "
             f"rank band [{lo}, {hi}] (±2n/1e4 ranks)"
         )
-
-
-def test_tdigest_rank_band(spark, gaps_4m, exact_gap_ranks):
-    """Custom TDigest(delta=200) within the 4x-wide rank band on the same
-    4M gaps, computed through the real applyInPandas path."""
-    from pacts_spark.checks.timegaps import gap_quantiles_tdigest
-
-    td = gap_quantiles_tdigest(gaps_4m, delta=200).collect()[0]
-    for q, col in ((0.5, "p50"), (0.9, "p90"), (0.99, "p99")):
-        lo, hi = exact_gap_ranks["bands"][q]["wide"]
-        assert lo <= td[col] <= hi, (
-            f"TDigest p{int(q*100)}={td[col]} outside wide exact rank band "
-            f"[{lo}, {hi}] (±8n/1e4 ranks)"
-        )
-
-
-def test_tdigest_merge_equals_single_digest_quantiles():
-    """Mergeability: digesting two halves then merging must give the same
-    quantiles (within band) as one digest — the property the 100 TB
-    treeAggregate path relies on. Deterministic inputs."""
-    vals = [((i * 2654435761) % 100_000) / 7.0 for i in range(200_000)]
-    one = TDigest(delta=200)
-    one.add_sorted(sorted(vals))
-    a, b = TDigest(delta=200), TDigest(delta=200)
-    a.add_sorted(sorted(vals[:100_000]))
-    b.add_sorted(sorted(vals[100_000:]))
-    a.merge(b)
-    sv = sorted(vals)
-    n = len(sv)
-    eps = n // 50  # 2% rank band, delta=200 → k1 span ~4q(1-q)/200 ≤ 0.5%
-    for q in (0.5, 0.9, 0.99):
-        lo, hi = sv[max(0, int(q * n) - eps)], sv[min(n - 1, int(q * n) + eps)]
-        assert lo <= one.quantile(q) <= hi
-        assert lo <= a.quantile(q) <= hi

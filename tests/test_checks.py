@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import math
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,6 +20,7 @@ from pacts_spark.checks import (
     uniqueness_violations,
 )
 from pacts_spark.checks.drift import drift_scores_pandas
+from pacts_spark.checks.uniqueness import duplicate_keys_hashed
 from pacts_spark.transcripts import conversations_dim, tools_dim, transcripts_from_events
 
 
@@ -118,28 +120,43 @@ def test_column_stats_empty_input(mixed, exact):
     ).collect() == []
 
 
-def test_duplicate_keys_salted_equals_unsalted(transcripts):
+def _key_counts(df, keys):
+    """Pure-Python reference: multiplicity of every key seen more than
+    once (NULL key parts compare equal, as in a Counter of tuples)."""
+    c = Counter(tuple(r) for r in df.select(*keys).collect())
+    return {k: n for k, n in c.items() if n > 1}
+
+
+def test_duplicate_keys_plain_hashed_and_counter_agree(transcripts):
+    keys = ["conv_id", "turn_idx"]
     plain = {
         (r.conv_id, r.turn_idx): r.dup_count
-        for r in duplicate_keys(transcripts, ["conv_id", "turn_idx"]).collect()
+        for r in duplicate_keys(transcripts, keys).collect()
     }
-    salted = {
+    hashed = {
         (r.conv_id, r.turn_idx): r.dup_count
-        for r in duplicate_keys(
-            transcripts, ["conv_id", "turn_idx"], salt_col="text", salt_buckets=8
-        ).collect()
+        for r in duplicate_keys_hashed(transcripts, keys).collect()
     }
-    assert plain == salted and len(plain) > 0  # event_id%97 injection present
+    assert plain == hashed == _key_counts(transcripts, keys)
+    assert len(plain) > 0  # event_id%97 injection present
 
 
 def test_uniqueness_violation_rows(spark):
     df = spark.createDataFrame(
-        [("c1", 1, "a"), ("c1", 1, "b"), ("c2", 1, "c")],
+        [("c1", 1, "a"), ("c1", 1, "b"), ("c2", 1, "c"),
+         # NULL key parts are one value: (NULL, 2) twice is a duplicate,
+         # (NULL, 3) once is not
+         (None, 2, "d"), (None, 2, "e"), (None, 3, "f")],
         "conv_id string, turn_idx int, text string",
     )
-    out = uniqueness_violations(df, ["conv_id", "turn_idx"], salt_col="text").collect()
-    assert len(out) == 2
-    assert all(r.violation == "Duplicate key: (conv_id=c1, turn_idx=1) appears 2 times" for r in out)
+    for method in ("group", "hash"):
+        out = uniqueness_violations(df, ["conv_id", "turn_idx"], method=method)
+        assert sorted((r.conv_id or "", r.text, r.violation) for r in out.collect()) == [
+            ("", "d", "Duplicate key: (turn_idx=2) appears 2 times"),
+            ("", "e", "Duplicate key: (turn_idx=2) appears 2 times"),
+            ("c1", "a", "Duplicate key: (conv_id=c1, turn_idx=1) appears 2 times"),
+            ("c1", "b", "Duplicate key: (conv_id=c1, turn_idx=1) appears 2 times"),
+        ], method
 
 
 def test_ri_violations(spark, transcripts, events_small):
@@ -242,38 +259,38 @@ def test_gap_quantiles_detects_out_of_order(spark):
     assert q.n_negative_gaps == 1
 
 
-def test_tdigest_quantiles_close_to_exact(spark, transcripts):
-    from pacts_spark.checks.timegaps import TDigest, gap_quantiles_tdigest
+def test_gap_quantile_columns_named_exactly(spark):
+    """Column names carry the exact percent: 0.29 is p29 (not p28), 0.57
+    is p57, 0.999 is p99_9 beside p99 — never two columns of one name;
+    the default names stay p50/p90/p99 (and p50_us.. in the discrete
+    variant)."""
+    from pacts_spark.checks.timegaps import gap_quantiles_discrete
 
-    # unit: digest of 1..1000 approximates true quantiles
-    td = TDigest(delta=200)
-    td.add_sorted(list(range(1, 1001)))
-    assert abs(td.quantile(0.5) - 500) < 25
-    assert abs(td.quantile(0.99) - 990) < 15
-    # mergeability: two halves merged == same ballpark
-    a, b = TDigest(200), TDigest(200)
-    a.add_sorted(list(range(1, 501)))
-    b.add_sorted(list(range(501, 1001)))
-    a.merge(b)
-    assert abs(a.quantile(0.5) - 500) < 30
-    # determinism: same multiset, different split → same centroids
-    c, d = TDigest(200), TDigest(200)
-    c.add_sorted(list(range(1, 1001)))
-    d.add_sorted(list(range(1, 1001)))
-    assert c.means == d.means and c.weights == d.weights
+    df = spark.range(1, 1002).select(
+        F.lit("c").alias("conv_id"),
+        F.col("id").cast("int").alias("turn_idx"),
+        # gap before turn i is i seconds: gaps 2..1001
+        F.timestamp_seconds(F.col("id") * (F.col("id") + 1) / 2).alias("ts"),
+    )
+    q = gap_quantiles(df, quantiles=[0.29, 0.57, 0.99, 0.999], exact=True)
+    assert q.columns[:4] == ["p29", "p57", "p99", "p99_9"]
+    row = q.collect()[0]
+    # 1000 gaps 2..1001; percentile() interpolates at rank q * (n - 1)
+    assert [row.p29, row.p57, row.p99, row.p99_9] == pytest.approx(
+        [2 + q * 999 for q in (0.29, 0.57, 0.99, 0.999)]
+    )
+    assert gap_quantiles(df).columns[:3] == ["p50", "p90", "p99"]
 
-    # end-to-end: per-part digest quantiles track exact percentiles
-    from pacts_spark.checks.timegaps import gap_quantiles
-    from pacts_spark.runner import day_part
+    d = gap_quantiles_discrete(df, quantile_fracs=((29, 100), (99, 100), (999, 1000)))
+    assert d.columns[1:4] == ["p29_us", "p99_us", "p99_9_us"]
+    row = d.collect()[0]
+    assert (row.p29_us, row.p99_us, row.p99_9_us) == (
+        291_000_000, 991_000_000, 1_000_000_000,
+    )
+    assert gap_quantiles_discrete(df).columns[1:4] == ["p50_us", "p90_us", "p99_us"]
 
-    approx = {r.part: r for r in gap_quantiles_tdigest(
-        transcripts, partition_col=day_part()).collect()}
-    exact = {str(r.part): r for r in gap_quantiles(
-        transcripts, partition_col=day_part(), exact=True).collect()}
-    assert set(approx) == set(exact)
-    for part, e in exact.items():
-        spread = max(abs(e.max_gap), 1.0)
-        assert abs(approx[part].p50 - e.p50) <= 0.2 * spread
+    with pytest.raises(ValueError, match="duplicate"):
+        gap_quantiles(df, quantiles=[0.5, 0.50])
 
 
 def test_uniqueness_no_broadcast_mass_duplicates(spark):
@@ -295,14 +312,14 @@ def test_whale_conversation_window_checks(spark):
     """Skew evidence for the WINDOW paths (north_star: 'skew from long
     conversations'): one 2M-turn conversation — a single fat window
     partition for the lag/rank computations — plus a normal one. The
-    whale must flow through gap quantiles and salted uniqueness with
-    exact results (lag is a single streaming pass per partition; the
-    salted two-phase agg spreads the hot (conv_id, turn_idx) duplicate
-    key). Closed-form input: every whale gap is exactly 1s."""
+    whale must flow through gap quantiles and both uniqueness paths with
+    exact results (lag is a single streaming pass per partition; map-side
+    partial aggregation collapses the whale's hot (conv_id, turn_idx)
+    duplicate key before the exchange). Closed-form input: every whale
+    gap is exactly 1s."""
     from pyspark.sql import functions as F
 
     from pacts_spark.checks.timegaps import gap_quantiles_discrete
-    from pacts_spark.checks.uniqueness import duplicate_keys
 
     n = 2_000_000
     whale = spark.range(n).select(
@@ -333,20 +350,19 @@ def test_whale_conversation_window_checks(spark):
             F.timestamp_micros(F.lit(7_000_000) + F.col("id")).alias("ts"),
         )
     )
-    d = duplicate_keys(dup, ["conv_id", "turn_idx"], salt_col="ts").collect()
-    assert len(d) == 1
-    assert d[0]["conv_id"] == "whale" and d[0]["turn_idx"] == 7
-    assert d[0]["dup_count"] == 4
+    for d in (
+        duplicate_keys(dup, ["conv_id", "turn_idx"]).collect(),
+        duplicate_keys_hashed(dup, ["conv_id", "turn_idx"]).collect(),
+    ):
+        assert len(d) == 1
+        assert d[0]["conv_id"] == "whale" and d[0]["turn_idx"] == 7
+        assert d[0]["dup_count"] == 4
 
 
-def test_duplicate_keys_hashed_equals_salted(spark):
+def test_duplicate_keys_hashed_equals_plain(spark):
     """duplicate_keys_hashed (8-byte-hash shuffle + exact tail verify)
-    must return exactly the salted two-phase result, including under
-    hot-key mass duplication."""
-    from pyspark.sql import functions as F
-
-    from pacts_spark.checks.uniqueness import duplicate_keys, duplicate_keys_hashed
-
+    must return exactly the plain groupBy's result and a pure-Python
+    Counter's, including under a 5,000-fold hot key."""
     df = spark.range(200_000).select(
         F.concat(F.lit("conv-"), (F.col("id") % 40_000)).alias("conv_id"),
         # ids 0..39999 five-fold -> turn collisions by construction, plus a
@@ -359,13 +375,15 @@ def test_duplicate_keys_hashed_equals_salted(spark):
     t = df.unionByName(hot)
     a = {
         (r.conv_id, r.turn_idx): r.dup_count
-        for r in duplicate_keys(t, ["conv_id", "turn_idx"], salt_col="conv_id").collect()
+        for r in duplicate_keys(t, ["conv_id", "turn_idx"]).collect()
     }
     b = {
         (r.conv_id, r.turn_idx): r.dup_count
         for r in duplicate_keys_hashed(t, ["conv_id", "turn_idx"]).collect()
     }
-    assert a == b and len(a) > 0
+    counter = Counter((f"conv-{i % 40_000}", i % 13) for i in range(200_000))
+    counter[("conv-7", 7)] += 5_000
+    assert a == b == {k: n for k, n in counter.items() if n > 1} and len(a) > 0
     assert a[("conv-7", 7)] >= 5_000
 
 

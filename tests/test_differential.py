@@ -93,10 +93,14 @@ def test_generator_relational_differential(spark, engine, registry):
         assert list(r.errors) == expect.errors
 
 
-def test_generator_skew_and_salting(spark):
-    """SURVEY.md §5.2(5): whale conversation does not break salted
-    uniqueness — salted and unsalted duplicate sets agree on skewed data."""
+def test_generator_skew_uniqueness(spark):
+    """SURVEY.md §5.2(5): a whale conversation does not break uniqueness —
+    the plain groupBy, the hashed path and a pure-Python Counter agree on
+    the duplicate set of skewed data."""
+    from collections import Counter
+
     from pacts_spark.checks import duplicate_keys
+    from pacts_spark.checks.uniqueness import duplicate_keys_hashed
 
     t = generate_transcripts(
         spark, n_convs=50, mean_turns=10, seed=11, skew_frac=0.5, dup_rate=0.05
@@ -106,15 +110,16 @@ def test_generator_skew_and_salting(spark):
     total = t.count()
     assert top["count"] / total > 0.3  # the whale is real
 
+    keys = ["conv_id", "turn_idx"]
     plain = {
         (r.conv_id, r.turn_idx): r.dup_count
-        for r in duplicate_keys(t, ["conv_id", "turn_idx"]).collect()
+        for r in duplicate_keys(t, keys).collect()
     }
-    salted = {
+    hashed = {
         (r.conv_id, r.turn_idx): r.dup_count
-        for r in duplicate_keys(
-            t, ["conv_id", "turn_idx"], salt_col="text", salt_buckets=32
-        ).collect()
+        for r in duplicate_keys_hashed(t, keys).collect()
     }
-    assert plain == salted and len(plain) > 0
+    counter = Counter(tuple(r) for r in t.select(*keys).collect())
+    assert plain == hashed == {k: n for k, n in counter.items() if n > 1}
+    assert len(plain) > 0
     t.unpersist()

@@ -4,7 +4,7 @@ share one template text (hot dedup/minhash cluster), ~20% of embeddings
 are one identical vector (hot LSH bucket / semantic cluster). Values
 stay engine-agnostic, so every oracle twin must still match — this
 exercises the SKEW-tolerance claims (per-key sequential recurrences,
-salted uniqueness, banded near-dup candidate volume, hot-bucket caps)
+hot-key uniqueness, banded near-dup candidate volume, hot-bucket caps)
 on data shaped like the adversarial 100 TB case.
 Usage: python tools/make_skew_fixture.py [src] [dst]
 """

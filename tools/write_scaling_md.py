@@ -35,7 +35,7 @@ validation pipeline at two local parallelism levels on the same input and
 reporting throughput at both.
 
 **Pipeline measured**: the full ValidationRun over the transcripts table —
-fused row-schema-check projection, salted uniqueness on (conv_id,
+fused row-schema-check projection, hash-first uniqueness on (conv_id,
 turn_idx), broadcast anti-join referential checks (conversations, tools),
 exploded violation rows under stable (conv_id, turn_idx) ordering, and
 per-day-partition verdicts.
