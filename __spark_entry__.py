@@ -35,7 +35,6 @@ from pacts_spark.checks import (
     duplicate_keys,
     gap_quantiles_discrete,
     ri_violations,
-    uniqueness_violations,
 )
 from pacts_spark.datapipe.dedup import (
     exact_duplicate_pairs,
@@ -53,7 +52,7 @@ from pacts_spark.datapipe.similarity import (
 from pacts_spark.datapipe.textstats import doc_fingerprint, language_id, text_stats
 from pacts_spark.engine import PactsEngine
 from pacts_spark.registry import SchemaRegistry
-from pacts_spark.runner import ValidationRun, day_part
+from pacts_spark.runner import RunResult, ValidationRun, day_part
 from pacts_spark.transcripts import (
     conversations_dim,
     tools_dim,
@@ -165,6 +164,20 @@ def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return transcripts_from_events(_load(spark, sf_dir, "events"))
 
 
+def _run(spark: SparkSession, sf_dir: str) -> RunResult:
+    """``ValidationRun.run`` over the derived transcripts and dimensions:
+    the one source of the violations and verdicts entry/queries return."""
+    events = _load(spark, sf_dir, "events")
+    # persist: the check branches fan out from the derived (windowed)
+    # transcripts and Spark does NOT reuse the window exchange across
+    # union branches (measured 6 scans + 6 windows, 5.5s -> 1.3s with the
+    # cache at sf0.001). A materialized table is cheaper re-read (CLAUDE.md).
+    t = transcripts_from_events(events).persist()
+    return ValidationRun(_engine()).run(
+        spark, t, conversations=conversations_dim(events), tools=tools_dim(spark)
+    )
+
+
 # ---------------------------------------------------------------------------
 # entry: flagship pipeline at sf0.001
 # ---------------------------------------------------------------------------
@@ -175,13 +188,7 @@ def entry(spark: SparkSession) -> DataFrame:
     row-level schema checks + uniqueness + referential integrity, returning
     the exploded violations table under stable (conv_id, turn_idx) order."""
     sf_dir = "/root/testdata/sf0.001"
-    events = _load(spark, sf_dir, "events")
-    # persist: derived fixture input (see _q_transcript_violations)
-    t = transcripts_from_events(events).persist()
-    res = ValidationRun(_engine()).run(
-        spark, t, conversations=conversations_dim(events), tools=tools_dim(spark)
-    )
-    return res.violations
+    return _run(spark, sf_dir).violations
 
 
 # ---------------------------------------------------------------------------
@@ -222,34 +229,8 @@ def _q_validate_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_transcript_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _load(spark, sf_dir, "events")
-    # persist: four check branches fan out from the derived (windowed)
-    # transcripts and Spark does NOT reuse the window exchange across
-    # union branches (measured 6 scans + 6 windows, 5.5s -> 1.3s with the
-    # cache at sf0.001). Applies to the DERIVED fixture input only — a
-    # materialized table scan is cheaper re-read than cached (CLAUDE.md).
-    t = transcripts_from_events(events).persist()
-    eng = _engine()
-    validated = eng.validate_data(t, "transcripts", "turn")
-    row_viol = (
-        validated.filter(F.size("errors") > 0)
-        .select("conv_id", "turn_idx", F.explode("errors").alias("violation"))
-        .withColumn("check_name", F.lit("schema"))
-    )
-    uniq = uniqueness_violations(t, ["conv_id", "turn_idx"], salt_col="text").select(
-        "conv_id", "turn_idx", F.lit("uniqueness").alias("check_name"), "violation"
-    )
-    ri_conv = ri_violations(t, conversations_dim(events), "conv_id").select(
-        "conv_id", "turn_idx", F.lit("referential_conv").alias("check_name"), "violation"
-    )
-    ri_tool = ri_violations(t, tools_dim(spark), "tool").select(
-        "conv_id", "turn_idx", F.lit("referential_tool").alias("check_name"), "violation"
-    )
-    return (
-        row_viol.select("conv_id", "turn_idx", "check_name", "violation")
-        .unionByName(uniq)
-        .unionByName(ri_conv)
-        .unionByName(ri_tool)
+    return _run(spark, sf_dir).violations.select(
+        "conv_id", "turn_idx", F.col("check").alias("check_name"), "violation"
     )
 
 
@@ -293,13 +274,7 @@ FROM t WHERE tool IS NOT NULL AND tool NOT IN {TOOLS_IN}
 
 
 def _q_partition_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _load(spark, sf_dir, "events")
-    # persist: derived input + branch fan-out (see _q_transcript_violations)
-    t = transcripts_from_events(events).persist()
-    res = ValidationRun(_engine()).run(
-        spark, t, conversations=conversations_dim(events), tools=tools_dim(spark)
-    )
-    return res.verdicts
+    return _run(spark, sf_dir).verdicts
 
 
 _VERDICTS_SQL = f"""
@@ -620,7 +595,7 @@ FROM e
 
 def _q_uniqueness_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _load(spark, sf_dir, "lineitem")
-    return duplicate_keys(li, ["l_orderkey", "l_linenumber"], salt_col="l_partkey")
+    return duplicate_keys(li, ["l_orderkey", "l_linenumber"])
 
 
 _UNIQ_LINEITEM_SQL = """

@@ -3,7 +3,9 @@
 Replaces the reference's interpreted per-envelope tree-walk
 (Validator.java:191-201; validator.rs:109-117) with a compile-once plan:
 the schema dict is turned into an ORDERED list of ``(violation_condition:
-Column, message: str)`` pairs, then fused into ONE projection::
+Column, message: str)`` pairs, then fused into ONE projection
+(``errors_column`` here, the rest in ``engine._finalize``, which every
+mode ends in)::
 
     errors        = array_compact(array(when(cond_i, lit(msg_i)) ...))
     valid         = size(errors) == 0
@@ -26,11 +28,14 @@ Two modes:
   ``isNotNull()``.
 
 - **json** (schema-on-read path): the payload is a JSON-string column;
-  checks run in ONE vectorized pandas UDF (Arrow batches, no per-row Python
-  UDF registration) that applies the same oracle semantics per batch —
-  preserving the absent-vs-explicit-null distinction the reference has
-  (``has()`` passes required for explicit null, Validator.java:123, but a
-  non-null type check then fails — SURVEY.md §7(b)).
+  checks run in a vectorized pandas UDF (Arrow batches, no per-row Python
+  UDF registration) — ``json_mode_validator`` for one schema,
+  ``json_mode_dispatch_validator`` for envelopes of mixed coordinates.
+  Both apply ONE row function, ``_json_payload_errors``, which carries the
+  oracle semantics and the absent-vs-explicit-null distinction the
+  reference has (``has()`` passes required for explicit null,
+  Validator.java:123, but a non-null type check then fails — SURVEY.md
+  §7(b)).
 
 Engine extensions beyond the reference's 3-check subset (mandated by
 BASELINE.json north_star, NOT present in Pacts): per-property ``enum``
@@ -40,10 +45,11 @@ regex probe). Their error strings are engine-defined.
 
 from __future__ import annotations
 
+import json
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -237,123 +243,63 @@ def errors_column(checks: list[tuple[Column, str]]) -> Column:
     return F.array_compact(F.array(*slots))
 
 
-def attach_validation(
-    df: DataFrame,
-    checks: list[tuple[Column, str]],
-    errors_col: str = "errors",
-    valid_col: str = "valid",
-    message_col: str = "error_message",
-) -> DataFrame:
-    """Single fused projection adding errors/valid/error_message columns.
-
-    One table scan, no shuffle; the whole check list runs inside one
-    whole-stage-codegen span (SURVEY.md §4.2(b) single-pass check fusion).
-    """
-    df = df.withColumn(errors_col, errors_column(checks))
-    df = df.withColumn(valid_col, F.size(errors_col) == F.lit(0))
-    df = df.withColumn(
-        message_col,
-        F.when(F.col(valid_col), F.lit(E.VALIDATION_SUCCESSFUL)).otherwise(
-            F.array_join(errors_col, E.ERROR_JOINER)
-        ),
-    )
-    return df
+def _json_payload_errors(raw: str | None, schema: dict) -> list[str]:
+    """Errors of ONE JSON-string payload — the per-row semantics of both
+    JSON-mode UDFs. A NULL payload validates as JSON ``null`` (required
+    fields missing + top-level type check); malformed JSON gets the
+    reference catch-all ``Validation error: {msg}`` (Validator.java:76-78);
+    anything else goes to ``oracle.validate_data``, which keeps the
+    absent-vs-explicit-null distinction (``has()``, Validator.java:123)."""
+    if raw is None:
+        return oracle.validate_data(None, schema).errors
+    try:
+        data = json.loads(raw)
+    except Exception as exc:  # noqa: BLE001
+        return [E.validation_error(str(exc))]
+    return oracle.validate_data(data, schema).errors
 
 
 def json_mode_validator(schema: dict):
     """Compile a pact schema into ONE vectorized pandas UDF for JSON-string
-    payload columns: ``errors = udf(json_col)`` returning ``array<string>``.
-
-    Arrow-batched (Series → Series); preserves absent-vs-explicit-null
-    (oracle.validate_data implements ``has()`` semantics,
-    Validator.java:123). Malformed JSON → reference catch-all
-    ``Validation error: {msg}`` (Validator.java:76-78).
+    payload columns: ``errors = udf(json_col)`` returning ``array<string>``,
+    Arrow-batched (Series → Series), :func:`_json_payload_errors` per row.
     """
-    import json as _json
 
     @pandas_udf(T.ArrayType(T.StringType()))
     def _validate(s: pd.Series) -> pd.Series:
-        out = []
-        for raw in s:
-            if raw is None:
-                # JSON null payload: required fields missing + type check
-                out.append(oracle.validate_data(None, schema).errors)
-                continue
-            try:
-                data = _json.loads(raw)
-            except Exception as exc:  # noqa: BLE001
-                out.append([E.validation_error(str(exc))])
-                continue
-            out.append(oracle.validate_data(data, schema).errors)
-        return pd.Series(out)
+        return pd.Series([_json_payload_errors(raw, schema) for raw in s])
 
     return _validate
 
 
-def json_mode_dispatch_validator(schemas: dict[str, dict], spark=None):
+def json_mode_dispatch_validator(schemas: dict[str, dict], spark):
     """ONE vectorized pandas UDF for mixed-coordinate envelope validation:
-    ``errors = udf(category, name, data_json)``.
-
-    Replaces the per-schema CASE fan-out (round-2 engine.py:120-131):
-    Catalyst extracts Python UDFs out of CASE expressions and evaluates
-    every branch UNCONDITIONALLY (one ArrowEvalPython per UDF), so S
-    registered schemas cost S Arrow passes per row with S-1 results
-    discarded. Here the per-row (category, name) dispatch happens INSIDE
-    one UDF against a broadcast ``{category/name: schema}`` dict — one
-    Arrow pass regardless of registry size (VERDICT r2 item 1).
+    ``errors = udf(category, name, data_json)``. The per-row (category,
+    name) dispatch happens INSIDE the UDF against a broadcast
+    ``{category/name: schema}`` dict — one Arrow pass regardless of
+    registry size, where a CASE of per-schema UDFs would cost one pass
+    per schema (Catalyst evaluates every branch's Python UDF).
 
     Unknown coordinates get the validator-level 2-part string
-    ``Schema not found: {category}/{name}`` (Validator.java:68); payload
-    semantics are identical to :func:`json_mode_validator` (same
-    oracle.validate_data per row, same malformed-JSON catch-all).
+    ``Schema not found: {category}/{name}`` (Validator.java:68); known
+    ones get :func:`_json_payload_errors`, as in :func:`json_mode_validator`.
     """
-    import json as _json
-
     # ship the registry once per executor, not once per task closure
-    bc = spark.sparkContext.broadcast(dict(schemas)) if spark is not None else None
-    local = dict(schemas) if bc is None else None
+    bc = spark.sparkContext.broadcast(dict(schemas))
 
     @pandas_udf(T.ArrayType(T.StringType()))
     def _validate(cat: pd.Series, nam: pd.Series, data: pd.Series) -> pd.Series:
-        table = bc.value if bc is not None else local
+        table = bc.value
         out = []
         for c, n, raw in zip(cat, nam, data):
             schema = table.get(f"{c}/{n}")
             if schema is None:
                 out.append([E.schema_not_found(c, n)])
-                continue
-            if raw is None:
-                out.append(oracle.validate_data(None, schema).errors)
-                continue
-            try:
-                d = _json.loads(raw)
-            except Exception as exc:  # noqa: BLE001
-                out.append([E.validation_error(str(exc))])
-                continue
-            out.append(oracle.validate_data(d, schema).errors)
+            else:
+                out.append(_json_payload_errors(raw, schema))
         return pd.Series(out)
 
     return _validate
-
-
-def attach_validation_json(
-    df: DataFrame,
-    schema: dict,
-    json_col: str,
-    errors_col: str = "errors",
-    valid_col: str = "valid",
-    message_col: str = "error_message",
-) -> DataFrame:
-    """JSON-mode twin of :func:`attach_validation`."""
-    df = df.withColumn(errors_col, json_mode_validator(schema)(F.col(json_col)))
-    df = df.withColumn(valid_col, F.size(errors_col) == F.lit(0))
-    df = df.withColumn(
-        message_col,
-        F.when(F.col(valid_col), F.lit(E.VALIDATION_SUCCESSFUL)).otherwise(
-            F.array_join(errors_col, E.ERROR_JOINER)
-        ),
-    )
-    return df
 
 
 def payload_as_json(row: dict[str, Any]) -> dict[str, Any]:

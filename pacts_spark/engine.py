@@ -9,7 +9,7 @@ Mirrors PactsService (PactsService.java:18-169; rust/src/impl/service.rs:7-102):
 - ``validate_envelopes(df)``             ≙ Validator.validate
   (Validator.java:39-81): header presence checks → per-coordinate schema
   dispatch → data validation; supports MIXED coordinates in one DataFrame
-  via a compiled CASE over the registry's known (category, name) pairs.
+  via one dispatching pandas UDF over a broadcast schema dict.
 - ``send_validated(df, ...)``            ≙ PactsService.sendValidatedData
   (PactsService.java:106-122): gate — valid rows reach the sink, any
   violation raises ``ValidationException("Validation failed: ...")``.
@@ -32,11 +32,10 @@ from pyspark.sql import functions as F
 
 from pacts_spark import errors as E
 from pacts_spark.compiler import (
-    attach_validation,
-    attach_validation_json,
     compile_relational,
     errors_column,
     json_mode_dispatch_validator,
+    json_mode_validator,
 )
 from pacts_spark.registry import SchemaRegistry
 
@@ -46,6 +45,8 @@ class ValidationException(Exception):
 
 
 def _finalize(df: DataFrame, errors: Column) -> DataFrame:
+    """The one projection every validation path ends in: ``errors``, then
+    ``valid`` and ``error_message`` from it (ValidationResult.java:71-77)."""
     df = df.withColumn("errors", errors)
     df = df.withColumn("valid", F.size("errors") == F.lit(0))
     return df.withColumn(
@@ -84,9 +85,8 @@ class PactsEngine:
             )
             return _finalize(df, F.array(F.lit(msg)))
         if json_col is not None:
-            return attach_validation_json(df, schema, json_col)
-        checks = compile_relational(schema, df.schema)
-        return attach_validation(df, checks)
+            return _finalize(df, json_mode_validator(schema)(F.col(json_col)))
+        return _finalize(df, errors_column(compile_relational(schema, df.schema)))
 
     def validate_envelopes(self, df: DataFrame) -> DataFrame:
         """Full Validator.validate lifecycle (Validator.java:39-81) over an

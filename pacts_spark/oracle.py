@@ -33,9 +33,6 @@ from typing import Any
 
 from pacts_spark import errors as E
 
-MISSING = object()  # sentinel distinguishing "absent key" from explicit null
-
-
 @dataclass
 class ValidationResult:
     """Mirror of ValidationResult.java:8-77 / validator.rs:6-56."""

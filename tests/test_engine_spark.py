@@ -92,6 +92,32 @@ def test_json_mode_malformed_json(spark, engine):
     assert len(row.errors) == 1 and row.errors[0].startswith("Validation error: ")
 
 
+def test_json_mode_null_payload_both_udfs(spark, engine, registry):
+    """A NULL payload validates as JSON null in BOTH JSON-mode UDFs —
+    validate_data(json_col=...) and validate_envelopes with data NULL —
+    and equals the oracle's verdict on None (required fields missing +
+    top-level type), not a parse error."""
+    schema = registry.load_schema("inventory", "inventory_item")
+    expect = oracle.validate_data(None, schema)
+    assert expect.errors  # the schema has required fields and type object
+
+    df = spark.createDataFrame([(None,)], "data string")
+    row = engine.validate_data(
+        df, "inventory", "inventory_item", json_col="data"
+    ).collect()[0]
+    assert list(row.errors) == expect.errors
+    assert row.error_message == expect.error_message and not row.valid
+
+    env = spark.createDataFrame(
+        [(("v1", "inventory", "inventory_item", None, None), None)],
+        "header struct<schema_version:string,schema_category:string,"
+        "schema_name:string,timestamp:string,content_type:string>, data string",
+    )
+    row = engine.validate_envelopes(env).collect()[0]
+    assert list(row.errors) == expect.errors
+    assert row.error_message == expect.error_message and not row.valid
+
+
 def test_envelope_lifecycle(spark, engine):
     rows = [
         # valid envelope
