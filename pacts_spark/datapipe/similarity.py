@@ -157,16 +157,6 @@ def _dot(a, b):
     )
 
 
-def _norm(a):
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
 def _chunked_union(
     queries: DataFrame,
     candidates: DataFrame,

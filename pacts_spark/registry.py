@@ -50,10 +50,16 @@ def default_fetch(
     ``read_timeout`` per chunk loop is the fallback guard. ``max_bytes``
     caps the TOTAL body (a drip-feeding server defeats per-read
     timeouts; without a size bound it grows driver memory forever —
-    review finding)."""
+    review finding). Only ``http``/``https`` URLs are fetched: any other
+    scheme (``file:``, ``ftp:``, ...) raises ``ValueError`` before anything
+    is opened, so a schema-bundle URL cannot read local files."""
     import time
+    import urllib.parse
     import urllib.request
 
+    scheme = urllib.parse.urlsplit(url).scheme.lower()
+    if scheme not in ("http", "https"):
+        raise ValueError(f"refusing to fetch {url!r}: scheme must be http or https")
     req = urllib.request.Request(url, headers={"User-Agent": "pacts-spark"})
     chunks: list[bytes] = []
     total = 0

@@ -241,6 +241,30 @@ def test_default_fetch_read_deadline(tmp_path):
         srv.server_close()
 
 
+def test_default_fetch_rejects_non_http_schemes(tmp_path):
+    """Only http(s) is fetched: a file:// URL must raise before anything
+    is opened, not return the local file's bytes (nor may a remote
+    source list read them through load_remote_sources)."""
+    import io
+    import zipfile
+
+    import pytest
+
+    from pacts_spark.registry import SchemaRegistry, default_fetch
+
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        zf.writestr("bees/v1/transcripts/local.json", '{"type": "object"}')
+    secret = tmp_path / "secret.zip"
+    secret.write_bytes(buf.getvalue())
+    for url in (secret.as_uri(), f"FILE://{secret}", "ftp://127.0.0.1/x.zip",
+                str(secret)):
+        with pytest.raises(ValueError, match="http or https"):
+            default_fetch(url)
+    reg = SchemaRegistry(domain="bees", version="v1", schema_root=tmp_path)
+    assert reg.load_remote_sources([secret.as_uri()]) == 0
+
+
 def test_load_zip_is_atomic_on_mid_archive_failure(tmp_path):
     """Regression: a bundle failing mid-archive (malformed entry after
     valid ones) must leave the registry untouched — partial commits
