@@ -171,7 +171,7 @@ def _run(spark: SparkSession, sf_dir: str) -> RunResult:
     # persist: the check branches fan out from the derived (windowed)
     # transcripts and Spark does NOT reuse the window exchange across
     # union branches (measured 6 scans + 6 windows, 5.5s -> 1.3s with the
-    # cache at sf0.001). A materialized table is cheaper re-read (CLAUDE.md).
+    # cache at sf0.001). A materialized table is cheaper re-read than cached.
     t = transcripts_from_events(events).persist()
     return ValidationRun(_engine()).run(
         spark, t, conversations=conversations_dim(events), tools=tools_dim(spark)

@@ -120,13 +120,6 @@ def test_column_stats_empty_input(mixed, exact):
     ).collect() == []
 
 
-def _key_counts(df, keys):
-    """Pure-Python reference: multiplicity of every key seen more than
-    once (NULL key parts compare equal, as in a Counter of tuples)."""
-    c = Counter(tuple(r) for r in df.select(*keys).collect())
-    return {k: n for k, n in c.items() if n > 1}
-
-
 def test_duplicate_keys_plain_hashed_and_counter_agree(transcripts):
     keys = ["conv_id", "turn_idx"]
     plain = {
@@ -137,7 +130,9 @@ def test_duplicate_keys_plain_hashed_and_counter_agree(transcripts):
         (r.conv_id, r.turn_idx): r.dup_count
         for r in duplicate_keys_hashed(transcripts, keys).collect()
     }
-    assert plain == hashed == _key_counts(transcripts, keys)
+    # pure-Python reference: NULL key parts compare equal in a tuple Counter
+    counter = Counter(tuple(r) for r in transcripts.select(*keys).collect())
+    assert plain == hashed == {k: n for k, n in counter.items() if n > 1}
     assert len(plain) > 0  # event_id%97 injection present
 
 
