@@ -1574,7 +1574,7 @@ def _q_embedding_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     decontamination_documents (paraphrased leakage that n-gram overlap
     misses). First oracled consumer of cosine_topk's cross-frame
     ``candidates`` path (queries and candidates are DIFFERENT frames —
-    the grid replicates eval rows across candidate chunks; exact, not
+    eval rows are the grid's queries, train rows its candidates; exact, not
     LSH, because the eval set is the small side by construction)."""
     emb = _load(spark, sf_dir, "embeddings")
     ev = emb.filter(F.col("vec_id") % 10 == 0)

@@ -374,7 +374,7 @@ def lsh_candidate_pairs(
     pairs barely above threshold inside template clusters. The bucket
     sizing is a single window count over the SAME (band, bucket) keys
     the self-join shuffles on — routing and pairing ride one exchange,
-    exactly the `_lsh_grid` hot-bucket pattern (similarity.py)."""
+    the sizing pattern of the vector grid router (similarity._block_grid)."""
     assert bands * rows_per_band <= 1024
     band_ids = F.sequence(F.lit(0), F.lit(bands - 1))
     banded = signatures.select(

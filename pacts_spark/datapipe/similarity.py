@@ -1,30 +1,53 @@
 """Similarity search over an embedding column (array<float>).
 
-- :func:`cosine_topk` / :func:`cosine_pairs` — EXACT brute force, but
-  distributed as a GRID block-nested-loop: the (query x candidate)
-  plane is tiled into ``n_query_chunks x n_chunks`` hash blocks, and
-  each block group does ONE BLAS matmul inside applyInPandas. No
-  driver-side collect anywhere; BOTH sides of a block are bounded
-  (|C|/n_chunks candidates AND |Q|/n_query_chunks queries per task), so
-  executor memory is controlled by choosing each chunk count ~
-  side_bytes / executor_mem at scale. Shuffle volume = candidates x
-  n_query_chunks + queries x n_chunks. Partial top-k per block, global
-  top-k via a window — exact results, O(N^2) compute spread over the
-  cluster.
+Every kernel here is a block-nested-loop over ONE grid router,
+:func:`_block_grid`, scored by ONE block scorer per output shape:
+:func:`_block_topk` (per-query partial top-k) and :func:`_score_pairs`
+(thresholded id_a < id_b pairs); :func:`pq_topk` keeps its integer ADC
+scorer on the same router. Each block is one BLAS matmul inside
+applyInPandas.
 
-- :func:`ivf_topk` — IVF cells: shuffle once on the cell id, dense
-  matmul per cell; the sub-quadratic ANN shape.
+The router takes rows ``(keys…, id, v, side)``, side ``q`` (query),
+``c`` (candidate) or ``b`` (both), and tiles every key group into
+``n_sub x n_sub`` blocks with ``n_sub = ceil(size / BLOCK_ROWS)``:
+
+- a cold group (n_sub = 1) is one ``(0, 0)`` block and each row keeps
+  its side — a ``b`` row ships once;
+- in a hot group a ``q`` row goes to its hash row in every column, a
+  ``c`` row to every row at its hash column, and a ``b`` row does both,
+  so every (query, candidate) pair meets in exactly one block and a
+  block holds ~2·BLOCK_ROWS rows whatever the corpus size or skew.
+
+``size`` always comes from the data, never from a caller's knob. The
+keyed grids (IVF cell, LSH band bucket, ivf_topk's ``block_col``) count
+their group with a window whose hash partitioning the scoring groupBy
+extends, so sizing and scoring ride one exchange. The unkeyed exact
+grid (cosine_topk, cosine_pairs, pq_topk) cross-joins a broadcast
+one-row count onto the rows (a BroadcastNestedLoopJoin, never a
+CartesianProduct), so plan build stays action-free when ``dim`` is
+passed. Top-k partials merge in a global window — exact, because the
+global top-k is a subset of the union of per-block top-ks.
+
+- :func:`cosine_topk` / :func:`cosine_pairs` — EXACT brute force on the
+  unkeyed grid: O(N²) compute spread over (N / BLOCK_ROWS)² tasks, no
+  driver-side collect.
+
+- :func:`ivf_topk` — exact top-k within caller-provided cells.
 
 - :func:`ivf_quantized_topk` — the full FAISS-IVF shape: deterministic
   hash-ranked seed centroids (distributed top-K, n_cells rows to the
   driver), broadcast centroid matrix, one mapInPandas assignment pass
-  (argmax cell as candidate, top-nprobe cells as query), cell-local
-  scoring. SQL-reproducible end to end.
+  (argmax cell as candidate, top-nprobe cells as query), cell-keyed
+  grid. SQL-reproducible end to end.
 
-- :func:`lsh_cosine_near_pairs` — sub-quadratic near-duplicate PAIRS
-  (the scale path where exact :func:`cosine_pairs` cannot run): same
-  band-bucket routing as lsh_ann_topk, thresholded exact in-bucket
-  cosine, id_a < id_b orientation + cross-band dedup.
+- :func:`lsh_ann_topk` / :func:`lsh_cosine_near_pairs` — random-hyperplane
+  LSH (signed projections → bit signature → band buckets): vectors ride
+  the band explode once (shuffle = bands x corpus, a predictable bound)
+  into the (band, bucket)-keyed grid — candidate pairs never materialize
+  with vectors attached. Hyperplanes come from a seeded RNG on the
+  driver and ship as literals — deterministic, no RNG on executors.
+
+- :func:`pq_topk` — product quantization: candidates ship as codes.
 
 Rank determinism note: the top-k operators ORDER by raw double sims
 (id tie-break applies only on exact equality), so two candidates that
@@ -36,27 +59,20 @@ from the threshold itself to the far rarer x.xxxxx5 rounding boundary
 (shrinks, not eliminates, the exposure). For rank-critical or
 boundary-critical workloads use the integer-exact operators (pq_topk,
 kmeans_assign), which have no float anywhere.
-
-- :func:`lsh_ann_topk` — random-hyperplane LSH (signed projections →
-  bit signature → band buckets) with BUCKET-LOCAL scoring: vectors
-  ride the band explode once (shuffle = bands x corpus, a predictable
-  bound) into a groupBy(band, bucket) dense matmul emitting per-query
-  partial top-k — candidate pairs never materialize with vectors
-  attached. Buckets above ``max_bucket`` rows are split into a
-  sub-grid (the cosine_topk tiling) so a skewed signature never
-  becomes one O(bucket²) task. Hyperplanes come from a seeded RNG on
-  the driver and ship as literals — deterministic, no RNG on executors.
 """
 
 from __future__ import annotations
 
 import random
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
 VECTOR_MAX_ABS = 100.0  # element bound shared with vector_column_stats
+BLOCK_ROWS = 4096  # grid router: rows per block side (module docstring)
 
 
 def healthy_element(x, max_abs: float = VECTOR_MAX_ABS):
@@ -141,8 +157,6 @@ def _safe_rows(M):
     list_cosine_similarity convention (-1.0) — below any negative-sim
     candidate rather than between signs. Filter zero vectors upstream
     when the corpus can contain them."""
-    import numpy as np
-
     n = np.linalg.norm(M, axis=1, keepdims=True)
     return M / np.where(n == 0.0, 1.0, n)
 
@@ -157,41 +171,150 @@ def _dot(a, b):
     )
 
 
-def _chunked_union(
-    queries: DataFrame,
-    candidates: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_chunks: int,
-    n_query_chunks: int = 1,
+def _sides(
+    df: DataFrame, id_col: str, vec_col: str, side: str, *keys: str
 ) -> DataFrame:
-    """Union frame for the GRID block-nested-loop: the (query x candidate)
-    plane is tiled into ``n_query_chunks x n_chunks`` blocks. A candidate
-    hashes into ONE c-chunk and replicates across q-chunks; a query hashes
-    into ONE q-chunk and replicates across c-chunks; the group key is
-    ``q_chunk * n_chunks + c_chunk``. Every (query, candidate) pair meets
-    in exactly one block, and each block holds ~|C|/n_chunks candidates
-    AND ~|Q|/n_query_chunks queries — both sides of the per-task matmul
-    are bounded (n_query_chunks=1 keeps the query side whole, fine when
-    the query set is small; raise it when queries ARE the corpus)."""
-    cand = candidates.select(
-        F.explode(F.sequence(F.lit(0), F.lit(n_query_chunks - 1))).alias("qc"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_chunks)).cast("int").alias("cc"),
+    """Grid router input rows ``(keys…, id, v, side)``."""
+    return df.select(
+        *keys,
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
-        F.lit("c").alias("side"),
+        F.lit(side).alias("side"),
     )
-    qry = queries.select(
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_query_chunks))
-        .cast("int")
-        .alias("qc"),
-        F.explode(F.sequence(F.lit(0), F.lit(n_chunks - 1))).alias("cc"),
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        F.lit("q").alias("side"),
+
+
+def _block_grid(rows: DataFrame, keys: list[str]) -> DataFrame:
+    """The one grid router (module docstring): ``rows`` carry
+    ``(keys…, id, v, side)``; returns ``(keys…, gq, gc, id, v, side)``,
+    every (query, candidate) pair of a key group in exactly one
+    ``(keys…, gq, gc)`` block.
+
+    Sizing is single-pass: a window count over the keys (a size JOIN
+    recomputed the LSH signature projection 4x), whose hash partitioning
+    the scoring groupBy extends, so routing and scoring ride one
+    exchange. Without keys the size is a one-row count broadcast onto
+    every row (a BroadcastNestedLoopJoin), so plan build runs no job."""
+    count = F.count(F.lit(1))
+    if keys:
+        sized = rows.withColumn("size", count.over(Window.partitionBy(*keys)))
+    else:
+        sized = rows.crossJoin(F.broadcast(rows.agg(count.alias("size"))))
+    n_sub = F.ceil(F.col("size") / F.lit(BLOCK_ROWS)).cast("int")
+    sub_of = F.pmod(F.xxhash64("id"), n_sub).cast("int")
+    subs = F.sequence(F.lit(0), n_sub - 1)
+
+    def block(gq, gc, side):
+        return F.struct(
+            gq.cast("int").alias("gq"), gc.cast("int").alias("gc"), side.alias("side")
+        )
+
+    side = F.col("side")
+    as_query = F.transform(subs, lambda gc: block(sub_of, gc, F.lit("q")))
+    as_cand = F.transform(subs, lambda gq: block(gq, sub_of, F.lit("c")))
+    assigns = (
+        F.when(n_sub <= 1, F.array(block(F.lit(0), F.lit(0), side)))
+        .when(side == "q", as_query)
+        .when(side == "c", as_cand)
+        .otherwise(F.concat(as_query, as_cand))
     )
-    return cand.unionByName(qry).select(
-        (F.col("qc") * n_chunks + F.col("cc")).alias("chunk"), "id", "v", "side"
+    return sized.select(*keys, "id", "v", F.explode(assigns).alias("a")).select(
+        *keys, "a.gq", "a.gc", "id", "v", "a.side"
+    )
+
+
+def _score(rows: DataFrame, keys: list[str], scorer, schema: str) -> DataFrame:
+    """Route ``rows`` through the grid; ``scorer`` runs once per block."""
+    return (
+        _block_grid(rows, keys)
+        .groupBy(*keys, "gq", "gc")
+        .applyInPandas(scorer, schema)
+    )
+
+
+def _split(pdf: pd.DataFrame):
+    """A block's (queries, candidates); a 'b' row is both."""
+    side = pdf["side"]
+    return pdf[side != "c"], pdf[side != "q"]
+
+
+def _unit_rows(vs):
+    return _safe_rows(np.array([np.asarray(v, dtype=np.float64) for v in vs]))
+
+
+def _topk_rows(key, qids, cids, k: int):
+    """Row/column indices of every query's ``k`` best candidates: ``key``
+    ascending, ties to the smaller candidate id; a candidate with the
+    query's own id is never one (self is masked by id EQUALITY, so a
+    vec_id that occurs twice is not its own neighbour)."""
+    not_self = qids[:, None] != cids[None, :]
+    ii, jj = [], []
+    for i in range(key.shape[0]):
+        order = np.lexsort((cids, key[i]))
+        order = order[not_self[i, order]][:k]
+        ii.extend([i] * len(order))
+        jj.extend(order)
+    return np.asarray(ii, dtype=np.int64), np.asarray(jj, dtype=np.int64)
+
+
+def _block_topk(k: int):
+    """Top-k block scorer: each query's partial top-k by cosine in one
+    block, ``(vec_id, nn_id, sim)``."""
+
+    def score(pdf: pd.DataFrame) -> pd.DataFrame:
+        q, c = _split(pdf)
+        if q.empty or c.empty:
+            return pd.DataFrame({"vec_id": [], "nn_id": [], "sim": []})
+        qids, cids = q["id"].to_numpy(), c["id"].to_numpy()
+        S = _unit_rows(q["v"]) @ _unit_rows(c["v"]).T
+        ii, jj = _topk_rows(-S, qids, cids, k)
+        return pd.DataFrame({"vec_id": qids[ii], "nn_id": cids[jj], "sim": S[ii, jj]})
+
+    return score
+
+
+_TOPK_SCHEMA = "vec_id long, nn_id long, sim double"
+
+
+def _rank(partials: DataFrame, k: int) -> DataFrame:
+    """Global top-k over the per-block partials: exact, because the global
+    top-k is a subset of the union of per-block top-ks. Higher sim first,
+    then smaller neighbour id."""
+    w = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("nn_id").asc())
+    return partials.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def _dedup_pairs(partials: DataFrame) -> DataFrame:
+    # a pair can surface in several key groups (LSH bands) — sims are equal
+    return partials.groupBy("vec_id", "nn_id").agg(F.max("sim").alias("sim"))
+
+
+def _score_pairs(rows: DataFrame, keys: list[str], threshold: float) -> DataFrame:
+    """Pairs block scorer over the grid: every (id_a < id_b) pair of a
+    block with cosine >= ``threshold``, rounded engine-side."""
+    thr = float(threshold)
+
+    def score(pdf: pd.DataFrame) -> pd.DataFrame:
+        q, c = _split(pdf)
+        if q.empty or c.empty:
+            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
+        qids, cids = q["id"].to_numpy(), c["id"].to_numpy()
+        S = _unit_rows(q["v"]) @ _unit_rows(c["v"]).T
+        # orient a < b: keeps exactly one of a pair's two (q, c) meetings,
+        # in a 'b' block and across a hot group's blocks alike. 1e-6
+        # margin: MEMBERSHIP is decided on the ROUNDED value below —
+        # thresholding the raw numpy sim would let ulp differences between
+        # BLAS and DuckDB summation flip boundary pairs between engines
+        ii, jj = np.nonzero((S >= thr - 1e-6) & (cids[None, :] > qids[:, None]))
+        return pd.DataFrame({"id_a": qids[ii], "id_b": cids[jj], "cosine": S[ii, jj]})
+
+    # round ENGINE-side (F.round = HALF_UP, matching DuckDB round; Python
+    # round() is banker's), then threshold the rounded value
+    return (
+        _score(rows, keys, score, "id_a long, id_b long, cosine double")
+        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
+        .filter(F.col("cosine") >= F.lit(thr))
     )
 
 
@@ -201,21 +324,14 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     candidates: DataFrame | None = None,
-    n_chunks: int = 8,
-    n_query_chunks: int = 1,
     dim: int | None = None,
 ) -> DataFrame:
     """Exact top-k cosine neighbors per vector: (vec_id, nn_id, rank, cosine).
 
-    Distributed grid block-nested-loop (module docstring): per-block
-    partial top-k inside applyInPandas (one matmul per block), then a
-    global window merges the partials. Exact because the global top-k
-    is a subset of the union of per-block top-ks. Deterministic
-    tie-break: higher sim first, then smaller neighbor id.
+    The unkeyed grid (module docstring): per-block partial top-k, one
+    matmul per block, then a global window merges the partials.
+    Deterministic tie-break: higher sim first, then smaller neighbor id.
     """
-    import numpy as np
-    import pandas as pd
-
     # healthy-vector source rule (see healthy_vectors): one ragged/NaN
     # row must degrade one row, not crash a whole Arrow batch's matmul.
     # Pass dim to keep plan build action-free (else one mode-inference
@@ -229,46 +345,16 @@ def cosine_topk(
         if dim is None:
             dim = -1
     df = healthy_vectors(df, vec_col, dim=dim)
-    cand = (
-        healthy_vectors(candidates, vec_col, dim=dim)
-        if candidates is not None
-        else df
-    )
-    union = _chunked_union(df, cand, id_col, vec_col, n_chunks, n_query_chunks)
-    kk = k
-
-    def partial(pdf: pd.DataFrame) -> pd.DataFrame:
-        c = pdf[pdf["side"] == "c"]
-        q = pdf[pdf["side"] == "q"]
-        if c.empty or q.empty:
-            return pd.DataFrame({"vec_id": [], "nn_id": [], "sim": []})
-        cand_ids = c["id"].to_numpy()
-        M = np.array([np.asarray(v, dtype=np.float64) for v in c["v"]])
-        Mn = _safe_rows(M)
-        Q = np.array([np.asarray(v, dtype=np.float64) for v in q["v"]])
-        Qn = _safe_rows(Q)
-        S = Qn @ Mn.T
-        qids = q["id"].to_numpy()
-        S[qids[:, None] == cand_ids[None, :]] = -np.inf
-        out_q, out_n, out_s = [], [], []
-        for i in range(S.shape[0]):
-            order = np.lexsort((cand_ids, -S[i]))[:kk]
-            for j in order:
-                if S[i, j] == -np.inf:
-                    continue
-                out_q.append(qids[i])
-                out_n.append(cand_ids[j])
-                out_s.append(float(S[i, j]))
-        return pd.DataFrame({"vec_id": out_q, "nn_id": out_n, "sim": out_s})
-
-    partials = union.groupBy("chunk").applyInPandas(
-        partial, "vec_id long, nn_id long, sim double"
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("nn_id").asc())
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("vec_id", "nn_id", "rank", F.round("sim", 6).alias("cosine"))
+    if candidates is None:
+        rows = _sides(df, id_col, vec_col, "b")
+    else:
+        cand = healthy_vectors(candidates, vec_col, dim=dim)
+        rows = _sides(df, id_col, vec_col, "q").unionByName(
+            _sides(cand, id_col, vec_col, "c")
+        )
+    partials = _score(rows, [], _block_topk(k), _TOPK_SCHEMA)
+    return _rank(partials, k).select(
+        "vec_id", "nn_id", "rank", F.round("sim", 6).alias("cosine")
     )
 
 
@@ -277,57 +363,14 @@ def cosine_pairs(
     threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_chunks: int = 8,
-    n_query_chunks: int = 1,
     dim: int | None = None,
 ) -> DataFrame:
     """All pairs (id_a < id_b) with cosine >= threshold — the exact
-    near-duplicate detector over embeddings, distributed (module
-    docstring). Each pair (a, b) with a < b is emitted exactly once: in
-    the grid block owning (query a's q-chunk, candidate b's c-chunk).
-    Both sides here are the full corpus, so at scale raise
-    ``n_query_chunks`` alongside ``n_chunks`` — per-task memory is
-    |corpus|/n_query_chunks + |corpus|/n_chunks rows."""
-    import numpy as np
-    import pandas as pd
-
+    near-duplicate detector over embeddings on the unkeyed grid (module
+    docstring). Each pair surfaces exactly once: in the one block where
+    a's query row meets b's candidate row."""
     df = healthy_vectors(df, vec_col, dim=dim)  # see healthy_vectors
-    union = _chunked_union(df, df, id_col, vec_col, n_chunks, n_query_chunks)
-    thr = threshold
-
-    def partial(pdf: pd.DataFrame) -> pd.DataFrame:
-        c = pdf[pdf["side"] == "c"]
-        q = pdf[pdf["side"] == "q"]
-        if c.empty or q.empty:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-        cand_ids = c["id"].to_numpy()
-        M = np.array([np.asarray(v, dtype=np.float64) for v in c["v"]])
-        Mn = _safe_rows(M)
-        Q = np.array([np.asarray(v, dtype=np.float64) for v in q["v"]])
-        Qn = _safe_rows(Q)
-        S = Qn @ Mn.T
-        qids = q["id"].to_numpy()
-        out_a, out_b, out_s = [], [], []
-        for i in range(S.shape[0]):
-            # 1e-6 margin: the MEMBERSHIP decision happens on the
-            # ROUNDED value engine-side below — thresholding the raw
-            # numpy sim here would let ulp differences between BLAS and
-            # DuckDB summation flip boundary pairs between engines
-            hits = np.nonzero((S[i] >= thr - 1e-6) & (cand_ids > qids[i]))[0]
-            for j in hits:
-                out_a.append(qids[i])
-                out_b.append(cand_ids[j])
-                out_s.append(float(S[i, j]))
-        return pd.DataFrame({"id_a": out_a, "id_b": out_b, "cosine": out_s})
-
-    # round ENGINE-side (F.round = HALF_UP, matching DuckDB round) — Python
-    # round() inside the UDF is banker's rounding, a parity hazard at ties
-    return (
-        union.groupBy("chunk")
-        .applyInPandas(partial, "id_a long, id_b long, cosine double")
-        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-        .filter(F.col("cosine") >= F.lit(float(threshold)))
-    )
+    return _score_pairs(_sides(df, id_col, vec_col, "b"), [], threshold)
 
 
 def ivf_topk(
@@ -340,56 +383,28 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF-style exact top-k WITHIN coarse cells: candidates are restricted
     to rows sharing ``block_col`` (a cluster/label id). The scale shape of
-    ANN: shuffle once on the cell id, then each cell is an independent
-    dense matmul inside applyInPandas — no cross-cell pairs ever
-    materialize. Deterministic tie-break (sim desc, id asc)."""
-    import numpy as np
-    import pandas as pd
-
+    ANN: the grid keyed by the cell id, so no cross-cell pair ever
+    materializes and a hot cell is tiled like any other key group.
+    Deterministic tie-break (sim desc, id asc)."""
     df = healthy_vectors(df, vec_col, dim=dim)  # see healthy_vectors
     # a NULL cell id is NOT a cell: Spark's groupBy would score pairs
     # inside the NULL-key group while the twin's equality join (and any
     # SQL consumer) drops them — unassigned rows get no neighbors
     df = df.filter(F.col(block_col).isNotNull())
-    kk = k
+    topk = _block_topk(k)
 
     def per_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf[id_col].to_numpy()
-        M = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-        Mn = _safe_rows(M)
-        S = Mn @ Mn.T
-        np.fill_diagonal(S, -np.inf)
-        out_q, out_n, out_r, out_s, out_b = [], [], [], [], []
-        block = pdf[block_col].iloc[0]
-        for i in range(len(ids)):
-            order = np.lexsort((ids, -S[i]))[:kk]
-            for r, j in enumerate(order, start=1):
-                if S[i, j] == -np.inf:
-                    continue
-                out_q.append(ids[i])
-                out_n.append(ids[j])
-                out_r.append(r)
-                out_s.append(float(S[i, j]))
-                out_b.append(block)
-        return pd.DataFrame(
-            {
-                "vec_id": out_q,
-                "nn_id": out_n,
-                "rank": out_r,
-                "cosine": out_s,
-                block_col: out_b,
-            }
-        )
+        return topk(pdf).assign(**{block_col: pdf[block_col].iloc[0]})
 
-    out_schema = f"vec_id long, nn_id long, rank int, cosine double, {block_col} int"
-    # engine-side HALF-UP rounding (see cosine_pairs note)
-    return (
-        df.select(id_col, vec_col, block_col)
-        .groupBy(block_col)
-        .applyInPandas(per_block, out_schema)
-        .select(
-            "vec_id", "nn_id", "rank", F.round("cosine", 6).alias("cosine"), block_col
-        )
+    partials = _score(
+        _sides(df, id_col, vec_col, "b", block_col),
+        [block_col],
+        per_block,
+        f"{_TOPK_SCHEMA}, {block_col} int",
+    )
+    # engine-side HALF-UP rounding (see _score_pairs)
+    return _rank(partials, k).select(
+        "vec_id", "nn_id", "rank", F.round("sim", 6).alias("cosine"), block_col
     )
 
 
@@ -400,7 +415,6 @@ def ivf_quantized_topk(
     k: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_bucket: int = 4096,
     dim: int | None = None,
 ) -> DataFrame:
     """IVF with a TRAINED coarse quantizer + multi-probe — the full FAISS-IVF
@@ -419,26 +433,20 @@ def ivf_quantized_topk(
     and its top-``nprobe`` cells as a query — multi-probe recovers the
     recall lost at cell boundaries, the classic IVF trade.
 
-    Search: bucket-local scoring per cell (one groupBy(cell) matmul,
-    per-query partial top-k, global window merge) — same scale shape as
-    lsh_ann_topk; shuffle = corpus x (1 + nprobe) rows keyed by cell.
-    Output is ids-only (vec_id, nn_id, rank): float sims stay out of the
-    cross-engine hash surface (CLAUDE.md invariant).
+    Search: the grid keyed by cell (per-query partial top-k, global
+    window merge) — same scale shape as lsh_ann_topk; shuffle = corpus x
+    (1 + nprobe) rows keyed by cell. Output is ids-only (vec_id, nn_id,
+    rank): float sims stay out of the cross-engine hash surface
+    (a repo-wide invariant).
 
     Scale guards:
     - ``n_cells=None`` derives ~sqrt(N) cells from a corpus count (FAISS's
       rule of thumb), so the default cell population is ~sqrt(N) instead
       of N/8 — pass an explicit n_cells when the oracle twin needs it.
-    - Cells above ``max_bucket`` rows are tiled into the same q-row /
-      c-column hash sub-grid as :func:`_lsh_grid`, so a skewed quantizer
-      (or adversarially clustered corpus) never materializes one
-      O(cell²) pandas task: per-frame input ≤ ~2*max_bucket rows. The
-      sub-grid groupBy keys EXTEND the cell window's partition key, so
-      sizing + scoring ride one exchange.
+    - A cell above ``BLOCK_ROWS`` rows is tiled by the grid router, so a
+      skewed quantizer (or adversarially clustered corpus) never
+      materializes one O(cell²) pandas task.
     """
-    import numpy as np
-    import pandas as pd
-
     df = healthy_vectors(df, vec_col, dim=dim)  # see healthy_vectors
     if n_cells is None:
         # one count job; at corpus scale this is a metadata-cheap aggregate
@@ -466,9 +474,7 @@ def ivf_quantized_topk(
         for pdf in batches:
             if pdf.empty:
                 continue
-            V = np.array([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
-            Vn = _safe_rows(V)
-            S = Vn @ Cm.T
+            S = _unit_rows(pdf["v"]) @ Cm.T
             # stable sort: tie -> lower cell id, matching the SQL twin's
             # ORDER BY sim DESC, cell ASC. Row emission is fully
             # vectorized — the original per-row .iloc/append loop cost
@@ -494,74 +500,8 @@ def ivf_quantized_topk(
     routed = df.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v")
     ).mapInPandas(assign, f"id long, v {vec_type}, cell int, side string")
-
-    # hot-cell cap: size every cell with ONE window count, then each row
-    # explodes its own grid assignments (cold cell -> single (0,0) block;
-    # hot cell -> q rows replicate across gc columns at their hash gq row,
-    # c rows replicate across gq rows at their hash gc column — every
-    # (q, c) pair meets in exactly one block of bounded size)
-    w_cell = Window.partitionBy("cell")
-    counted = routed.withColumn("csize", F.count(F.lit(1)).over(w_cell))
-    n_sub = F.ceil(F.col("csize") / F.lit(max_bucket)).cast("int")
-    sub_of = F.pmod(F.xxhash64("id"), n_sub).cast("int")
-    subs = F.sequence(F.lit(0), n_sub - 1)
-    assigns = F.when(
-        F.col("csize") <= F.lit(max_bucket),
-        F.array(F.struct(F.lit(0).alias("gq"), F.lit(0).alias("gc"))),
-    ).otherwise(
-        F.when(
-            F.col("side") == "q",
-            F.transform(
-                subs,
-                lambda gc: F.struct(sub_of.alias("gq"), gc.cast("int").alias("gc")),
-            ),
-        ).otherwise(
-            F.transform(
-                subs,
-                lambda gq: F.struct(gq.cast("int").alias("gq"), sub_of.alias("gc")),
-            )
-        )
-    )
-    gridded = counted.select(
-        "cell", "id", "v", "side", F.explode(assigns).alias("a")
-    ).select("cell", "a.gq", "a.gc", "id", "v", "side")
-
-    kk = k
-
-    def cell_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        q = pdf[pdf["side"] == "q"]
-        c = pdf[pdf["side"] == "c"]
-        if q.empty or c.empty:
-            return pd.DataFrame({"qid": [], "cid": [], "sim": []})
-        qids = q["id"].to_numpy()
-        cids = c["id"].to_numpy()
-        Q = np.array([np.asarray(v, dtype=np.float64) for v in q["v"]])
-        Qn = _safe_rows(Q)
-        M = np.array([np.asarray(v, dtype=np.float64) for v in c["v"]])
-        Mn = _safe_rows(M)
-        S = Qn @ Mn.T
-        S[qids[:, None] == cids[None, :]] = -np.inf
-        out_q, out_c, out_s = [], [], []
-        for i in range(S.shape[0]):
-            order = np.lexsort((cids, -S[i]))[:kk]
-            for j in order:
-                if S[i, j] == -np.inf:
-                    continue
-                out_q.append(qids[i])
-                out_c.append(cids[j])
-                out_s.append(float(S[i, j]))
-        return pd.DataFrame({"qid": out_q, "cid": out_c, "sim": out_s})
-
-    partials = gridded.groupBy("cell", "gq", "gc").applyInPandas(
-        cell_topk, "qid long, cid long, sim double"
-    )
-    dedup = partials.groupBy("qid", "cid").agg(F.max("sim").alias("sim"))
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid").asc())
-    return (
-        dedup.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("qid").alias("vec_id"), F.col("cid").alias("nn_id"), "rank")
-    )
+    partials = _score(routed, ["cell"], _block_topk(k), _TOPK_SCHEMA)
+    return _rank(_dedup_pairs(partials), k).select("vec_id", "nn_id", "rank")
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -571,20 +511,17 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     ]
 
 
-def _lsh_grid(
+def _lsh_bands(
     df: DataFrame,
     dim: int,
     n_planes: int,
     bands: int,
     seed: int,
-    max_bucket: int,
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """Shared LSH routing: signature → band buckets → capped grid blocks.
-
-    Returns (band, bucket, gq, gc, id, v, side) where side is 'b' (both
-    roles, cold bucket) or 'q'/'c' (hot-bucket sub-grid).
+    """Shared LSH routing: signature → band buckets, as grid router rows
+    ``(band, bucket, id, v, side='b')`` keyed by (band, bucket).
 
     - ONE nested-array literal + transform for the hyperplanes instead of
       n_planes x dim individual F.lit columns (per-literal Py4J round
@@ -592,16 +529,7 @@ def _lsh_grid(
       3.2 s at 16 planes x 64 dims);
     - vectors ride the band explode ONCE (shuffle = bands x corpus, a
       predictable bound) — a pair-join re-attach ships 2 vectors PER
-      CANDIDATE PAIR (unbounded; measured ~800 MB at 2k vectors);
-    - hot-bucket cap, SINGLE-PASS: a window count over (band, bucket)
-      sizes every bucket (a size-JOIN recomputed the signature projection
-      4x), each row then explodes its own grid assignments — cold buckets
-      emit one side='b' row (no replication), hot buckets emit q-row +
-      c-column hash sub-chunks so every pair meets in exactly one block,
-      per-task input ≤ ~2*max_bucket rows, per-task compute ≤
-      ~max_bucket². The scoring groupBy keys EXTEND the window's
-      (band, bucket) hash partitioning, so routing + scoring ride one
-      exchange.
+      CANDIDATE PAIR (unbounded; measured ~800 MB at 2k vectors).
     """
     rows_per_band = n_planes // bands
     planes = _hyperplanes(dim, n_planes, seed)
@@ -613,7 +541,7 @@ def _lsh_grid(
     with_sig = df.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v"), sig.alias("sig")
     )
-    banded = with_sig.select(
+    return with_sig.select(
         "id",
         "v",
         F.explode(
@@ -633,36 +561,7 @@ def _lsh_grid(
                 ]
             )
         ).alias("bb"),
-    ).select("id", "v", "bb.band", "bb.bucket")
-
-    w_bb = Window.partitionBy("band", "bucket")
-    counted = banded.withColumn("bsize", F.count(F.lit(1)).over(w_bb))
-    n_sub = F.ceil(F.col("bsize") / F.lit(max_bucket)).cast("int")
-    sub_of = F.pmod(F.xxhash64("id"), n_sub).cast("int")
-    subs = F.sequence(F.lit(0), n_sub - 1)
-
-    def _as_query(gc):
-        return F.struct(
-            sub_of.alias("gq"), gc.cast("int").alias("gc"), F.lit("q").alias("side")
-        )
-
-    def _as_candidate(gq):
-        return F.struct(
-            gq.cast("int").alias("gq"), sub_of.alias("gc"), F.lit("c").alias("side")
-        )
-
-    assigns = F.when(
-        F.col("bsize") <= F.lit(max_bucket),
-        F.array(
-            F.struct(
-                F.lit(0).alias("gq"), F.lit(0).alias("gc"), F.lit("b").alias("side")
-            )
-        ),
-    ).otherwise(F.concat(F.transform(subs, _as_query), F.transform(subs, _as_candidate)))
-
-    return counted.select(
-        "band", "bucket", "id", "v", F.explode(assigns).alias("a")
-    ).select("band", "bucket", "a.gq", "a.gc", "id", "v", "a.side")
+    ).select("bb.band", "bb.bucket", "id", "v", F.lit("b").alias("side"))
 
 
 def lsh_ann_topk(
@@ -674,7 +573,6 @@ def lsh_ann_topk(
     n_planes: int = 16,
     bands: int = 8,
     seed: int = 42,
-    max_bucket: int = 4096,
 ) -> DataFrame:
     """Approximate top-k cosine neighbors via random-hyperplane LSH.
 
@@ -683,62 +581,18 @@ def lsh_ann_topk(
     Recall rises with bands (more, smaller bands → more candidates).
 
     Scale shape: BUCKET-LOCAL scoring (see module docstring) — one band
-    explode carrying (id, v), one groupBy(band, bucket) matmul per
-    bucket, per-query partial top-k out. Buckets above ``max_bucket``
-    rows (skewed signatures, or n_planes too small for the corpus) are
-    tiled into a sub-grid of hash blocks so no task's input exceeds
-    ~2*max_bucket rows and no task's compute exceeds ~max_bucket² — the
-    hot-bucket O(bucket²) failure mode is structurally capped. Scale
-    n_planes with corpus size regardless: the cap bounds the damage of a
-    too-small keyspace, not its candidate volume.
+    explode carrying (id, v), the grid keyed by (band, bucket), per-query
+    partial top-k out. A bucket above ``BLOCK_ROWS`` rows (skewed
+    signatures, or n_planes too small for the corpus) is tiled by the
+    router, so the hot-bucket O(bucket²) failure mode is structurally
+    capped. Scale n_planes with corpus size regardless: the cap bounds
+    the damage of a too-small keyspace, not its candidate volume.
     """
-    import numpy as np
-    import pandas as pd
-
     df = healthy_vectors(df, vec_col, dim=dim)  # see healthy_vectors
-    grid = _lsh_grid(df, dim, n_planes, bands, seed, max_bucket, id_col, vec_col)
-    kk = k
-
-    def grid_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        both = pdf["side"] == "b"
-        q = pdf[both | (pdf["side"] == "q")]
-        c = pdf[both | (pdf["side"] == "c")]
-        if q.empty or c.empty or len(pdf) < 2:
-            return pd.DataFrame({"qid": [], "cid": [], "sim": []})
-        qids = q["id"].to_numpy()
-        cids = c["id"].to_numpy()
-        Q = np.array([np.asarray(v, dtype=np.float64) for v in q["v"]])
-        Qn = _safe_rows(Q)
-        M = np.array([np.asarray(v, dtype=np.float64) for v in c["v"]])
-        Mn = _safe_rows(M)
-        S = Qn @ Mn.T
-        S[qids[:, None] == cids[None, :]] = -np.inf
-        out_q, out_c, out_s = [], [], []
-        for i in range(S.shape[0]):
-            order = np.lexsort((cids, -S[i]))[:kk]
-            for j in order:
-                if S[i, j] == -np.inf:
-                    continue
-                out_q.append(qids[i])
-                out_c.append(cids[j])
-                out_s.append(float(S[i, j]))
-        return pd.DataFrame({"qid": out_q, "cid": out_c, "sim": out_s})
-
-    partials = grid.groupBy("band", "bucket", "gq", "gc").applyInPandas(
-        grid_topk, "qid long, cid long, sim double"
-    )
-    # same pair can surface from several bands — dedup on ids (sims equal)
-    scored = partials.groupBy("qid", "cid").agg(F.max("sim").alias("sim"))
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias("vec_id"),
-            F.col("cid").alias("nn_id"),
-            "rank",
-            F.round("sim", 6).alias("cosine"),
-        )
+    banded = _lsh_bands(df, dim, n_planes, bands, seed, id_col, vec_col)
+    partials = _score(banded, ["band", "bucket"], _block_topk(k), _TOPK_SCHEMA)
+    return _rank(_dedup_pairs(partials), k).select(
+        "vec_id", "nn_id", "rank", F.round("sim", 6).alias("cosine")
     )
 
 
@@ -751,14 +605,13 @@ def lsh_cosine_near_pairs(
     n_planes: int = 16,
     bands: int = 8,
     seed: int = 42,
-    max_bucket: int = 4096,
 ) -> DataFrame:
     """SUB-QUADRATIC embedding near-duplicate pairs: all (id_a < id_b)
     with cosine >= threshold among pairs sharing >= 1 LSH band bucket —
     the scale path where :func:`cosine_pairs` (exact, O(N²)) cannot run.
 
-    Same routing as :func:`lsh_ann_topk` (one band explode, bucket-local
-    matmuls, hot-bucket grid cap); each block emits its thresholded pairs
+    Same routing as :func:`lsh_ann_topk` (one band explode, the grid
+    keyed by (band, bucket)); each block emits its thresholded pairs
     with the exact in-block cosine, oriented id_a < id_b so every pair
     surfaces once per covering band; a final (id_a, id_b) groupBy dedups
     across bands. Cosine is rounded to 6 BEFORE the dedup so ulp
@@ -768,50 +621,10 @@ def lsh_cosine_near_pairs(
     defaults (r=2, b=8) that is <2% at cosine 0.4 and falls fast as
     similarity rises.
     """
-    import numpy as np
-    import pandas as pd
-
     df = healthy_vectors(df, vec_col, dim=dim)  # see healthy_vectors
-    grid = _lsh_grid(df, dim, n_planes, bands, seed, max_bucket, id_col, vec_col)
-    thr = threshold
-
-    def grid_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        both = pdf["side"] == "b"
-        q = pdf[both | (pdf["side"] == "q")]
-        c = pdf[both | (pdf["side"] == "c")]
-        if q.empty or c.empty or len(pdf) < 2:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-        qids = q["id"].to_numpy()
-        cids = c["id"].to_numpy()
-        Q = np.array([np.asarray(v, dtype=np.float64) for v in q["v"]])
-        Qn = _safe_rows(Q)
-        M = np.array([np.asarray(v, dtype=np.float64) for v in c["v"]])
-        Mn = _safe_rows(M)
-        S = Qn @ Mn.T
-        # orient a < b: keeps exactly one of the two (q,c)/(c,q)
-        # appearances of a pair, in 'b' blocks and across grid blocks alike.
-        # 1e-6 margin: membership is decided on the ROUNDED value below
-        ii, jj = np.nonzero((S >= thr - 1e-6) & (cids[None, :] > qids[:, None]))
-        return pd.DataFrame(
-            {
-                "id_a": qids[ii],
-                "id_b": cids[jj],
-                "cosine": S[ii, jj].astype(np.float64),
-            }
-        )
-
-    partials = grid.groupBy("band", "bucket", "gq", "gc").applyInPandas(
-        grid_pairs, "id_a long, id_b long, cosine double"
-    )
-    # round ENGINE-side (F.round = HALF_UP like DuckDB; Python round() is
-    # banker's) BEFORE the dedup so ulp differences between block layouts
-    # cannot leak into the output
-    rounded = partials.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-    # threshold the ROUNDED value (the raw-sim cut inside the UDF keeps a
-    # 1e-6 margin) — membership at the boundary is then quantized, not a
-    # BLAS-vs-DuckDB summation ulp
+    banded = _lsh_bands(df, dim, n_planes, bands, seed, id_col, vec_col)
     return (
-        rounded.filter(F.col("cosine") >= F.lit(float(threshold)))
+        _score_pairs(banded, ["band", "bucket"], threshold)
         .groupBy("id_a", "id_b")
         .agg(F.max("cosine").alias("cosine"))
     )
@@ -831,8 +644,6 @@ def _pq_codes_np(Q, B, ds: int):
     """Per-row nearest codeword per subspace (numpy, int64 exact):
     argmin integer distance, ties to the LOWER code (np.argmin's
     first-occurrence rule == the kmeans_assign tie rule)."""
-    import numpy as np
-
     codes = np.empty((Q.shape[0], len(B)), dtype=np.int64)
     for s, Bs in enumerate(B):
         Qs = Q[:, s * ds : (s + 1) * ds]
@@ -850,8 +661,6 @@ def pq_topk(
     rerank: int = 32,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_chunks: int = 8,
-    n_query_chunks: int = 1,
     dim: int | None = None,
 ) -> DataFrame:
     """Product-quantization ANN top-k (Jégou et al., "Product
@@ -893,9 +702,6 @@ def pq_topk(
     exact distance when ``rerank`` > 0, else the ADC distance.
     Accuracy: shortlist-miss only (see test_pq_topk_recall_vs_exact).
     """
-    import numpy as np
-    import pandas as pd
-
     def _q(x):
         return F.round(x.cast("double") * F.lit(1_000_000.0)).cast("long")
 
@@ -942,7 +748,7 @@ def pq_topk(
                 Q = np.array([np.asarray(v, dtype=np.int64) for v in pdf["__q"]])
                 codes = _pq_codes_np(Q, B, ds)
                 col_s, col_c, col_p, col_sm, col_n = [], [], [], [], []
-                for s in range(mm_):
+                for s in range(m):
                     Qs = Q[:, s * ds : (s + 1) * ds]
                     for j in np.unique(codes[:, s]):
                         mask = codes[:, s] == j
@@ -960,7 +766,6 @@ def pq_topk(
 
         return fn
 
-    mm_ = m
     for _ in range(int(iters)):
         B = [np.asarray(books[s], dtype=np.int64) for s in range(m)]
         upd = (
@@ -989,58 +794,39 @@ def pq_topk(
                 continue
             Q = np.array([np.asarray(v, dtype=np.int64) for v in pdf["__q"]])
             codes = _pq_codes_np(Q, B_fin, ds)
-            yield pd.DataFrame(
-                {"id": pdf[id_col].to_numpy(), "__code": list(codes)}
-            )
+            yield pd.DataFrame({"id": pdf[id_col].to_numpy(), "v": list(codes)})
 
-    coded = pts.mapInPandas(_encode_fn, "id long, __code array<bigint>").select(
-        F.col("id").alias(id_col), "__code"
+    # the unkeyed grid counts its rows AND ships them — materialize the
+    # encode pass once instead of running it for both
+    coded = pts.mapInPandas(_encode_fn, "id long, v array<bigint>").localCheckpoint(
+        eager=False
     )
-
-    union = _chunked_union(
-        pts.select(id_col, F.col("__q").alias("embedding")),
-        coded.select(id_col, F.col("__code").alias("embedding")),
-        id_col,
-        "embedding",
-        n_chunks,
-        n_query_chunks,
+    rows = _sides(pts, id_col, "__q", "q").unionByName(
+        coded.withColumn("side", F.lit("c"))
     )
-    B = B_fin  # trained books, already materialized for the encode pass
     # per-block partial must carry the whole shortlist so the global
     # ADC top-rerank (a subset of the union of per-block top-Rs) is
     # exact before the re-rank joins
-    kk, mm, dds = max(int(k), int(rerank)), m, ds
+    kk = max(int(k), int(rerank))
 
-    def partial(pdf: pd.DataFrame) -> pd.DataFrame:
-        c = pdf[pdf["side"] == "c"]
-        q = pdf[pdf["side"] == "q"]
-        if c.empty or q.empty:
+    def adc(pdf: pd.DataFrame) -> pd.DataFrame:
+        q, c = _split(pdf)
+        if q.empty or c.empty:
             return pd.DataFrame({"vec_id": [], "nn_id": [], "d2": []})
-        cand_ids = c["id"].to_numpy()
+        qids, cids = q["id"].to_numpy(), c["id"].to_numpy()
         codes = np.array([np.asarray(v, dtype=np.int64) for v in c["v"]])
         Q = np.array([np.asarray(v, dtype=np.int64) for v in q["v"]])
-        qids = q["id"].to_numpy()
         # per-query lookup tables, then m gathers per pair — all int64
-        dist = np.zeros((len(qids), len(cand_ids)), dtype=np.int64)
-        for s in range(mm):
-            Dsub = Q[:, s * dds : (s + 1) * dds]
-            Ds = ((Dsub[:, None, :] - B[s][None, :, :]) ** 2).sum(axis=2)
-            dist += Ds[:, codes[:, s]]
-        dist[qids[:, None] == cand_ids[None, :]] = np.iinfo(np.int64).max
-        out_q, out_n, out_d = [], [], []
-        for i in range(dist.shape[0]):
-            order = np.lexsort((cand_ids, dist[i]))[:kk]
-            for j in order:
-                if dist[i, j] == np.iinfo(np.int64).max:
-                    continue
-                out_q.append(qids[i])
-                out_n.append(cand_ids[j])
-                out_d.append(int(dist[i, j]))
-        return pd.DataFrame({"vec_id": out_q, "nn_id": out_n, "d2": out_d})
+        dist = np.zeros((len(qids), len(cids)), dtype=np.int64)
+        for s in range(m):
+            Qs = Q[:, s * ds : (s + 1) * ds]
+            dist += ((Qs[:, None, :] - B_fin[s][None, :, :]) ** 2).sum(axis=2)[
+                :, codes[:, s]
+            ]
+        ii, jj = _topk_rows(dist, qids, cids, kk)
+        return pd.DataFrame({"vec_id": qids[ii], "nn_id": cids[jj], "d2": dist[ii, jj]})
 
-    partials = union.groupBy("chunk").applyInPandas(
-        partial, "vec_id long, nn_id long, d2 long"
-    )
+    partials = _score(rows, [], adc, "vec_id long, nn_id long, d2 long")
     w = Window.partitionBy("vec_id").orderBy(F.col("d2").asc(), F.col("nn_id").asc())
     if int(rerank) <= 0:
         return (

@@ -701,10 +701,26 @@ def test_lsh_ann_recall(spark):
     assert hits / len(exact) > 0.5  # blocked ANN finds most true NNs
 
 
-def test_cosine_grid_chunking_equivalence(spark):
-    """The 2-D grid BNL (both sides chunked) must return EXACTLY the same
-    results as the 1-D layout: every (query, candidate) pair meets in
-    exactly one block regardless of the tiling."""
+def _cone_rows(n):
+    """``n`` vectors in a tight cone around e1 (one LSH signature, one IVF
+    cell); hash-mixed perturbations keep pairwise sims distinct (exact
+    sim ties would make the rank-by-raw-sim tie-break ulp-sensitive to
+    the matmul block layout)."""
+    return [
+        (
+            i,
+            [100.0]
+            + [((i * 2654435761 + j * 40503) % 997) / 997.0 for j in range(7)],
+        )
+        for i in range(n)
+    ]
+
+
+def test_cosine_grid_chunking_equivalence(spark, monkeypatch):
+    """The 2-D grid (a hot unkeyed group tiled into 4 x 4 blocks) must
+    return EXACTLY the results of the single block: every (query,
+    candidate) pair meets in exactly one block regardless of the tiling."""
+    from pacts_spark.datapipe import similarity
     from pacts_spark.datapipe.similarity import cosine_pairs
 
     emb = (
@@ -713,86 +729,124 @@ def test_cosine_grid_chunking_equivalence(spark):
         .cache()
     )
     base_nn = {(r.vec_id, r.rank): r.nn_id for r in cosine_topk(emb, k=2).collect()}
-    grid_nn = {
-        (r.vec_id, r.rank): r.nn_id
-        for r in cosine_topk(emb, k=2, n_chunks=5, n_query_chunks=3).collect()
-    }
-    assert base_nn == grid_nn
     base_pairs = {
         (r.id_a, r.id_b): r.cosine for r in cosine_pairs(emb, 0.4).collect()
     }
+    monkeypatch.setattr(similarity, "BLOCK_ROWS", 32)
+    grid_nn = {(r.vec_id, r.rank): r.nn_id for r in cosine_topk(emb, k=2).collect()}
+    assert base_nn == grid_nn
     grid_pairs = {
-        (r.id_a, r.id_b): r.cosine
-        for r in cosine_pairs(emb, 0.4, n_chunks=4, n_query_chunks=4).collect()
+        (r.id_a, r.id_b): r.cosine for r in cosine_pairs(emb, 0.4).collect()
     }
     assert base_pairs == grid_pairs
 
 
-def test_lsh_ann_hot_bucket_cap(spark):
-    """Adversarial corpus: every vector has the SAME signature (one giant
-    bucket per band). The max_bucket sub-grid split must produce exactly
-    the results of the uncapped path while bounding each task's input to
-    ~2*max_bucket rows."""
-    # all vectors in a tight cone around e1 → identical sign pattern;
-    # hash-mixed perturbations keep pairwise sims distinct (exact sim ties
-    # would make the rank-by-raw-sim tie-break ulp-sensitive to the matmul
-    # block layout)
-    rows = [
-        (
-            i,
-            [100.0]
-            + [((i * 2654435761 + j * 40503) % 997) / 997.0 for j in range(7)],
+def test_grid_block_count_grows_with_n(spark, monkeypatch):
+    """The unkeyed grid is sized from the data, not a static chunk count:
+    at BLOCK_ROWS=32, 120 vectors tile into 4 x 4 blocks and 480 into
+    15 x 15, and both give the BLOCK_ROWS=4096 (one block) results."""
+    from pacts_spark.datapipe import similarity
+    from pacts_spark.datapipe.similarity import _block_grid, _sides, cosine_pairs
+
+    for n, n_sub in ((120, 4), (480, 15)):
+        df = spark.createDataFrame(
+            _cone_rows(n), "vec_id long, embedding array<float>"
+        ).cache()
+        monkeypatch.setattr(similarity, "BLOCK_ROWS", 4096)
+        one_nn = {(r.vec_id, r.rank): r.nn_id for r in cosine_topk(df, k=2).collect()}
+        one_pairs = {
+            (r.id_a, r.id_b): r.cosine for r in cosine_pairs(df, 0.99998).collect()
+        }
+        monkeypatch.setattr(similarity, "BLOCK_ROWS", 32)
+        blocks = (
+            _block_grid(_sides(df, "vec_id", "embedding", "b"), [])
+            .select("gq", "gc")
+            .distinct()
+            .count()
         )
-        for i in range(180)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>").cache()
+        assert blocks == n_sub * n_sub
+        grid_nn = {(r.vec_id, r.rank): r.nn_id for r in cosine_topk(df, k=2).collect()}
+        assert grid_nn == one_nn and len(grid_nn) == 2 * n
+        grid_pairs = {
+            (r.id_a, r.id_b): r.cosine for r in cosine_pairs(df, 0.99998).collect()
+        }
+        assert grid_pairs == one_pairs and grid_pairs
+
+
+def test_lsh_ann_hot_bucket_cap(spark, monkeypatch):
+    """Adversarial corpus: every vector has the SAME signature (one giant
+    bucket per band). The grid router's hot-bucket split must produce
+    exactly the results of the untiled path while bounding each task's
+    input to ~2*BLOCK_ROWS rows."""
+    from pacts_spark.datapipe import similarity
+
+    df = spark.createDataFrame(
+        _cone_rows(180), "vec_id long, embedding array<float>"
+    ).cache()
+    monkeypatch.setattr(similarity, "BLOCK_ROWS", 10**6)
     uncapped = {
         (r.vec_id, r.rank): r.nn_id
-        for r in lsh_ann_topk(
-            df, dim=8, k=2, n_planes=8, bands=4, max_bucket=10**6
-        ).collect()
+        for r in lsh_ann_topk(df, dim=8, k=2, n_planes=8, bands=4).collect()
     }
+    monkeypatch.setattr(similarity, "BLOCK_ROWS", 32)
     capped = {
         (r.vec_id, r.rank): r.nn_id
-        for r in lsh_ann_topk(
-            df, dim=8, k=2, n_planes=8, bands=4, max_bucket=32
-        ).collect()
+        for r in lsh_ann_topk(df, dim=8, k=2, n_planes=8, bands=4).collect()
     }
     assert capped == uncapped
     assert len(capped) == 2 * 180  # every vector found k=2 neighbors
 
 
-def test_ivf_trained_hot_cell_cap(spark):
+def test_ivf_trained_hot_cell_cap(spark, monkeypatch):
     """Adversarial single-cell corpus: n_cells=1 routes EVERY candidate and
     probe into one cell (the 100-TB failure mode the cap exists for). The
-    max_bucket sub-grid must bound each pandas frame to ~2*max_bucket rows
-    while reproducing the uncapped results exactly (per-block partial
-    top-k union contains the global top-k)."""
+    grid router must bound each pandas frame to ~2*BLOCK_ROWS rows while
+    reproducing the untiled results exactly (per-block partial top-k
+    union contains the global top-k)."""
+    from pacts_spark.datapipe import similarity
     from pacts_spark.datapipe.similarity import ivf_quantized_topk
 
-    rows = [
-        (
-            i,
-            [100.0]
-            + [((i * 2654435761 + j * 40503) % 997) / 997.0 for j in range(7)],
-        )
-        for i in range(180)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>").cache()
+    df = spark.createDataFrame(
+        _cone_rows(180), "vec_id long, embedding array<float>"
+    ).cache()
+    monkeypatch.setattr(similarity, "BLOCK_ROWS", 10**6)
     uncapped = {
         (r.vec_id, r.rank): r.nn_id
-        for r in ivf_quantized_topk(
-            df, n_cells=1, nprobe=1, k=2, max_bucket=10**6
-        ).collect()
+        for r in ivf_quantized_topk(df, n_cells=1, nprobe=1, k=2).collect()
     }
+    monkeypatch.setattr(similarity, "BLOCK_ROWS", 32)
     capped = {
         (r.vec_id, r.rank): r.nn_id
-        for r in ivf_quantized_topk(
-            df, n_cells=1, nprobe=1, k=2, max_bucket=32
-        ).collect()
+        for r in ivf_quantized_topk(df, n_cells=1, nprobe=1, k=2).collect()
     }
     assert capped == uncapped
     assert len(capped) == 2 * 180
+
+
+def test_ivf_topk_duplicate_id_is_not_its_own_neighbour(spark):
+    """Self is masked by id equality, as in the DuckDB twin
+    (``a.vec_id <> b.vec_id``): a vec_id occurring twice in one cell
+    must not be returned as its own nearest neighbour."""
+    from pacts_spark.datapipe.similarity import ivf_topk
+
+    rows = [
+        (1, [1.0, 0.0, 0.0], 0),
+        (1, [1.0, 0.01, 0.0], 0),
+        (2, [0.0, 1.0, 0.0], 0),
+        (3, [0.0, 0.0, 1.0], 0),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
+    got = [
+        (r.vec_id, r.nn_id)
+        for r in ivf_topk(df, block_col="label", k=1).collect()
+        if r.vec_id == 1
+    ]
+    assert got == [(1, 2)]
+    assert [
+        (r.vec_id, r.nn_id)
+        for r in cosine_topk(df.drop("label"), k=1).collect()
+        if r.vec_id == 1
+    ] == [(1, 2)]
 
 
 def test_ivf_trained_double_vectors_and_auto_cells(spark):
@@ -801,14 +855,7 @@ def test_ivf_trained_double_vectors_and_auto_cells(spark):
     sqrt(N)-ish cell count instead of N/8 cells."""
     from pacts_spark.datapipe.similarity import ivf_quantized_topk
 
-    rows = [
-        (
-            i,
-            [100.0]
-            + [((i * 2654435761 + j * 40503) % 997) / 997.0 for j in range(7)],
-        )
-        for i in range(64)
-    ]
+    rows = _cone_rows(64)
     fdf = spark.createDataFrame(rows, "vec_id long, embedding array<float>").cache()
     ddf = spark.createDataFrame(rows, "vec_id long, embedding array<double>").cache()
     # in a tight cone every vector lands in the same cells under either

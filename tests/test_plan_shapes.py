@@ -4,9 +4,10 @@ PLANS.md documents the plans the engine is designed to produce; these
 tests PIN the load-bearing shapes so a refactor cannot silently
 reintroduce a scale-killer:
 
-- no CartesianProduct anywhere in the driver-contract queries (the one
-  deliberate cross join — drift's parts x one baseline row — broadcasts
-  an aggregate-sized side and must never degrade to a cartesian);
+- no CartesianProduct anywhere in the contract queries (the
+  deliberate cross joins — drift's parts x one baseline row, the exact
+  vector grid's rows x one count row — broadcast an aggregate-sized side
+  and must never degrade to a cartesian);
 - the row validator against a MATERIALIZED table is scan -> projection
   with zero exchanges (the whole-corpus fast path);
 - referential integrity is a broadcast LEFT ANTI hash join (never a
@@ -15,7 +16,10 @@ reintroduce a scale-killer:
   one distinct sketch per column type;
 - drift scores plan at most 6 exchanges;
 - the validator's scan is column-pruned to the columns the schema
-  actually checks.
+  actually checks;
+- the vector grid router sizes keyed groups on the scoring exchange
+  (one exchange below the LSH block scoring) and the unkeyed grid with
+  a broadcast count that runs no job at plan build.
 
 Plan text comes from queryExecution().executedPlan() BEFORE execution
 (AQE's initial plan) — these are static properties of the compiled
@@ -300,3 +304,53 @@ def test_healthy_vector_gate_is_a_scan_level_filter(spark, tmp_path):
     lower = plan.lower()
     assert "isnotnull(embedding" in lower, plan # null test reaches the scan
     assert "forall" in lower and "exists" in lower, plan
+
+
+def _subtree(plan: str, marker: str) -> list[str]:
+    """Lines of the first plan node containing ``marker`` and its subtree
+    (deeper-indented lines that follow it)."""
+    lines = plan.splitlines()
+    top = next(i for i, ln in enumerate(lines) if marker in ln)
+    depth = len(lines[top]) - len(lines[top].lstrip(" :+-"))
+    sub = [lines[top]]
+    for ln in lines[top + 1 :]:
+        if len(ln) - len(ln.lstrip(" :+-")) <= depth:
+            break
+        sub.append(ln)
+    return sub
+
+
+def test_lsh_near_pairs_one_exchange_below_block_scoring(spark):
+    """The (band, bucket) window count that sizes the grid and the block
+    scoring groupBy ride ONE full-volume exchange (PLANS.md §10): the
+    scoring keys extend the window's hash partitioning."""
+    from pacts_spark.datapipe.similarity import lsh_cosine_near_pairs
+
+    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
+    plan = _plan(lsh_cosine_near_pairs(emb, dim=64, threshold=0.4))
+    exchanges = [
+        ln for ln in _subtree(plan, "FlatMapGroupsInPandas") if "Exchange" in ln
+    ]
+    assert len(exchanges) == 1, plan
+    assert "hashpartitioning(band" in exchanges[0], plan
+
+
+def test_exact_grid_sized_by_broadcast_count_without_jobs(spark):
+    """The unkeyed exact grid takes its size from a one-row count
+    broadcast onto the rows: a BroadcastNestedLoopJoin, never a
+    CartesianProduct, and building the plan (dim given) runs no job."""
+    from pacts_spark.datapipe.similarity import cosine_pairs
+
+    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
+    sc = spark.sparkContext
+    group = "test-exact-grid-plan-build"
+    sc.setJobGroup(group, "cosine_pairs plan build")
+    try:
+        plan = _plan(cosine_pairs(emb, threshold=0.4, dim=64))
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(jobs) == [], jobs
+    assert "BroadcastNestedLoopJoin" in plan, plan
+    assert "CartesianProduct" not in plan, plan

@@ -193,6 +193,64 @@ def test_stream_restart_resumes_exactly_once(spark, engine, tmp_path):
     assert spark.read.parquet(str(out_valid)).count() == 2
 
 
+def test_redelivered_batch_does_not_duplicate_sink_rows(spark, engine, tmp_path):
+    """A micro-batch delivered AGAIN under the same id (its offsets are
+    logged but its commit is lost — a failure between the sink write and
+    the checkpoint commit) must overwrite its own batch_id partition in
+    both sink tables, not append a second copy."""
+    from collections import Counter
+
+    from pacts_spark.streaming import fork_sinks, validate_stream
+
+    src = tmp_path / "src3"
+    out_valid = tmp_path / "valid3"
+    out_viol = tmp_path / "viol3"
+    ckpt = tmp_path / "ckpt3"
+    src.mkdir()
+    for name, rows in (
+        ("b0.json", [
+            {"conv_id": "c1", "turn_idx": 1, "slot": 1, "material": "P", "amount": 1.0},
+            {"conv_id": "c1", "turn_idx": 2, "slot": None, "material": "P", "amount": 1.0},
+        ]),
+        ("b1.json", [
+            {"conv_id": "c2", "turn_idx": 1, "slot": 2, "material": "Q", "amount": 2.0},
+            {"conv_id": "c2", "turn_idx": 2, "slot": 3, "material": None, "amount": None},
+        ]),
+    ):
+        (src / name).write_text("\n".join(json.dumps(r) for r in rows))
+    schema = "conv_id string, turn_idx int, slot int, material string, amount double"
+
+    def run_available():
+        # one file per micro-batch: b0 is batch 0, b1 is batch 1
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .json(str(src))
+        )
+        validated = validate_stream(engine, stream, "inventory", "inventory_item")
+        q = fork_sinks(
+            validated, str(out_valid), str(out_viol), str(ckpt)
+        ).trigger(availableNow=True).start()
+        q.awaitTermination(120)
+        return q
+
+    def sinks():
+        return (
+            Counter(spark.read.parquet(str(out_valid)).collect()),
+            Counter(spark.read.parquet(str(out_viol)).collect()),
+        )
+
+    assert run_available().lastProgress["batchId"] == 1
+    before = sinks()
+    assert sum(before[0].values()) == 2 and sum(before[1].values()) == 3
+    # lose batch 1's commit (and the local filesystem's checksum file)
+    for f in ("1", ".1.crc"):
+        (ckpt / "commits" / f).unlink(missing_ok=True)
+    # the restart replays batch 1 under the same id
+    assert run_available().lastProgress["batchId"] == 1
+    assert sinks() == before
+
+
 def test_conversation_state_verdicts_stateful(spark, tmp_path):
     """Custom stateful operator (applyInPandasWithState): per-conversation
     turn-order state across micro-batches — cross-batch regressions are
