@@ -9,28 +9,35 @@ applyInPandas.
 
 The router takes rows ``(keys…, id, v, side)``, side ``q`` (query),
 ``c`` (candidate) or ``b`` (both), and tiles every key group into
-``n_sub x n_sub`` blocks with ``n_sub = ceil(size / BLOCK_ROWS)``:
+``n_rows x n_cols`` blocks: ``n_rows = ceil(queries / B)`` and
+``n_cols = ceil(candidates / B)``, a ``b`` row counting on both sides,
+with B = ``BLOCK_ROWS`` for a keyed grid and ``UNKEYED_BLOCK_ROWS`` for
+the unkeyed one:
 
-- a cold group (n_sub = 1) is one ``(0, 0)`` block and each row keeps
+- a cold group (one block) is the ``(0, 0)`` block and each row keeps
   its side — a ``b`` row ships once;
-- in a hot group a ``q`` row goes to its hash row in every column, a
-  ``c`` row to every row at its hash column, and a ``b`` row does both,
-  so every (query, candidate) pair meets in exactly one block and a
-  block holds ~2·BLOCK_ROWS rows whatever the corpus size or skew.
+- otherwise a ``q`` row goes to its hash row in every column, a ``c``
+  row to every row at its hash column, and a ``b`` row does both, so
+  every (query, candidate) pair meets in exactly one block, a block
+  scores at most about B x B pairs whatever the corpus size or skew,
+  and a small query side against a large candidate side
+  (decontamination) ships its queries n_cols times but its candidates
+  only n_rows times.
 
-``size`` always comes from the data, never from a caller's knob. The
+The counts always come from the data, never from a caller's knob. The
 keyed grids (IVF cell, LSH band bucket, ivf_topk's ``block_col``) count
 their group with a window whose hash partitioning the scoring groupBy
 extends, so sizing and scoring ride one exchange. The unkeyed exact
 grid (cosine_topk, cosine_pairs, pq_topk) cross-joins a broadcast
 one-row count onto the rows (a BroadcastNestedLoopJoin, never a
 CartesianProduct), so plan build stays action-free when ``dim`` is
-passed. Top-k partials merge in a global window — exact, because the
-global top-k is a subset of the union of per-block top-ks.
+passed; that count is one more job over the input on every call.
+Top-k partials merge in a global window — exact, because the global
+top-k is a subset of the union of per-block top-ks.
 
 - :func:`cosine_topk` / :func:`cosine_pairs` — EXACT brute force on the
-  unkeyed grid: O(N²) compute spread over (N / BLOCK_ROWS)² tasks, no
-  driver-side collect.
+  unkeyed grid: O(N²) compute spread over (N / UNKEYED_BLOCK_ROWS)²
+  blocks, no driver-side collect.
 
 - :func:`ivf_topk` — exact top-k within caller-provided cells.
 
@@ -72,7 +79,12 @@ from pyspark.sql import functions as F
 
 
 VECTOR_MAX_ABS = 100.0  # element bound shared with vector_column_stats
-BLOCK_ROWS = 4096  # grid router: rows per block side (module docstring)
+# grid router: most queries (and candidates) per block, measured in
+# BENCH/GRID_BLOCK.md. A keyed grid has many groups to spread over tasks,
+# so it tiles only a group too big for one task's memory; the unkeyed
+# grid is ONE group, which it must cut into many blocks to balance tasks.
+BLOCK_ROWS = 4096
+UNKEYED_BLOCK_ROWS = 1024
 
 
 def healthy_element(x, max_abs: float = VECTOR_MAX_ABS):
@@ -183,36 +195,59 @@ def _sides(
     )
 
 
-def _block_grid(rows: DataFrame, keys: list[str]) -> DataFrame:
+def _block_grid(
+    rows: DataFrame, keys: list[str], counted: DataFrame | None = None
+) -> DataFrame:
     """The one grid router (module docstring): ``rows`` carry
     ``(keys…, id, v, side)``; returns ``(keys…, gq, gc, id, v, side)``,
     every (query, candidate) pair of a key group in exactly one
     ``(keys…, gq, gc)`` block.
 
-    Sizing is single-pass: a window count over the keys (a size JOIN
+    Sizing is single-pass: window counts over the keys (a size JOIN
     recomputed the LSH signature projection 4x), whose hash partitioning
     the scoring groupBy extends, so routing and scoring ride one
-    exchange. Without keys the size is a one-row count broadcast onto
-    every row (a BroadcastNestedLoopJoin), so plan build runs no job."""
-    count = F.count(F.lit(1))
+    exchange. Without keys the counts are one row broadcast onto every
+    row (a BroadcastNestedLoopJoin), so plan build runs no job;
+    ``counted`` (one row per vector that is both query and candidate)
+    stands in for ``rows`` there when counting ``rows`` would rerun an
+    upstream pass."""
+    side = F.col("side")
+    counts = {  # a 'b' row is both
+        "n_q": F.count(F.when(side != "c", 1)),
+        "n_c": F.count(F.when(side != "q", 1)),
+    }
     if keys:
-        sized = rows.withColumn("size", count.over(Window.partitionBy(*keys)))
+        w = Window.partitionBy(*keys)
+        sized = rows.select("*", *(c.over(w).alias(n) for n, c in counts.items()))
     else:
-        sized = rows.crossJoin(F.broadcast(rows.agg(count.alias("size"))))
-    n_sub = F.ceil(F.col("size") / F.lit(BLOCK_ROWS)).cast("int")
-    sub_of = F.pmod(F.xxhash64("id"), n_sub).cast("int")
-    subs = F.sequence(F.lit(0), n_sub - 1)
+        src = rows if counted is None else counted.select(F.lit("b").alias("side"))
+        one = src.agg(*(c.alias(n) for n, c in counts.items()))
+        sized = rows.crossJoin(F.broadcast(one))
+
+    per_block = F.lit(BLOCK_ROWS if keys else UNKEYED_BLOCK_ROWS)
+
+    def tiles(n):
+        # >= 1: a group with no queries (or no candidates) is one row
+        return F.greatest(F.ceil(F.col(n) / per_block), F.lit(1)).cast("int")
+
+    n_rows, n_cols = tiles("n_q"), tiles("n_c")
+    h = F.xxhash64("id")
 
     def block(gq, gc, side):
         return F.struct(
             gq.cast("int").alias("gq"), gc.cast("int").alias("gc"), side.alias("side")
         )
 
-    side = F.col("side")
-    as_query = F.transform(subs, lambda gc: block(sub_of, gc, F.lit("q")))
-    as_cand = F.transform(subs, lambda gq: block(gq, sub_of, F.lit("c")))
+    as_query = F.transform(
+        F.sequence(F.lit(0), n_cols - 1),
+        lambda gc: block(F.pmod(h, n_rows), gc, F.lit("q")),
+    )
+    as_cand = F.transform(
+        F.sequence(F.lit(0), n_rows - 1),
+        lambda gq: block(gq, F.pmod(h, n_cols), F.lit("c")),
+    )
     assigns = (
-        F.when(n_sub <= 1, F.array(block(F.lit(0), F.lit(0), side)))
+        F.when((n_rows == 1) & (n_cols == 1), F.array(block(F.lit(0), F.lit(0), side)))
         .when(side == "q", as_query)
         .when(side == "c", as_cand)
         .otherwise(F.concat(as_query, as_cand))
@@ -222,10 +257,16 @@ def _block_grid(rows: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
-def _score(rows: DataFrame, keys: list[str], scorer, schema: str) -> DataFrame:
+def _score(
+    rows: DataFrame,
+    keys: list[str],
+    scorer,
+    schema: str,
+    counted: DataFrame | None = None,
+) -> DataFrame:
     """Route ``rows`` through the grid; ``scorer`` runs once per block."""
     return (
-        _block_grid(rows, keys)
+        _block_grid(rows, keys, counted)
         .groupBy(*keys, "gq", "gc")
         .applyInPandas(scorer, schema)
     )
@@ -796,11 +837,7 @@ def pq_topk(
             codes = _pq_codes_np(Q, B_fin, ds)
             yield pd.DataFrame({"id": pdf[id_col].to_numpy(), "v": list(codes)})
 
-    # the unkeyed grid counts its rows AND ships them — materialize the
-    # encode pass once instead of running it for both
-    coded = pts.mapInPandas(_encode_fn, "id long, v array<bigint>").localCheckpoint(
-        eager=False
-    )
+    coded = pts.mapInPandas(_encode_fn, "id long, v array<bigint>")
     rows = _sides(pts, id_col, "__q", "q").unionByName(
         coded.withColumn("side", F.lit("c"))
     )
@@ -826,7 +863,9 @@ def pq_topk(
         ii, jj = _topk_rows(dist, qids, cids, kk)
         return pd.DataFrame({"vec_id": qids[ii], "nn_id": cids[jj], "d2": dist[ii, jj]})
 
-    partials = _score(rows, [], adc, "vec_id long, nn_id long, d2 long")
+    # size the grid from the checkpointed pts (one row per query and per
+    # coded candidate): counting ``rows`` would run the encode pass twice
+    partials = _score(rows, [], adc, "vec_id long, nn_id long, d2 long", pts)
     w = Window.partitionBy("vec_id").orderBy(F.col("d2").asc(), F.col("nn_id").asc())
     if int(rerank) <= 0:
         return (

@@ -16,6 +16,7 @@ from pacts_spark.datapipe.dedup import (
 )
 from pacts_spark.datapipe.similarity import cosine_topk, lsh_ann_topk
 from pacts_spark.datapipe.textstats import doc_fingerprint, language_id, text_stats
+from tests.conftest import SF_SMALL
 
 
 @pytest.fixture(scope="module")
@@ -732,7 +733,7 @@ def test_cosine_grid_chunking_equivalence(spark, monkeypatch):
     base_pairs = {
         (r.id_a, r.id_b): r.cosine for r in cosine_pairs(emb, 0.4).collect()
     }
-    monkeypatch.setattr(similarity, "BLOCK_ROWS", 32)
+    monkeypatch.setattr(similarity, "UNKEYED_BLOCK_ROWS", 32)
     grid_nn = {(r.vec_id, r.rank): r.nn_id for r in cosine_topk(emb, k=2).collect()}
     assert base_nn == grid_nn
     grid_pairs = {
@@ -741,10 +742,35 @@ def test_cosine_grid_chunking_equivalence(spark, monkeypatch):
     assert base_pairs == grid_pairs
 
 
+def test_cosine_topk_candidates_tiled_equals_one_block(spark, monkeypatch):
+    """Cross-frame top-k (the embedding-decontamination path: separate
+    query and candidate sides) tiled into 2 x 15 unkeyed blocks returns
+    exactly the one-block rows."""
+    from pacts_spark.datapipe import similarity
+    from pacts_spark.datapipe.similarity import _block_grid, _sides
+
+    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet").cache()
+    ev = emb.filter(F.col("vec_id") % 10 == 0)
+    tr = emb.filter(F.col("vec_id") % 10 != 0)
+
+    def nn():
+        got = cosine_topk(ev, k=2, candidates=tr, dim=64).collect()
+        return {(r.vec_id, r.rank): (r.nn_id, r.cosine) for r in got}
+
+    one = nn()
+    monkeypatch.setattr(similarity, "UNKEYED_BLOCK_ROWS", 32)
+    rows = _sides(ev, "vec_id", "embedding", "q").unionByName(
+        _sides(tr, "vec_id", "embedding", "c")
+    )
+    # 50 queries x 450 candidates at 32 per side: 2 rows x 15 columns
+    assert _block_grid(rows, []).select("gq", "gc").distinct().count() == 30
+    assert nn() == one and len(one) == 2 * ev.count()
+
+
 def test_grid_block_count_grows_with_n(spark, monkeypatch):
     """The unkeyed grid is sized from the data, not a static chunk count:
-    at BLOCK_ROWS=32, 120 vectors tile into 4 x 4 blocks and 480 into
-    15 x 15, and both give the BLOCK_ROWS=4096 (one block) results."""
+    at UNKEYED_BLOCK_ROWS=32, 120 vectors tile into 4 x 4 blocks and 480
+    into 15 x 15, and both give the one-block results (at 4096)."""
     from pacts_spark.datapipe import similarity
     from pacts_spark.datapipe.similarity import _block_grid, _sides, cosine_pairs
 
@@ -752,12 +778,12 @@ def test_grid_block_count_grows_with_n(spark, monkeypatch):
         df = spark.createDataFrame(
             _cone_rows(n), "vec_id long, embedding array<float>"
         ).cache()
-        monkeypatch.setattr(similarity, "BLOCK_ROWS", 4096)
+        monkeypatch.setattr(similarity, "UNKEYED_BLOCK_ROWS", 4096)
         one_nn = {(r.vec_id, r.rank): r.nn_id for r in cosine_topk(df, k=2).collect()}
         one_pairs = {
             (r.id_a, r.id_b): r.cosine for r in cosine_pairs(df, 0.99998).collect()
         }
-        monkeypatch.setattr(similarity, "BLOCK_ROWS", 32)
+        monkeypatch.setattr(similarity, "UNKEYED_BLOCK_ROWS", 32)
         blocks = (
             _block_grid(_sides(df, "vec_id", "embedding", "b"), [])
             .select("gq", "gc")
@@ -847,6 +873,36 @@ def test_ivf_topk_duplicate_id_is_not_its_own_neighbour(spark):
         for r in cosine_topk(df.drop("label"), k=1).collect()
         if r.vec_id == 1
     ] == [(1, 2)]
+
+
+def test_ivf_topk_hot_cell_tiled_equals_one_block(spark, monkeypatch):
+    """A cell above BLOCK_ROWS rows is tiled like any other key group and
+    the window merge returns exactly the one-block rows; the small cell
+    beside it stays one block."""
+    from pacts_spark.datapipe import similarity
+    from pacts_spark.datapipe.similarity import _block_grid, _sides, ivf_topk
+
+    rows = [(i, v, 0 if i < 150 else 1) for i, v in _cone_rows(180)]
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    ).cache()
+
+    def nn():
+        got = ivf_topk(df, block_col="label", k=2).collect()
+        return {(r.vec_id, r.rank): (r.nn_id, r.label) for r in got}
+
+    one = nn()
+    monkeypatch.setattr(similarity, "BLOCK_ROWS", 32)
+    blocks = (
+        _block_grid(_sides(df, "vec_id", "embedding", "b", "label"), ["label"])
+        .select("label", "gq", "gc")
+        .distinct()
+        .groupBy("label")
+        .count()
+        .collect()
+    )
+    assert {r["label"]: r["count"] for r in blocks} == {0: 25, 1: 1}
+    assert nn() == one and len(one) == 2 * 180
 
 
 def test_ivf_trained_double_vectors_and_auto_cells(spark):
@@ -1430,18 +1486,24 @@ def test_bigram_logprob_sees_bad_transitions_unigram_misses(spark):
     assert bg[100] > bg[101]           # bigram is not
 
 
-def test_pq_topk_recall_vs_exact_and_edges(spark):
+def test_pq_topk_recall_vs_exact_and_edges(spark, monkeypatch):
     """PQ-ADC top-k vs exact integer-L2 top-k on the fixture: recall@3
     must clear a conservative floor (codebook quantization error only),
     and the ADC distance must equal |q - reconstruct(x)|^2 by
     construction (checked via the self-pair exclusion + determinism)."""
     import numpy as np
 
+    from pacts_spark.datapipe import similarity
     from pacts_spark.datapipe.similarity import pq_topk
 
     df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     got = pq_topk(df, k=3, m=8, k_codes=16, iters=2, rerank=32)
     rows = got.collect()
+    # the ADC shortlist merges per-block top-32s: tiled into 4 x 4 blocks
+    # (500 vectors at 128 per side) it must return the one-block rows
+    monkeypatch.setattr(similarity, "UNKEYED_BLOCK_ROWS", 128)
+    tiled = pq_topk(df, k=3, m=8, k_codes=16, iters=2, rerank=32).collect()
+    assert sorted(map(tuple, tiled)) == sorted(map(tuple, rows))
     by_q = {}
     for r in rows:
         by_q.setdefault(r.vec_id, []).append((r.rank, r.nn_id, r.d2))
