@@ -15,7 +15,6 @@ from pacts_spark.datapipe.dedup import (
     exact_duplicates,
     minhash_signatures,
     lsh_candidate_pairs,
-    minhash_dedup_pairs,
     ngram_jaccard_pairs,
     simhash64,
 )
@@ -49,7 +48,6 @@ __all__ = [
     "exact_duplicates",
     "minhash_signatures",
     "lsh_candidate_pairs",
-    "minhash_dedup_pairs",
     "ngram_jaccard_pairs",
     "simhash64",
     "cosine_topk",

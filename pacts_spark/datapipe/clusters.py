@@ -258,9 +258,11 @@ def leakage_safe_split(
     rule — deterministic, retry-independent, and nested: raising the
     rate strictly grows eval).
 
-    Scale: reuses ``dedup_clusters`` (O(log n) large-star/small-star CC
-    over the pair edges); the split itself is a pure projection on the
-    cluster id — no extra shuffle, no per-cluster grouping.
+    Scale: reuses ``dedup_clusters`` (connected components over the pair
+    edges: label propagation by default, rounds = component diameter;
+    ``algorithm='star'`` for O(log n) rounds on chain-shaped graphs); the
+    split itself is a pure projection on the cluster id — no extra
+    shuffle, no per-cluster grouping.
     """
     from pacts_spark.datapipe.sampling import _threshold, hash_bucket
 

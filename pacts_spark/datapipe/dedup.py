@@ -422,44 +422,6 @@ def lsh_candidate_pairs(
     )
 
 
-def minhash_dedup_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 64,
-    bands: int = 16,
-    shingle_n: int = 3,
-    threshold: float = 0.7,
-    seed: int = 42,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Full MinHash+LSH pipeline: signatures → banded candidates → verify
-    with estimated Jaccard (fraction of equal signature slots). Returns
-    (id_a, id_b, est_jaccard ≥ threshold). ``max_bucket`` forwards to
-    :func:`lsh_candidate_pairs` (hot-bucket candidate guard)."""
-    rows_per_band = k // bands
-    # lazy localCheckpoint: the banded self-join references sigs on BOTH
-    # sides — without it the k-permutation projection runs twice (measured
-    # ~25% of query wall at sf0.1). Checkpoint blocks release when the
-    # frame is GC'd (no unpersist handle needed — ADVICE round-2 pattern).
-    sigs = minhash_signatures(df, text_col, id_col, k, shingle_n, seed).localCheckpoint(
-        eager=False
-    )
-    cand = lsh_candidate_pairs(sigs, bands, rows_per_band, max_bucket=max_bucket)
-    sa = sigs.select(F.col("id").alias("id_a"), F.col("signature").alias("sig_a"))
-    sb = sigs.select(F.col("id").alias("id_b"), F.col("signature").alias("sig_b"))
-    j = cand.join(sa, "id_a").join(sb, "id_b")
-    eq = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v)
-    )
-    est = eq / F.lit(float(k))
-    return (
-        j.withColumn("est_jaccard", F.round(est, 6))
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
-    )
-
-
 def _token_hash(t: Column, token_hash: str) -> Column:
     """Per-token 64/60-bit hash.
 
@@ -505,8 +467,10 @@ def minhash_verified_pairs(
     unchanged) enables the hot-bucket candidate guard for self-similar
     corpora — see :func:`lsh_candidate_pairs` for the volume bound and
     the additional (documented) recall loss it trades."""
-    # lazy localCheckpoint: sigs feeds both sides of the band self-join
-    # (see minhash_dedup_pairs) — one signature pass instead of two
+    # lazy localCheckpoint: sigs feeds both sides of the band self-join, so
+    # without it the k-permutation projection runs twice (measured ~25% of
+    # query wall at sf0.1). Checkpoint blocks release when the frame is
+    # GC'd, so no unpersist handle is needed.
     sigs = minhash_signatures(df, text_col, id_col, k, shingle_n, seed).localCheckpoint(
         eager=False
     )

@@ -39,16 +39,12 @@ HEADER_SCHEMA = T.StructType(
 ENVELOPE_SCHEMA = T.StructType(
     [
         T.StructField("header", HEADER_SCHEMA),
-        # kept as raw JSON text: re-extracted with get_json_object /
-        # validated by the JSON-mode pandas UDF
+        # from_json keeps a StringType field's JSON subtree as its raw text;
+        # the JSON-mode pandas UDF validates it
         T.StructField("data", T.StringType()),
         T.StructField("metadata", T.MapType(T.StringType(), T.StringType())),
     ]
 )
-
-# Spark's JacksonParser can surface the raw text of a JSON subtree when the
-# target field type is StringType only in permissive modes; the portable way
-# to keep `data` raw is get_json_object on the original string.
 
 
 def parse_envelopes(
@@ -57,17 +53,16 @@ def parse_envelopes(
     """JSON string column → (header struct, data raw-JSON string, metadata).
 
     Parity with PactsService.parseEnvelope (PactsService.java:127-131).
-    One scan, built-in JSON expressions only. ``keep`` carries key columns
-    (e.g. a message/event id) alongside the parsed envelope.
+    One ``from_json`` per row; a duplicate key takes its last value, as
+    Jackson and ``json.loads`` do. ``keep`` carries key columns (e.g. a
+    message/event id) alongside the parsed envelope.
     """
-    src = F.col(json_col)
-    outer = T.StructType([T.StructField("header", HEADER_SCHEMA)])
-    return df.select(
-        *[F.col(c) for c in keep],
-        F.from_json(src, outer).getField("header").alias("header"),
-        F.get_json_object(src, "$.data").alias("data"),
-        F.from_json(F.get_json_object(src, "$.metadata"), T.MapType(T.StringType(), T.StringType())).alias("metadata"),
+    # expanded in a second projection: field accesses on the from_json call
+    # itself would each be rewritten into a pruned from_json of their own
+    parsed = df.select(
+        *keep, F.from_json(F.col(json_col), ENVELOPE_SCHEMA).alias("_envelope")
     )
+    return parsed.select(*keep, "_envelope.*")
 
 
 def envelope_json(

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from pacts_spark.datapipe.dedup import (
     chunk_dedup,
     exact_duplicates,
-    minhash_dedup_pairs,
+    minhash_verified_pairs,
     ngram_jaccard_pairs,
     simhash64,
     simhash_near_pairs,
@@ -596,10 +596,10 @@ def test_ngram_jaccard(docs):
 
 def test_minhash_lsh(docs):
     pairs = {
-        (r.id_a, r.id_b): r.est_jaccard
-        for r in minhash_dedup_pairs(docs, threshold=0.5).collect()
+        (r.id_a, r.id_b): r.jaccard
+        for r in minhash_verified_pairs(docs, threshold=0.5).collect()
     }
-    assert pairs[(1, 2)] == 1.0  # identical docs → identical signatures
+    assert pairs[(1, 2)] == 1.0  # identical docs → identical shingle sets
     assert (1, 3) in pairs       # near dup must be found
     assert not any(4 in p for p in pairs)
 

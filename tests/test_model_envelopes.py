@@ -134,3 +134,30 @@ def test_adversarial_envelope_battery_never_crashes(spark, engine):
                 or p.startswith("Validation error: ")
             )
             assert ok, (r.i, r.error_message)
+
+
+def test_duplicate_data_key_takes_the_last_value(spark, engine, registry):
+    """A duplicate ``data`` key parses to its LAST value, as Jackson's
+    readTree and json.loads (the oracle) do: the first value here is
+    invalid and the last one is valid."""
+    from pacts_spark.oracle import validate_envelope
+
+    hdr = '{"schema_version": "v1", "schema_category": "inventory", "schema_name": "inventory_item"}'
+    wire = (
+        '{"header": ' + hdr + ', "data": {"slot": "one", "material": "P", "amount": 2},'
+        ' "data": {"slot": 1, "material": "P", "amount": 2}}'
+    )
+    env = json.loads(wire)
+    want = validate_envelope(
+        env["header"], env["data"], registry.as_validator_dict()
+    ).error_message
+    df = spark.createDataFrame([(wire,)], "value string")
+    got = engine.validate_envelopes(parse_envelopes(df)).collect()[0]
+    assert got.error_message == want
+
+
+def test_parse_envelopes_is_one_json_parse(spark):
+    df = spark.createDataFrame([("{}",)], "value string")
+    plan = parse_envelopes(df)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("from_json(") == 1
+    assert "get_json_object" not in plan

@@ -70,9 +70,6 @@ def main() -> int:
             print(f"{name:28s} SPARK-ERROR {type(exc).__name__}: "
                   f"{(str(exc).splitlines() or [repr(exc)])[0][:160]}")
             continue
-        if name not in oracles:
-            print(f"{name:28s} rows-only: {len(srows)} rows")
-            continue
         try:
             orel = con.execute(oracles[name])
             ocols = [d[0] for d in orel.description]
