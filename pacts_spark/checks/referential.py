@@ -32,7 +32,10 @@ def ri_violations(
     ``dim[dim_key]``; tagged with an engine violation message
     ``Referential violation: {fact_key}=<v> not in dimension``."""
     dim_key = dim_key or fact_key
-    d = dim.select(F.col(dim_key).alias(fact_key)).distinct()
+    # no distinct(): a left-anti join keeps a fact row iff no dim row
+    # matches, so duplicate or NULL dim keys cannot change the result —
+    # deduping them only costs an exchange and a stage
+    d = dim.select(F.col(dim_key).alias(fact_key))
     if use_broadcast:
         d = F.broadcast(d)
     orphans = fact.filter(F.col(fact_key).isNotNull()).join(

@@ -7,27 +7,55 @@ Scale design: one ``groupBy(partition, column)`` pass over the rows
 exploded to one entry per column computes ALL per-column aggregates in a
 single shuffle — partial aggregation (map-side combine) means the
 shuffle carries one row per (mapper, partition, column), not per input
-row. ``approx_count_distinct`` is an HLL++ sketch (mergeable, constant
-memory); ``exact_distinct=True`` dedupes on the value first (a second
-shuffle), for oracle-comparable small-scale runs.
+row. The approximate distinct count is ONE DataSketches HLL sketch per
+(partition, column) group, fed a 64-bit hash of the value, so every
+column type shares one sketch definition; ``exact_distinct=True``
+dedupes on the value first (a second shuffle), for oracle-comparable
+small-scale runs.
 
-Why long form: the sketch's cost is fixed, not per row. At rsd=0.01 its
-aggregation buffer is 1,639 longs, and every task generates projection
-code over all buffer fields. Over 100 rows at local[4] (4-core host), one
-sketch took 1.5 s and five took 6.1 s, ~1.15 s per extra sketch (at
-rsd=0.05: 0.21 s and 0.35 s). One sketch per column TYPE, not per
-column, pays that cost 2 times instead of 5 on the transcripts columns.
+Cost: a distinct sketch is paid per input task, not once. Spark's HLL++
+(``approx_count_distinct``) at rsd 0.01 carries a 1,639-long buffer in a
+non-codegen aggregate and, next to the string min/max, planned the
+aggregate as a sort; its stats CPU grew with the input tasks (1.0–1.4 s
+with 1 task, 3.6 s with 4, 12.5–14.1 s with 16 at local[4]). The
+DataSketches sketch (``hll_sketch_agg``) plans as one
+``ObjectHashAggregate`` and took a third of that CPU on the benchmark's
+stats write (10 days × 5 columns, 4 tasks).
 """
 
 from __future__ import annotations
 
-from functools import reduce
-from operator import add
+import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pacts_spark.datapipe.similarity import VECTOR_MAX_ABS, healthy_element
+
+
+def hll_lg_k(rsd: float) -> int:
+    """HLL++'s register-count formula, ``ceil(2·log2(1.106/rsd))``, as a
+    DataSketches ``lgConfigK``: rsd 0.01 → 14 (16,384 registers, as
+    HLL++ holds). Raises ``ValueError`` outside the sketch's range 4–21
+    (rsd above ~0.39 or below ~0.00077)."""
+    lg_k = math.ceil(2 * math.log2(1.106 / rsd)) if rsd > 0 else None
+    if lg_k is None or not 4 <= lg_k <= 21:
+        raise ValueError(
+            f"rsd={rsd} maps to no lgConfigK in 4-21, the range hll_sketch_agg accepts"
+        )
+    return lg_k
+
+
+def hll_distinct(h: Column, lg_k: int) -> Column:
+    """Approximate distinct count of the non-NULL 64-bit hashes ``h``
+    (NULLs are not counted).
+
+    The estimate goes through a union of the sketch with itself, which
+    forces the composite estimator: a plain ``hll_sketch_estimate`` keeps
+    the HIP estimator for a group whose rows all sat in one input
+    partition, so its value would depend on how the input was split."""
+    s = F.hll_sketch_agg(h, lg_k)
+    return F.hll_sketch_estimate(F.hll_union(s, s))
 
 
 def column_stats(
@@ -43,27 +71,43 @@ def column_stats(
     long-form table).
 
     Each input row explodes into one entry per column — (column, null
-    flag, value as string, value in its own type) — and ONE
+    flag, value as string, value identity) — and ONE
     ``groupBy(part, column)`` aggregates them: one shuffle for all
-    columns. The typed value sits in the slot of its column's type (one
-    slot per distinct type, NULL elsewhere), so the aggregate holds one
-    distinct counter per column TYPE, and each counter still sees its
-    column's values in their own type (HLL++ hashes by type).
-    ``exact_distinct=True`` dedupes on (part, column, value) first and
-    counts the non-NULL groups — the same answer as ``count(DISTINCT)``.
+    columns.
+
+    - Approximate (default): the identity is a 64-bit ``xxhash64`` of
+      the value in its own type, and each group holds one DataSketches
+      HLL sketch (:func:`hll_distinct`) with ``lgConfigK`` from
+      :func:`hll_lg_k` (``ValueError`` for an ``rsd`` outside its
+      range). The estimate does not depend on the input's partitioning.
+      The aggregate is an ``ObjectHashAggregate``: past 128 (part,
+      column) groups in one task
+      (``spark.sql.objectHashAggregate.sortBased.fallbackThreshold``)
+      it falls back to sorting that task's entries — still correct,
+      slower.
+    - ``exact_distinct=True``: the identity is the value in its own type
+      (one slot per distinct column type, NULL elsewhere); the entries
+      are deduped on (part, column, value) first and the non-NULL groups
+      counted — the same answer as ``count(DISTINCT)``.
     """
     types = {f.name: f.dataType for f in df.select(*columns).schema.fields}
-    slots = list(dict.fromkeys(types[c] for c in columns))
+    if exact_distinct:
+        slots = list(dict.fromkeys(types[c] for c in columns))
+        vals = [f"v{i}" for i in range(len(slots))]
+    else:
+        lg_k = hll_lg_k(rsd)
 
     def entry(c: str, v: Column, nul: Column) -> Column:
-        return F.struct(
-            F.lit(c).alias("column"),
-            nul.alias("nul"),
-            v.cast("string").alias("s"),
-            *[
+        if exact_distinct:
+            ident = [
                 (v if types[c] == t else F.lit(None).cast(t)).alias(f"v{i}")
                 for i, t in enumerate(slots)
-            ],
+            ]
+        else:
+            # NULL stays NULL, so the sketch does not count it
+            ident = [F.when(v.isNotNull(), F.xxhash64(v)).alias("h")]
+        return F.struct(
+            F.lit(c).alias("column"), nul.alias("nul"), v.cast("string").alias("s"), *ident
         )
 
     if partition_col is None:
@@ -88,7 +132,6 @@ def column_stats(
             )
         )
 
-    vals = [f"v{i}" for i in range(len(slots))]
     if exact_distinct:
         # one group per distinct value: min(s) is non-NULL iff the value is
         long = long.groupBy("part", "column", *vals).agg(
@@ -108,10 +151,7 @@ def column_stats(
         aggs = [
             F.count("nul").alias("n_rows"),
             F.sum("nul").alias("n_nulls"),
-            # a column's non-own slots are all NULL: their counters add 0
-            reduce(add, [F.approx_count_distinct(v, rsd) for v in vals]).alias(
-                "n_distinct"
-            ),
+            hll_distinct(F.col("h"), lg_k).alias("n_distinct"),
             F.min("s").alias("min_value"),
             F.max("s").alias("max_value"),
         ]

@@ -286,15 +286,23 @@ def _topk_rows(key, qids, cids, k: int):
     """Row/column indices of every query's ``k`` best candidates: ``key``
     ascending, ties to the smaller candidate id; a candidate with the
     query's own id is never one (self is masked by id EQUALITY, so a
-    vec_id that occurs twice is not its own neighbour)."""
+    vec_id that occurs twice is not its own neighbour).
+
+    A per-row ``np.partition`` finds each row's k-th smallest non-self
+    key; only the candidates not above it (every tie at the k-th key
+    included) are sorted, not the whole block."""
     not_self = qids[:, None] != cids[None, :]
-    ii, jj = [], []
-    for i in range(key.shape[0]):
-        order = np.lexsort((cids, key[i]))
-        order = order[not_self[i, order]][:k]
-        ii.extend([i] * len(order))
-        jj.extend(order)
-    return np.asarray(ii, dtype=np.int64), np.asarray(jj, dtype=np.int64)
+    if 0 < k < key.shape[1]:
+        top = np.inf if key.dtype.kind == "f" else np.iinfo(key.dtype).max
+        kth = np.partition(np.where(not_self, key, top), k - 1, axis=1)[:, k - 1 : k]
+        # ``~(>)``, not ``<=``: a NaN key or k-th key keeps the candidate
+        not_self &= ~(key > kth)
+    ii, jj = np.nonzero(not_self)
+    order = np.lexsort((cids[jj], key[ii, jj], ii))
+    ii, jj = ii[order], jj[order]
+    # rank within the row: position minus the row's first position
+    keep = np.arange(len(ii)) - np.searchsorted(ii, ii) < k
+    return ii[keep].astype(np.int64), jj[keep].astype(np.int64)
 
 
 def _block_topk(k: int):

@@ -2,18 +2,22 @@
 
 The oracle harness can only verify the EXACT twins (approx sketches are
 not SQL-reproducible), so the sketch paths that actually run at scale —
-``approx_count_distinct`` (checks/stats.py) and ``percentile_approx``
+the HLL distinct count (checks/stats.py) and ``percentile_approx``
 (checks/timegaps.py:gap_quantiles) — get differential tolerance tests
 here against their exact counterparts on inputs large enough for the
-error statistics to mean something (1M distinct keys / 4M gaps).
+error statistics to mean something (1M distinct keys / 4M gaps), plus a
+low-cardinality case (1,000 keys) for the sketch.
 
 Tolerance constants (documented, not folklore):
 
-- HLL++ with rsd=0.01: rsd IS the relative standard deviation, so a
-  single measurement lands within 3*rsd with ~99.7% probability. The
-  inputs are fixed (deterministic generators, fixed sketch seed inside
-  Spark), so the test is not flaky — it pins that THIS sketch
-  configuration on THIS cardinality is inside the 3-sigma band.
+- HLL with rsd=0.01: ``column_stats`` sizes the DataSketches sketch with
+  HLL++'s own formula (lgConfigK 14, 16,384 registers), whose relative
+  standard error is ~1.04/sqrt(16384) ≈ 0.8% ≤ rsd, so a single
+  measurement lands within 3*rsd with >99.7% probability. The inputs
+  are fixed (deterministic generators, xxhash64 with a fixed seed) and
+  the estimate does not depend on the input's partitioning, so the test
+  is not flaky — it pins that THIS sketch configuration on THIS
+  cardinality is inside the 3-sigma band.
 - percentile_approx(accuracy=10000) bounds the RANK error by
   n/accuracy. A rank-epsilon of n/10000 on a quantile q maps to a value
   error of (value range spanned by ±n/10000 ranks around q); on a
@@ -66,6 +70,17 @@ def test_approx_count_distinct_within_3rsd(spark):
     # exact twin agrees with the closed form (sanity for the test itself)
     exact = column_stats(df, ["key"], exact_distinct=True).collect()[0]["n_distinct"]
     assert exact == exact_n
+
+
+def test_approx_count_distinct_low_cardinality_within_3rsd(spark):
+    """The same bound where the sketch is far from full: 1,000 distinct
+    values (+ nulls) over 200,000 rows."""
+    n = 1_000
+    df = spark.range(200_000).select(
+        F.when(F.col("id") % 89 != 0, F.col("id") % n).alias("key")
+    )
+    approx = column_stats(df, ["key"], rsd=0.01).collect()[0]["n_distinct"]
+    assert abs(approx - n) / n <= 0.03, f"HLL rsd=0.01 gave {approx} for {n}"
 
 
 @pytest.fixture(scope="module")

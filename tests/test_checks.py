@@ -20,6 +20,7 @@ from pacts_spark.checks import (
     uniqueness_violations,
 )
 from pacts_spark.checks.drift import drift_scores_pandas
+from pacts_spark.checks.stats import hll_distinct, hll_lg_k
 from pacts_spark.checks.uniqueness import duplicate_keys_hashed
 from pacts_spark.transcripts import conversations_dim, tools_dim, transcripts_from_events
 
@@ -88,11 +89,15 @@ def _standalone(df, c, distinct):
 
 @pytest.mark.parametrize("exact", [False, True])
 def test_column_stats_parity_with_standalone_aggregates(mixed, exact):
-    """Every column's row equals that column's own aggregate: HLL++ at the
-    same rsd (one sketch per column type hashes each value in its own
-    type, as a per-column sketch does), or count(DISTINCT) when exact."""
+    """Every column's row equals that column's own aggregate: a standalone
+    HLL sketch of the column's value hashes at the same rsd, or
+    count(DISTINCT) when exact."""
     rsd = 0.05
-    distinct = F.count_distinct if exact else (lambda c: F.approx_count_distinct(c, rsd))
+
+    def sketch(c):
+        return hll_distinct(F.when(F.col(c).isNotNull(), F.xxhash64(c)), hll_lg_k(rsd))
+
+    distinct = F.count_distinct if exact else sketch
     want = {}
     for c in _PARITY_COLS:
         want.update(_standalone(mixed, c, distinct))
@@ -118,6 +123,39 @@ def test_column_stats_empty_input(mixed, exact):
     assert column_stats(
         empty, _PARITY_COLS, partition_col="part", exact_distinct=exact
     ).collect() == []
+
+
+def test_hll_lg_k_from_rsd(mixed):
+    # HLL++'s register count: rsd 0.01 -> 2^14 registers, 0.05 -> 2^9
+    assert hll_lg_k(0.01) == 14 and hll_lg_k(0.05) == 9
+    for rsd in (0.5, 0.0005, 0.0, -0.01):  # lgConfigK 3, 22; no log
+        with pytest.raises(ValueError, match="lgConfigK"):
+            hll_lg_k(rsd)
+    with pytest.raises(ValueError, match="lgConfigK"):
+        column_stats(mixed, ["s"], rsd=0.5)
+
+
+def test_column_stats_distinct_independent_of_layout(spark):
+    """The approximate n_distinct of a group must not depend on how the
+    input is split into partitions: 5,000 distinct values per part,
+    read as 1 partition, 7 partitions and the default split."""
+    df = spark.range(60_000).select(
+        (F.col("id") % 3).cast("string").alias("part"),
+        F.concat(F.lit("k"), F.col("id") % 15_000).alias("s"),
+        (F.col("id") % 15_000 * 7).alias("b"),
+    )
+
+    def n_distinct(d):
+        return {
+            (r.part, r.column): r.n_distinct
+            for r in column_stats(d, ["s", "b"], partition_col="part").collect()
+        }
+
+    base = n_distinct(df)
+    # exactly 5,000 per group; rsd 0.01 -> within 3*rsd
+    assert len(base) == 6 and all(abs(n - 5_000) <= 150 for n in base.values()), base
+    assert n_distinct(df.repartition(1)) == base
+    assert n_distinct(df.repartition(7)) == base
 
 
 def test_duplicate_keys_plain_hashed_and_counter_agree(transcripts):
@@ -170,6 +208,17 @@ def test_ri_null_keys_excluded(spark):
     dim = spark.createDataFrame([("y",)], "k string")
     out = ri_violations(fact, dim, "k").collect()
     assert len(out) == 1 and out[0].k == "x"
+
+
+def test_ri_duplicate_and_null_dim_keys_change_nothing(spark):
+    fact = spark.createDataFrame([("x",), ("y",), ("y",), ("z",), (None,)], "k string")
+    dedup = spark.createDataFrame([("y",)], "k string")
+    dirty = spark.createDataFrame([("y",), ("y",), (None,), ("y",)], "k string")
+    want = sorted(ri_violations(fact, dedup, "k").collect())
+    assert [r.k for r in want] == ["x", "z"]
+    for use_broadcast in (True, False):
+        got = ri_violations(fact, dirty, "k", use_broadcast=use_broadcast).collect()
+        assert sorted(got) == want
 
 
 def test_drift_identical_distributions_near_zero(spark):

@@ -14,7 +14,7 @@ from pacts_spark.datapipe.dedup import (
     simhash_near_pairs,
     word_shingles,
 )
-from pacts_spark.datapipe.similarity import cosine_topk, lsh_ann_topk
+from pacts_spark.datapipe.similarity import _topk_rows, cosine_topk, lsh_ann_topk
 from pacts_spark.datapipe.textstats import doc_fingerprint, language_id, text_stats
 from tests.conftest import SF_SMALL
 
@@ -675,6 +675,40 @@ def test_simhash(docs):
     near = {(r.id_a, r.id_b): r.hamming for r in simhash_near_pairs(docs, max_hamming=10, small_corpus=True).collect()}
     assert near[(1, 2)] == 0
     assert (1, 3) in near and near[(1, 3)] <= 10
+
+
+def _topk_rows_per_row_loop(key, qids, cids, k):
+    """The plain reference: one full lexsort per query row."""
+    import numpy as np
+
+    not_self = qids[:, None] != cids[None, :]
+    ii, jj = [], []
+    for i in range(key.shape[0]):
+        order = np.lexsort((cids, key[i]))
+        order = order[not_self[i, order]][:k]
+        ii.extend([i] * len(order))
+        jj.extend(order)
+    return np.asarray(ii, dtype=np.int64), np.asarray(jj, dtype=np.int64)
+
+
+def test_topk_rows_threshold_equals_per_row_sort():
+    """The partition-threshold top-k picks exactly what a full per-row
+    sort picks: tie-heavy integer and float keys, duplicated vec_ids
+    (self masked by id equality), k above the candidate count."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    for case in range(300):
+        m, n = int(rng.integers(1, 25)), int(rng.integers(1, 25))
+        k = int(rng.integers(1, 30))  # often > n
+        key = rng.integers(0, 3, size=(m, n))  # ties everywhere
+        if case % 2:
+            key = -key / 2.0  # float keys, -0.0 among them
+        qids = rng.integers(0, 8, m)  # duplicated ids on both sides
+        cids = rng.integers(0, 8, n)
+        want = _topk_rows_per_row_loop(key, qids, cids, k)
+        got = _topk_rows(key, qids, cids, k)
+        assert all(np.array_equal(w, g) and g.dtype == np.int64 for w, g in zip(want, got))
 
 
 def test_cosine_topk_exact(spark):

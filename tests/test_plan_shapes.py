@@ -13,7 +13,7 @@ reintroduce a scale-killer:
 - referential integrity is a broadcast LEFT ANTI hash join (never a
   shuffle join on the fact side);
 - column stats compute every column's aggregates in ONE shuffle, with
-  one distinct sketch per column type;
+  one HLL sketch in an ObjectHashAggregate (no sort-based aggregate);
 - drift scores plan at most 6 exchanges;
 - the validator's scan is column-pruned to the columns the schema
   actually checks;
@@ -125,21 +125,22 @@ def test_colstats_all_columns_in_one_shuffle(spark):
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
-def test_colstats_one_sketch_per_column_type(spark):
-    """An HLL++ sketch at rsd 0.01 has a fixed cost per task (1,639
-    buffer longs); the five transcripts columns have two types (string,
-    int), so the aggregate holds two sketches, not five."""
+def test_colstats_one_hll_sketch_in_object_hash_aggregate(spark):
+    """The approximate distinct count is ONE DataSketches HLL sketch per
+    (part, column) group, in an ObjectHashAggregate: no HLL++
+    (approx_count_distinct) and no SortAggregate over the exploded
+    entries."""
     import re
 
     from pacts_spark.checks import column_stats
 
     t = entry._transcripts(spark, str(SF_SMALL))
     cols = ["conv_id", "turn_idx", "role", "text", "tool"]
-    n_types = len({t.schema[c].dataType for c in cols})
-    plan = column_stats(t, cols, partition_col="role")._jdf.queryExecution()
-    opt = plan.optimizedPlan().toString()
-    assert n_types == 2
-    assert len(re.findall(r"approx_count_distinct\(", opt)) == n_types, opt
+    plan = _plan(column_stats(t, cols, partition_col="role"))
+    # the final aggregate's sketch; the map side's is partial_hll_sketch_agg
+    assert len(re.findall(r"\bhll_sketch_agg\(", plan)) == 1, plan
+    assert "approx_count_distinct" not in plan and "SortAggregate" not in plan, plan
+    assert "ObjectHashAggregate" in plan, plan
 
 
 def test_drift_plan_has_at_most_six_exchanges(spark, tmp_path):
