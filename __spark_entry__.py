@@ -461,9 +461,10 @@ FROM t GROUP BY 1, 2
 
 def _q_drift_roles(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _transcripts(spark, sf_dir)
-    cur = category_histogram(t, "role", day_part())
-    base = category_histogram(t, "role")
-    return drift_scores(cur, base)
+    # the per-part histogram is also the baseline (drift_scores sums it
+    # over parts), as in ValidationRun.run
+    hist = category_histogram(t, "role", day_part())
+    return drift_scores(hist, hist)
 
 
 _DRIFT_SQL = f"""

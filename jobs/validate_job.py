@@ -42,7 +42,7 @@ def main() -> None:
         "--table-format",
         default="parquet",
         choices=["parquet", "iceberg"],
-        help="table adapter: scan/replace-where/manifest-upsert seam "
+        help="table adapter: pending-scan/replace-where seam "
         "(iceberg requires the runtime jar + catalog conf)",
     )
     ap.add_argument("--category", default="transcripts")

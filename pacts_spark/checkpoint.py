@@ -17,8 +17,9 @@ at file granularity; readers take the LATEST status per partition by
       pass boolean, run_id string, lineage string, finished_seq bigint)
     USING iceberg PARTITIONED BY (run_id)
 
-and ``record()`` becomes a MERGE INTO (idempotent upsert); the engine code
-is unchanged — only the reader/writer format string differs.
+and ``record()``'s append + latest-seq-wins read carries over unchanged
+(re-recording stays idempotent without a MERGE) — only the reader/writer
+format string differs.
 """
 
 from __future__ import annotations
@@ -81,19 +82,18 @@ class ValidationManifest:
         run_id: str,
         seq: int,
         lineage: str = "",
-        status_col: str = "pass",
     ) -> None:
         """Append per-partition outcomes. ``seq`` is a caller-supplied
         monotone sequence (injected, never now() — SURVEY.md §7(d));
         latest-seq-wins on read makes re-recording idempotent."""
         out = verdicts.select(
             F.col("part").cast("string").alias("part"),
-            F.when(F.col(status_col), F.lit("validated"))
+            F.when(F.col("pass"), F.lit("validated"))
             .otherwise(F.lit("failed"))
             .alias("status"),
             F.col("n_rows").cast("long"),
             F.col("n_violations").cast("long"),
-            F.col(status_col).alias("pass"),
+            F.col("pass"),
             F.lit(run_id).alias("run_id"),
             F.lit(lineage).alias("lineage"),
             F.lit(seq).cast("long").alias("finished_seq"),

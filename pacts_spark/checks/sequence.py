@@ -6,9 +6,9 @@ cross-row state exists anywhere in its engine). A transcripts table at
 indexes must be contiguous, timestamps must not run backwards within a
 conversation, and dialogue roles must not stutter. This module is the
 engine extension for those SEQUENCE contracts, emitting violation rows
-in the same ``(conv_id, turn_idx, check_name, violation)`` shape the
-runner unions (runner.py), so a production run can opt in without a new
-output schema.
+in the ``(conv_id, turn_idx, check_name, violation)`` shape of the
+runner's engine-check rows (runner.py), so a caller can union them into
+its violations without a new output schema.
 
 Scale design: ONE exchange on the conversation key. All three checks
 ride a single window spec — lag(turn_idx), lag(role) and a running
@@ -53,13 +53,10 @@ def sequence_violations(
     ts_col: str = "ts",
     order_tail: tuple[str, ...] = ("text", "tool"),
     repeat_roles: tuple[str, ...] = ("user", "assistant"),
-    passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
     """Sequence-contract violation rows, one exchange on ``conv_col``.
 
-    Returns ``(conv_id, turn_idx, check_name='sequence', violation)``
-    plus any ``passthrough`` columns carried from the violating row
-    (the runner passes its partition column through here).
+    Returns ``(conv_id, turn_idx, check_name='sequence', violation)``.
     ``order_tail`` pins a total order for rows tying on (idx, ts, role)
     so cross-engine twins agree row-for-row.
     """
@@ -116,14 +113,12 @@ def sequence_violations(
             F.col(conv_col).alias("conv_id"),
             idx.alias("turn_idx"),
             violations.alias("_v"),
-            *passthrough,
         )
         .select(
             "conv_id",
             "turn_idx",
             F.lit("sequence").alias("check_name"),
             F.explode("_v").alias("violation"),
-            *passthrough,
         )
     )
 
@@ -138,16 +133,15 @@ def conversation_shape_violations(
     close_roles: tuple[str, ...] = ("assistant",),
     min_turns: int = 1,
     max_turns: int | None = None,
-    part_col: Column | None = None,
 ) -> DataFrame:
     """Conversation-LEVEL shape contracts — who may open, who must
     close, and how long a dialogue may run. Another cross-row family
     the reference's per-row engine cannot express: the verdict is a
     property of the whole conversation, not any single turn.
 
-    Emits the runner's ``(conv_id, turn_idx, check_name='shape',
-    violation)`` rows, anchored at the opening turn (open / too-short)
-    or the closing turn (close / too-long):
+    Emits ``(conv_id, turn_idx, check_name='shape', violation)`` rows,
+    anchored at the opening turn (open / too-short) or the closing turn
+    (close / too-long):
 
     - "Conversation opens with role 'r'"   (first role ∉ open_roles)
     - "Conversation ends with role 'r'"    (last role ∉ close_roles)
@@ -166,7 +160,7 @@ def conversation_shape_violations(
     check's violation).
     """
     idx = F.col(idx_col)
-    key_fields = [
+    key = F.struct(
         idx.alias("i"),
         F.coalesce(F.col(role_col), F.lit("")).alias("r"),
         *[
@@ -174,13 +168,7 @@ def conversation_shape_violations(
             for i, c in enumerate(order_tail)
         ],
         F.col(role_col).alias("role_raw"),
-    ]
-    if part_col is not None:
-        # payload tail: the anchor row's partition rides the endpoint
-        # struct so runner rows carry the anchor turn's part (affects
-        # comparison only on rows identical in every key field)
-        key_fields.append(part_col.cast("string").alias("part"))
-    key = F.struct(*key_fields)
+    )
     agg = (
         transcripts.filter(idx.isNotNull())
         .groupBy(F.col(conv_col).alias("conv_id"))
@@ -224,10 +212,6 @@ def conversation_shape_violations(
                 ),
             )
         )
-    def _anchor_part(anchor: Column) -> Column:
-        # anchor is first/last struct; its carried part (when requested)
-        return anchor.getField("part")
-
     slots = F.array(
         *[
             F.when(
@@ -235,24 +219,16 @@ def conversation_shape_violations(
                 F.struct(
                     anchor.getField("i").alias("turn_idx"),
                     msg.alias("violation"),
-                    *(
-                        [_anchor_part(anchor).alias("part")]
-                        if part_col is not None
-                        else []
-                    ),
                 ),
             )
             for cond, anchor, msg in checks
         ]
     )
-    out_cols = [
+    return agg.select(
+        "conv_id", F.explode(F.array_compact(slots)).alias("_v")
+    ).select(
         "conv_id",
         F.col("_v.turn_idx").alias("turn_idx"),
         F.lit("shape").alias("check_name"),
         F.col("_v.violation").alias("violation"),
-    ]
-    if part_col is not None:
-        out_cols.append(F.col("_v.part").alias("part"))
-    return agg.select(
-        "conv_id", F.explode(F.array_compact(slots)).alias("_v")
-    ).select(*out_cols)
+    )

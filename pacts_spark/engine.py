@@ -193,7 +193,7 @@ class PactsEngine:
 
     @staticmethod
     def partition_verdicts(
-        validated: DataFrame, partition_col: Column | str, alias: str = "part"
+        validated: DataFrame, partition_col: Column | str
     ) -> DataFrame:
         """Per-partition pass/fail verdict (ValidationResult.valid lifted to
         partition granularity — SURVEY.md §2.4). One shuffle keyed by the
@@ -201,7 +201,7 @@ class PactsEngine:
         heavy lifting map-side."""
         pcol = F.col(partition_col) if isinstance(partition_col, str) else partition_col
         return (
-            validated.groupBy(pcol.alias(alias))
+            validated.groupBy(pcol.alias("part"))
             .agg(
                 F.every("valid").alias("pass"),
                 F.sum(F.size("errors")).alias("n_violations"),

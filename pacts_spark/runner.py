@@ -1,7 +1,7 @@
 """ValidationRun — the end-to-end pipeline (SURVEY.md §3.3 Spark lifecycle).
 
 source scan (pending partitions only) → fused row-check projection →
-engine checks (uniqueness, referential, opt-in sequence/shape) →
+engine checks (uniqueness on (conv_id, turn_idx), referential integrity) →
 violations (schema + engine-check rows, range-sorted) / per-partition
 verdicts → stats, drift, gaps → manifest record (``run_and_write``).
 
@@ -14,12 +14,13 @@ counterpart of the null-safe key semantics of the uniqueness check.
 
 Shuffles: uniqueness (hashed phase-1 groupBy + candidate re-group), the
 verdict groupBys (partition-keyed, AQE-coalesced), stats (ONE groupBy on
-(part, column) over the rows exploded per column), drift (the two role
-histograms, one groupBy(part) of the current one, the baseline reduced
-to one broadcast row, and the output sort), the lag window (conv-keyed)
-and the violations range sort. RI joins are broadcast. Every output is a
-separate action that re-reads the input, so production input should be
-a materialized table, not an expensive derivation.
+(part, column) over the rows exploded per column), drift (ONE per-part
+role histogram, read as both the current and the baseline input; its
+groupBy(part), the baseline reduced to one broadcast row, and the output
+sort), the lag window (conv-keyed) and the violations range sort. RI
+joins are broadcast. Every output is a separate action that re-reads the
+input, so production input should be a materialized table, not an
+expensive derivation.
 """
 
 from __future__ import annotations
@@ -77,7 +78,8 @@ class ValidationRun:
 
     def _verdicts(self, validated: DataFrame, checks: DataFrame) -> DataFrame:
         """Per-partition verdict from the validated rows and the engine-check
-        violation rows (``checks``: one row per violation, ``part`` column)."""
+        violation rows (``checks``: one uniqueness or RI row per violation,
+        ``part`` column)."""
         rows = self.engine.partition_verdicts(validated, day_part())
         counts = checks.groupBy(F.col("part").alias("check_part")).agg(
             F.count(F.lit(1)).alias("n_check")
@@ -101,9 +103,6 @@ class ValidationRun:
         conversations: DataFrame | None = None,
         tools: DataFrame | None = None,
         pending_filtered: bool = False,
-        sequence_checks: bool = False,
-        shape_checks: bool = False,
-        shape_kwargs: dict | None = None,
     ) -> RunResult:
         part = day_part()
 
@@ -140,37 +139,6 @@ class ValidationRun:
                 F.lit("uniqueness").alias("check"), "violation",
             )
         ]
-        if sequence_checks:
-            # opt-in (default off keeps existing outputs byte-stable):
-            # gap / ts-regression / role-stutter rows from ONE conv-keyed
-            # window exchange (checks/sequence.py)
-            from pacts_spark.checks.sequence import sequence_violations
-
-            checks.append(
-                sequence_violations(
-                    transcripts.withColumn("part", part), passthrough=("part",)
-                ).select(
-                    "conv_id", "turn_idx", "part",
-                    F.col("check_name").alias("check"), "violation",
-                )
-            )
-        if shape_checks:
-            # opt-in conversation-LEVEL contracts (opener/closer role,
-            # length bounds): ONE conv-keyed aggregate, endpoint structs
-            # combine map-side (checks/sequence.py). The violation row
-            # carries the ANCHOR turn's partition (a conversation may
-            # span parts; the opener anchors open/too-short rows, the
-            # closer anchors close/too-long rows).
-            from pacts_spark.checks.sequence import conversation_shape_violations
-
-            checks.append(
-                conversation_shape_violations(
-                    transcripts, part_col=part, **(shape_kwargs or {})
-                ).select(
-                    "conv_id", "turn_idx", F.col("part").cast("date").alias("part"),
-                    F.col("check_name").alias("check"), "violation",
-                )
-            )
         if conversations is not None:
             checks.append(
                 ri_violations(transcripts, conversations, "conv_id").select(
@@ -202,10 +170,10 @@ class ValidationRun:
             ["conv_id", "turn_idx", "role", "text", "tool"],
             partition_col=part,
         )
-        drift = drift_scores(
-            category_histogram(transcripts, "role", part),
-            category_histogram(transcripts, "role"),
-        )
+        # the per-part histogram is also the baseline: drift_scores sums
+        # it over parts, so the input is scanned and aggregated once
+        role_hist = category_histogram(transcripts, "role", part)
+        drift = drift_scores(role_hist, role_hist)
         gaps = gap_quantiles(transcripts, partition_col=part)
 
         # NOTE: run() does NOT record to the manifest — recording before the

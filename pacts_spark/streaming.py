@@ -114,21 +114,9 @@ def consume(
     load the raw-payload stream and attach the JSON-mode validation
     projection. Batch/stream symmetric — the compiled validator is the
     same Column tree either way."""
-    return validate_stream(
-        engine, source.load(spark, location), category, name, json_col=payload_col
+    return engine.validate_data(
+        source.load(spark, location), category, name, json_col=payload_col
     )
-
-
-def validate_stream(
-    engine: PactsEngine,
-    stream: DataFrame,
-    category: str,
-    name: str,
-    json_col: str | None = None,
-) -> DataFrame:
-    """Attach the compiled validation projection to a streaming DataFrame.
-    Identical semantics to the batch path — same compiler output."""
-    return engine.validate_data(stream, category, name, json_col=json_col)
 
 
 def windowed_verdicts(

@@ -1,8 +1,8 @@
-"""Table-format adapter: the three Iceberg touchpoints behind ONE seam.
+"""Table-format adapter: the two Iceberg table touchpoints behind ONE seam.
 
 The north_star runs over an Iceberg transcripts table; this sandbox has no
 Iceberg runtime, so the engine ships a parquet implementation with the
-SAME three operations Iceberg provides, and an Iceberg adapter whose
+SAME two operations Iceberg provides, and an Iceberg adapter whose
 methods issue the real statements but refuse loudly when the runtime is
 absent. Swapping formats in production is a constructor choice
 (``get_adapter("iceberg")``), not a rewrite:
@@ -19,16 +19,16 @@ absent. Swapping formats in production is a constructor choice
    partition overwrite (what fork_sinks' exactly-once batch_id sink and
    the runner rely on). Iceberg: ``overwritePartitions()`` (dynamic
    REPLACE WHERE), atomic at snapshot granularity.
-3. **Manifest upsert** (`manifest_upsert`) — record per-partition
-   verdicts idempotently. Parquet: append + latest-``finished_seq``-wins
-   on read (pacts_spark.checkpoint.ValidationManifest — re-recording a
-   partition is harmless). Iceberg: a real ``MERGE INTO`` keyed on
-   (part, run_id).
+
+The third touchpoint, the manifest record, is not a table-format method:
+``ValidationManifest.record`` (pacts_spark.checkpoint) appends per-partition
+verdicts and readers take the latest ``finished_seq`` per partition, so
+re-recording a partition is harmless on either format.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pacts_spark.checkpoint import ValidationManifest
@@ -37,6 +37,16 @@ from pacts_spark.checkpoint import ValidationManifest
 # stops being sensible plan text; fall back to the broadcast anti-join
 # (still tiny: one row per partition). 10 years of daily partitions fits.
 MAX_STATIC_PRUNE_PARTS = 5000
+
+
+def _pending_parts(part: Column, done: list[str]) -> Column:
+    """Rows whose partition is not in ``done`` (validated partitions, as
+    manifest strings). NULL-safe: ``~isin`` is NULL for a NULL partition
+    value (e.g. __HIVE_DEFAULT_PARTITION__ → NULL after cast), which would
+    silently drop those rows from a resumed scan while the anti-join
+    fallback keeps them — a NULL partition stays pending."""
+    pc = part.cast("string")
+    return pc.isNull() | ~pc.isin(done)
 
 
 class ParquetTableAdapter:
@@ -74,13 +84,7 @@ class ParquetTableAdapter:
             if not done:
                 return df
             if len(done) <= MAX_STATIC_PRUNE_PARTS:
-                # NULL-safe: `~isin` is NULL for a NULL partition value
-                # (e.g. __HIVE_DEFAULT_PARTITION__ → NULL after cast),
-                # which would silently drop those rows from a resumed
-                # scan while the anti-join branch keeps them — keep NULL
-                # partitions pending in both branches
-                pc = F.col(part_col).cast("string")
-                return df.filter(pc.isNull() | ~pc.isin(done))
+                return df.filter(_pending_parts(F.col(part_col), done))
             return df.join(
                 F.broadcast(done_df.withColumnRenamed("part", "__done")),
                 df[part_col].cast("string") == F.col("__done"),
@@ -104,16 +108,6 @@ class ParquetTableAdapter:
             .parquet(table)
         )
 
-    def manifest_upsert(
-        self,
-        verdicts: DataFrame,
-        manifest: ValidationManifest,
-        run_id: str,
-        seq: int,
-        lineage: str = "",
-    ) -> None:
-        manifest.record(verdicts, run_id=run_id, seq=seq, lineage=lineage)
-
 
 class IcebergTableAdapter:
     """Iceberg implementation of the same seam. Methods issue the real
@@ -136,7 +130,6 @@ class IcebergTableAdapter:
                 "iceberg-spark-runtime jar and a catalog config "
                 "(spark.sql.catalog.<name>=org.apache.iceberg.spark.SparkCatalog)"
             )
-        self._spark = spark
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         return spark.read.table(table)
@@ -154,7 +147,7 @@ class IcebergTableAdapter:
             return df
         # Iceberg evaluates this predicate against partition metadata in
         # the manifest files — validated partitions' data files never open
-        return df.filter(~F.col(part_col).cast("string").isin(done))
+        return df.filter(_pending_parts(F.col(part_col), done))
 
     def replace_where(
         self, df: DataFrame, table: str, part_cols: list[str]
@@ -162,35 +155,6 @@ class IcebergTableAdapter:
         # dynamic REPLACE WHERE: atomically replaces the partitions present
         # in df (snapshot-isolated; concurrent readers see old-or-new)
         df.writeTo(table).overwritePartitions()
-
-    def manifest_upsert(
-        self,
-        verdicts: DataFrame,
-        manifest: ValidationManifest,
-        run_id: str,
-        seq: int,
-        lineage: str = "",
-    ) -> None:
-        """Real upsert keyed (part, run_id): MERGE INTO the manifest
-        TABLE (``manifest.path`` is a catalog identifier here)."""
-        verdicts.createOrReplaceTempView("__pacts_manifest_delta")
-        self._spark.sql(
-            f"""
-            MERGE INTO {manifest.path} t
-            USING (
-              SELECT CAST(part AS STRING) AS part,
-                     CASE WHEN pass THEN 'validated' ELSE 'failed' END AS status,
-                     CAST(n_rows AS BIGINT) AS n_rows,
-                     CAST(n_violations AS BIGINT) AS n_violations,
-                     pass, '{run_id}' AS run_id, '{lineage}' AS lineage,
-                     CAST({seq} AS BIGINT) AS finished_seq
-              FROM __pacts_manifest_delta
-            ) s
-            ON t.part = s.part AND t.run_id = s.run_id
-            WHEN MATCHED AND s.finished_seq >= t.finished_seq THEN UPDATE SET *
-            WHEN NOT MATCHED THEN INSERT *
-            """
-        )
 
 
 def get_adapter(fmt: str, spark: SparkSession | None = None):

@@ -14,7 +14,9 @@ reintroduce a scale-killer:
   shuffle join on the fact side);
 - column stats compute every column's aggregates in ONE shuffle, with
   one HLL sketch in an ObjectHashAggregate (no sort-based aggregate);
-- drift scores plan at most 6 exchanges;
+- drift scores plan at most 6 exchanges, and ``ValidationRun.run``'s
+  drift scans its input once (the baseline reuses the per-part
+  histogram's exchange);
 - the validator's scan is column-pruned to the columns the schema
   actually checks;
 - the vector grid router sizes keyed groups on the scoring exchange
@@ -23,7 +25,8 @@ reintroduce a scale-killer:
 
 Plan text comes from queryExecution().executedPlan() BEFORE execution
 (AQE's initial plan) — these are static properties of the compiled
-plan, not runtime measurements.
+plan, not runtime measurements. The one exception is exchange reuse,
+which AQE decides at stage creation: that test reads the final plan.
 """
 
 from __future__ import annotations
@@ -159,6 +162,21 @@ def test_drift_plan_has_at_most_six_exchanges(spark, tmp_path):
         )
     )
     assert plan.count("Exchange") <= 6, plan
+
+
+def test_run_drift_scans_input_once(spark, engine, tmp_path):
+    """``run()`` scores drift against its own per-part role histogram
+    summed over parts, so the baseline side is a ReusedExchange of the
+    current side's aggregate and the input is scanned once, not twice."""
+    from pacts_spark.runner import ValidationRun
+
+    path = str(tmp_path / "turns")
+    entry._transcripts(spark, str(SF_SMALL)).write.parquet(path)
+    drift = ValidationRun(engine).run(spark, spark.read.parquet(path)).drift
+    drift.collect()
+    final = _plan(drift).split("== Initial Plan ==")[0]
+    assert final.count("FileScan") == 1, final
+    assert "ReusedExchange" in final, final
 
 
 def test_validator_scan_is_column_pruned(spark, engine):

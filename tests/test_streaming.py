@@ -29,9 +29,9 @@ def test_stream_validation_matches_batch(spark, engine, tmp_path):
     stream = spark.readStream.schema(schema).json(str(src))
     assert stream.isStreaming
 
-    from pacts_spark.streaming import fork_sinks, validate_stream
+    from pacts_spark.streaming import fork_sinks
 
-    validated = validate_stream(engine, stream, "inventory", "inventory_item")
+    validated = engine.validate_data(stream, "inventory", "inventory_item")
     q = fork_sinks(
         validated, str(out_valid), str(out_viol), str(ckpt)
     ).trigger(availableNow=True).start()
@@ -161,11 +161,11 @@ def test_stream_restart_resumes_exactly_once(spark, engine, tmp_path):
         (src / name).write_text("\n".join(json.dumps(r) for r in rows))
 
     schema = "conv_id string, turn_idx int, slot int, material string, amount double"
-    from pacts_spark.streaming import fork_sinks, validate_stream
+    from pacts_spark.streaming import fork_sinks
 
     def run_available():
         stream = spark.readStream.schema(schema).json(str(src))
-        validated = validate_stream(engine, stream, "inventory", "inventory_item")
+        validated = engine.validate_data(stream, "inventory", "inventory_item")
         q = fork_sinks(
             validated, str(out_valid), str(out_viol), str(ckpt)
         ).trigger(availableNow=True).start()
@@ -200,7 +200,7 @@ def test_redelivered_batch_does_not_duplicate_sink_rows(spark, engine, tmp_path)
     both sink tables, not append a second copy."""
     from collections import Counter
 
-    from pacts_spark.streaming import fork_sinks, validate_stream
+    from pacts_spark.streaming import fork_sinks
 
     src = tmp_path / "src3"
     out_valid = tmp_path / "valid3"
@@ -227,7 +227,7 @@ def test_redelivered_batch_does_not_duplicate_sink_rows(spark, engine, tmp_path)
             .option("maxFilesPerTrigger", 1)
             .json(str(src))
         )
-        validated = validate_stream(engine, stream, "inventory", "inventory_item")
+        validated = engine.validate_data(stream, "inventory", "inventory_item")
         q = fork_sinks(
             validated, str(out_valid), str(out_viol), str(ckpt)
         ).trigger(availableNow=True).start()
@@ -344,7 +344,7 @@ def test_windowed_verdicts_drops_late_data_past_watermark(spark, engine, tmp_pat
     hold state for only ~watermark/window windows at 10^12-turn scale."""
     import json
 
-    from pacts_spark.streaming import validate_stream, windowed_verdicts
+    from pacts_spark.streaming import windowed_verdicts
 
     src = tmp_path / "late_src"
     out = tmp_path / "late_out"
@@ -375,7 +375,7 @@ def test_windowed_verdicts_drops_late_data_past_watermark(spark, engine, tmp_pat
 
     def run_available():
         stream = spark.readStream.schema(schema).json(str(src))
-        validated = validate_stream(engine, stream, "inventory", "inventory_item")
+        validated = engine.validate_data(stream, "inventory", "inventory_item")
         agg = windowed_verdicts(validated, window="1 hour", watermark="2 hours")
 
         def sink(batch, batch_id):
