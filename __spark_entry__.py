@@ -62,6 +62,7 @@ from pacts_spark.datapipe.textstats import doc_fingerprint, language_id, text_st
 from pacts_spark.engine import PactsEngine
 from pacts_spark.registry import SchemaRegistry
 from pacts_spark.runner import RunResult, ValidationRun, day_part
+from pacts_spark.session import local_frame
 from pacts_spark.transcripts import (
     conversations_dim,
     tools_dim,
@@ -2832,7 +2833,7 @@ def _q_ann_nn_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     dim = infer_dim(emb)
     if dim is None:
-        return spark.createDataFrame([], "vec_id long, nn_id long")
+        return local_frame(spark, "vec_id long, nn_id long")
     # the SQL twin's plane literals are generated for dim=64 — fail loudly
     # rather than let a dim drift surface as a baffling parity mismatch
     assert dim == 64, f"_ann_sql() hyperplanes are dim=64, embeddings are dim={dim}"
@@ -3433,8 +3434,8 @@ def _q_conversation_state_finals(spark: SparkSession, sf_dir: str) -> DataFrame:
         # output with the contract schema (empty-fixture regression:
         # max() over zero row groups raised)
         shutil.rmtree(base, ignore_errors=True)
-        return spark.createDataFrame(
-            [],
+        return local_frame(
+            spark,
             "conv_id string, n_turns long, max_turn_idx long, "
             "n_regressed long, monotonic boolean",
         )

@@ -29,6 +29,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pacts_spark.session import local_frame
+
 MANIFEST_SCHEMA = (
     "part string, status string, n_rows long, n_violations long, "
     "pass boolean, run_id string, lineage string, finished_seq long"
@@ -45,7 +47,7 @@ class ValidationManifest:
 
     def read(self, spark: SparkSession) -> DataFrame:
         if not self._exists():
-            return spark.createDataFrame([], MANIFEST_SCHEMA)
+            return local_frame(spark, MANIFEST_SCHEMA)
         return spark.read.schema(MANIFEST_SCHEMA).parquet(self.path)
 
     def validated_parts(self, spark: SparkSession) -> DataFrame:

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pacts_spark.session import local_frame
+
 
 def _edge_signature(edges: DataFrame) -> tuple[int, int]:
     """Order-insensitive fingerprint of an edge set: (count, sum of
@@ -393,9 +395,7 @@ def kmeans_assign(
         .collect()
     )
     if not seeds:
-        return df.sparkSession.createDataFrame(
-            [], f"{id_col} long, cluster long"
-        )
+        return local_frame(df.sparkSession, f"{id_col} long, cluster long")
     cents: list[list[int]] = [list(r["__q"]) for r in seeds]
 
     def _assign(frame):

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pacts_spark.session import local_frame
+
 _BUCKETS = 10_000
 
 
@@ -316,8 +318,8 @@ def token_blocks(
     """
     base = _global_token_offsets(df, id_col, text_col, seed)
     if base is None:  # empty input
-        return df.sparkSession.createDataFrame(
-            [],
+        return local_frame(
+            df.sparkSession,
             f"{id_col} long, block_idx long, tok_start long, tok_end long",
         )
     nonempty = base.filter(F.col("n_tokens") >= 1)
@@ -375,8 +377,8 @@ def mixture_upsample(
     explode of at-most-ceil(rep) elements — no shuffle of the corpus.
     """
     spark = df.sparkSession
-    w_df = spark.createDataFrame(
-        sorted(weights.items()), f"{stratum_col} string, __w double"
+    w_df = local_frame(
+        spark, f"{stratum_col} string, __w double", sorted(weights.items())
     )
     cur = df.groupBy(stratum_col).agg(F.count(F.lit(1)).alias("__c"))
     ratio = cur.join(w_df, stratum_col).select(

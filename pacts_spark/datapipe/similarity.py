@@ -77,6 +77,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pacts_spark.session import local_frame
+
 
 VECTOR_MAX_ABS = 100.0  # element bound shared with vector_column_stats
 # grid router: most queries (and candidates) per block, measured in
@@ -510,9 +512,7 @@ def ivf_quantized_topk(
         # empty (or all-unhealthy) corpus: no quantizer can train — empty
         # output with the contract schema (np.array([]) is 1-D and the
         # assign matmul would raise AxisError; empty-fixture regression)
-        return df.sparkSession.createDataFrame(
-            [], "vec_id long, nn_id long, rank int"
-        )
+        return local_frame(df.sparkSession, "vec_id long, nn_id long, rank int")
     C = np.array([np.asarray(r[1], dtype=np.float64) for r in seeds])
     Cn = _safe_rows(C)
     bc = df.sparkSession.sparkContext.broadcast(Cn)
@@ -762,8 +762,8 @@ def pq_topk(
 
     head = pts.select(F.size("__q").alias("n")).head()
     if head is None:
-        return df.sparkSession.createDataFrame(
-            [], "vec_id long, nn_id long, rank int, d2 long"
+        return local_frame(
+            df.sparkSession, "vec_id long, nn_id long, rank int, d2 long"
         )
     d = int(head["n"])
     assert d % m == 0, f"dim {d} not divisible by m={m}"

@@ -46,8 +46,12 @@ def default_fetch(
     own ``read_timeout`` (per-read, not a total-download wall clock — a
     slow-but-healthy server streaming a large bundle must not be cut
     off mid-body; review finding). When the underlying socket cannot be
-    re-tuned (exotic response wrappers), a wall-clock deadline of
-    ``read_timeout`` per chunk loop is the fallback guard. ``max_bytes``
+    re-tuned (exotic response wrappers), the fallback is a
+    ``read_timeout`` wall-clock deadline for the whole body, checked
+    between reads. A single blocked ``read()`` is then bounded only by
+    the socket timeout urlopen set, ``connect_timeout`` (15 s by
+    default), so the body can take up to ``read_timeout`` plus
+    ``connect_timeout``. ``max_bytes``
     caps the TOTAL body (a drip-feeding server defeats per-read
     timeouts; without a size bound it grows driver memory forever —
     review finding). Only ``http``/``https`` URLs are fetched: any other

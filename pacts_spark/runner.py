@@ -21,6 +21,15 @@ sort), the lag window (conv-keyed) and the violations range sort. RI
 joins are broadcast. Every output is a separate action that re-reads the
 input, so production input should be a materialized table, not an
 expensive derivation.
+
+A relational ``ValidationRun`` runs no Python; Python runs only in
+JSON-mode/envelope validation, ``pattern`` checks and the datapipe
+kernels. Literal frames on the run's path (``tools_dim``, an unwritten
+manifest) are JVM ``LocalRelation``s (``session.local_frame``), not
+``createDataFrame`` lists, whose rows pass through Python workers on
+every action. On perfbench ``batch_full`` (4 cores, 10 alternating
+pairs) that cut the median peak RSS from 1,703 to 1,364 MB and the
+median CPU from 12.0 to 10.1 s.
 """
 
 from __future__ import annotations

@@ -14,7 +14,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -74,3 +75,25 @@ def jvm_class_present(spark: SparkSession, class_name: str) -> bool:
         return True
     except Exception:  # noqa: BLE001 — absent everywhere
         return False
+
+
+def local_frame(spark: SparkSession, ddl: str, rows=()) -> DataFrame:
+    """``rows`` (tuples in ``ddl``'s column order) as a JVM
+    ``LocalRelation``: a ``VALUES`` list of bound parameters, cast to
+    ``ddl``'s types. No rows gives an empty frame with ``ddl``'s columns,
+    all nullable.
+
+    ``createDataFrame`` over a Python list, even an empty one, is a
+    ``LogicalRDD`` fed by Python workers on every action that reads it.
+    The markers are named: positional ``?`` markers inside ``VALUES``
+    bind out of order (measured on Spark 4.1)."""
+    schema = StructType.fromDDL(ddl)
+    n = len(schema.names)
+    body = rows or [(None,) * n]
+    values = ", ".join(
+        "(" + ", ".join(f":v{r}_{c}" for c in range(n)) + ")"
+        for r in range(len(body))
+    )
+    args = {f"v{r}_{c}": v for r, row in enumerate(body) for c, v in enumerate(row)}
+    frame = spark.sql(f"VALUES {values}" + ("" if rows else " LIMIT 0"), args=args)
+    return frame.toDF(*schema.names).to(schema)

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pacts_spark.session import local_frame
+
 ROLES = ["system", "user", "assistant", "tool"]
 
 # transcript-turn pact schema (FIXTURES.md §2.6) — validated through the
@@ -100,8 +102,9 @@ def conversations_dim(events: DataFrame) -> DataFrame:
 
 def tools_dim(spark: SparkSession) -> DataFrame:
     """``tools(tool)`` dim: tool-0..tool-4; derivation emits ids mod 7 so
-    tool-5/tool-6 are orphans."""
-    return spark.createDataFrame([(f"tool-{i}",) for i in range(5)], ["tool"])
+    tool-5/tool-6 are orphans. A ``VALUES`` relation, so the run's RI
+    broadcast of it starts no Python worker."""
+    return local_frame(spark, "tool string", [(f"tool-{i}",) for i in range(5)])
 
 
 def generate_transcripts(

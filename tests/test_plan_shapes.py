@@ -19,6 +19,9 @@ reintroduce a scale-killer:
   histogram's exchange);
 - the validator's scan is column-pruned to the columns the schema
   actually checks;
+- no output of a relational ``ValidationRun.run`` holds a Python-fed RDD
+  or a Python evaluation in its optimized plan (literal frames are JVM
+  ``LocalRelation``s);
 - the vector grid router sizes keyed groups on the scoring exchange
   (one exchange below the LSH block scoring) and the unkeyed grid with
   a broadcast count that runs no job at plan build.
@@ -98,6 +101,33 @@ def test_verdicts_plan_has_no_range_sort_or_explode(spark, engine, tmp_path):
     assert "rangepartitioning" not in plan, plan
     assert "Generate" not in plan, plan
     assert "rangepartitioning" in _plan(res.violations)
+
+
+def test_run_outputs_plan_no_python(spark, engine, tmp_path):
+    """A relational ``run()`` over a materialized table, parquet
+    conversations and ``tools_dim`` runs no Python: no output's optimized
+    plan holds a Python-fed RDD (``createDataFrame`` over a list) or a
+    Python UDF evaluation."""
+    import re
+
+    from pacts_spark.runner import ValidationRun
+    from pacts_spark.transcripts import conversations_dim, tools_dim
+
+    path, convs = str(tmp_path / "turns"), str(tmp_path / "convs")
+    entry._transcripts(spark, str(SF_SMALL)).write.parquet(path)
+    events = spark.read.parquet(f"{SF_SMALL}/events.parquet")
+    conversations_dim(events).write.parquet(convs)
+    tools = tools_dim(spark)
+    assert sorted(r.tool for r in tools.collect()) == [f"tool-{i}" for i in range(5)]
+    res = ValidationRun(engine).run(
+        spark,
+        spark.read.parquet(path),
+        conversations=spark.read.parquet(convs),
+        tools=tools,
+    )
+    for name in ("violations", "verdicts", "stats", "drift", "gaps"):
+        plan = getattr(res, name)._jdf.queryExecution().optimizedPlan().toString()
+        assert not re.search(r"LogicalRDD|ExistingRDD|EvalPython", plan), (name, plan)
 
 
 def test_ri_check_is_broadcast_anti_join(spark):

@@ -6,8 +6,9 @@ from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from pacts_spark.checkpoint import ValidationManifest
+from pacts_spark.checkpoint import MANIFEST_SCHEMA, ValidationManifest
 from pacts_spark.runner import ValidationRun, day_part
 from pacts_spark.transcripts import (
     conversations_dim,
@@ -153,7 +154,16 @@ def test_null_ts_partition_verdicts(spark, engine, tmp_path):
     res = ValidationRun(engine).run(spark, t, tools=tools_dim(spark))
     assert _verdict_rows(res.verdicts)[None] == expected
 
+    # a never-written manifest reads as an empty JVM relation with the
+    # manifest schema, and filters nothing out (NULL-ts rows included)
     manifest = ValidationManifest(tmp_path / "m")
+    empty = manifest.read(spark)
+    assert empty.schema == StructType.fromDDL(MANIFEST_SCHEMA)
+    assert empty.count() == 0
+    plan = empty._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan and "RDD" not in plan, plan
+    pending = manifest.filter_pending(spark, t, day_part()).collect()
+    assert sorted(pending, key=str) == sorted(t.collect(), key=str)
     out = ValidationRun(engine, manifest=manifest).run_and_write(
         spark, t, str(tmp_path / "out"), tools=tools_dim(spark),
         run_id="null-ts", seq=1,
