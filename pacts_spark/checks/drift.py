@@ -12,9 +12,7 @@ baseline as ONE broadcast row (its map and total); the KL and
 chi-squared terms fold over the sorted union of both maps' categories
 inside that row. No join builds the (part, category) domain: drift over a
 table's histograms plans 6 exchanges, histograms and output sort
-included. The grouped-pandas variant (``drift_scores_pandas``)
-demonstrates the applyInPandas path for score math that outgrows Column
-expressions; both produce identical numbers.
+included.
 
 Smoothing: add-one (Laplace) over the UNION of category domains — fully
 deterministic and expressible in both Spark and ANSI SQL, so the DuckDB
@@ -24,9 +22,6 @@ rounded to 6 decimals for stable cross-engine hashing).
 
 from __future__ import annotations
 
-import math
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -92,7 +87,7 @@ def drift_scores(current: DataFrame, baseline: DataFrame) -> DataFrame:
         # DETERMINISTIC left fold in category order: the last ulp — and,
         # at a 0.5e-6 boundary, the round-6 output — depends on the
         # addition order. The SQL twin folds list(term ORDER BY category)
-        # via list_reduce; the pandas twin iterates sorted(cats).
+        # via list_reduce; the tests' Python reference iterates sorted(cats).
         def step(acc: Column, c: Column) -> Column:
             n = F.coalesce(F.col("cur")[c], F.lit(0))
             m = F.coalesce(F.col("base")[c], F.lit(0))
@@ -116,44 +111,6 @@ def drift_scores(current: DataFrame, baseline: DataFrame) -> DataFrame:
         F.round(ordered_sum(chi_term), 6).alias("chi_squared"),
         F.col("n_cats").alias("n_categories"),
     ).orderBy("part")
-
-
-def drift_scores_pandas(current: DataFrame, baseline: DataFrame) -> DataFrame:
-    """applyInPandas twin of :func:`drift_scores` — same math, computed per
-    part inside a grouped Arrow batch; the tests' reference for the Column
-    version."""
-    base_pdf = (
-        baseline.groupBy("category").agg(F.sum("n").alias("m")).toPandas()
-    )
-    base_map = dict(zip(base_pdf["category"], base_pdf["m"]))
-
-    cur = current.groupBy("part", "category").agg(F.sum("n").alias("n"))
-
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        part = pdf["part"].iloc[0]
-        cats = set(pdf["category"]) | set(base_map)
-        n_map = dict(zip(pdf["category"], pdf["n"]))
-        N = sum(n_map.values())
-        M = sum(base_map.values())
-        K = len(cats)
-        kl = chi = 0.0
-        for c in sorted(cats):
-            n = n_map.get(c, 0)
-            m = base_map.get(c, 0)
-            p = (n + 1) / (N + K)
-            q = (m + 1) / (M + K)
-            kl += p * math.log(p / q)
-            exp = q * N
-            chi += (n - exp) ** 2 / exp
-        return pd.DataFrame(
-            [[part, round(kl, 6), round(chi, 6), K]],
-            columns=["part", "kl_divergence", "chi_squared", "n_categories"],
-        )
-
-    return cur.groupBy("part").applyInPandas(
-        score,
-        "part string, kl_divergence double, chi_squared double, n_categories long",
-    )
 
 
 def anomalous_partitions(

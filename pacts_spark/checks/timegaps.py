@@ -11,10 +11,10 @@ computes lag in a single streaming pass (no buffering of the whole
 partition for lag-1). Quantiles: ``percentile_approx`` (Spark's built-in
 Greenwald–Khanna ``QuantileSummaries``: a mergeable sketch whose rank
 error is bounded by n/accuracy — constant memory, one extra tiny shuffle)
-for the 100 TB path; ``exact=True`` uses ``percentile``, the reference
-the tests compare the sketch against. ``gap_quantiles_discrete`` is the
-integer-microsecond variant the oracle twin checks. Negative gaps double
-as the out-of-order-turn violation signal.
+for the 100 TB path. ``gap_quantiles_discrete`` is the exact verifier:
+integer-microsecond quantiles that the oracle twin checks and the tests
+compare the sketch against. Negative gaps double as the out-of-order-turn
+violation signal.
 """
 
 from __future__ import annotations
@@ -118,7 +118,6 @@ def gap_quantiles(
     df: DataFrame,
     partition_col: Column | str | None = None,
     quantiles: list[float] = (0.5, 0.9, 0.99),
-    exact: bool = False,
     conv_col: str = "conv_id",
     order_col: str = "turn_idx",
     ts_col: str = "ts",
@@ -128,10 +127,7 @@ def gap_quantiles(
         F.col("gap_seconds").isNotNull()
     )
     qlist = list(quantiles)
-    if exact:
-        qcol = F.expr(f"percentile(gap_seconds, array({', '.join(map(str, qlist))}))")
-    else:
-        qcol = F.percentile_approx("gap_seconds", qlist, 10000)
+    qcol = F.percentile_approx("gap_seconds", qlist, 10000)
     names = _percent_names([Decimal(str(q)) * 100 for q in qlist])
     aggs = [F.round(qcol[i], 6).alias(name) for i, name in enumerate(names)] + [
         F.min("gap_seconds").alias("min_gap"),

@@ -18,14 +18,18 @@ this check over ``df.dropna(subset=K)``). The DuckDB twins state the
 same semantics: ``GROUP BY`` keeps the NULL group and the join-back is
 ``IS NOT DISTINCT FROM``.
 
-Scale design (north_rule: "skew handled explicitly"): every aggregate is
-a groupBy whose partial (map-side) aggregation collapses a hot key to one
-row per mapper before the exchange, so a whale conversation or a
-billion-fold duplicate never straggles a reducer — no salt is needed for
-a count. ``duplicate_keys`` is the plain groupBy count;
-``duplicate_keys_hashed`` (the runner's path) shuffles an 8-byte hash of
-the key first and re-groups only the candidate tail on the true key.
-``uniqueness_violations`` joins the duplicate set back null-safely.
+Scale design (north_rule: "skew handled explicitly"): the duplicate set
+is one groupBy on the key (``duplicate_keys``) whose partial (map-side)
+aggregation collapses a hot key to one row per mapper before the
+exchange, so a whale conversation or a billion-fold duplicate never
+straggles a reducer — no salt is needed for a count.
+``uniqueness_violations`` joins the duplicate set back null-safely: two
+reads of the input. An 8-byte-hash first phase with an exact re-group of
+the candidates (three reads) was the runner's path until it was
+measured on 4 cores: on perfbench ``batch_full`` (10 alternating pairs)
+the plain groupBy wrote fewer shuffle and output bytes per pass (io_mb
+8.99 → 8.07 MB median, lower in 10 of 10) and used no more CPU (cpu_s
+9.02 → 8.01 s, lower in 7 of 10), so it is the one detector.
 """
 
 from __future__ import annotations
@@ -45,63 +49,20 @@ def duplicate_keys(df: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
-def duplicate_keys_hashed(
-    df: DataFrame,
-    keys: list[str],
-    broadcast_candidates: bool = True,
-) -> DataFrame:
-    """Shuffle-lean EXACT duplicate detector for wide/string keys.
-
-    The plain groupBy (``duplicate_keys``) ships one row per distinct key
-    per mapper THROUGH the shuffle carrying the full key tuple — for
-    ``(conv_id string, turn_idx)`` at 10^12 rows that is the pipeline's
-    single biggest byte mover. This variant:
-
-      phase 1: groupBy(xxhash64(keys...)) count — the full-volume shuffle
-               carries (8-byte hash, count); map-side combine also absorbs
-               hot-key skew (a billion-fold duplicate collapses to one row
-               per mapper), so no salt is needed;
-      phase 2: hashes with count > 1 (true duplicates + rare 64-bit
-               collisions) broadcast back; ONLY the candidate rows re-group
-               on the TRUE key tuple — exactness restored on a tail-sized
-               input, collisions drop out here.
-
-    Returns the same (keys..., dup_count > 1) contract as
-    ``duplicate_keys``. ``broadcast_candidates=False`` defers to AQE for
-    pathological mass-duplication inputs (same caveat as
-    ``uniqueness_violations(broadcast_dups=False)``)."""
-    kh = F.xxhash64(*[F.col(k) for k in keys])
-    hot = (
-        df.select(kh.alias("__kh"))
-        .groupBy("__kh")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .filter(F.col("__c") > 1)
-        .select("__kh")
-    )
-    if broadcast_candidates:
-        hot = F.broadcast(hot)
-    cand = df.withColumn("__kh", kh).join(hot, "__kh")
-    return (
-        cand.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("dup_count"))
-        .filter(F.col("dup_count") > 1)
-    )
-
-
 def uniqueness_violations(
     df: DataFrame,
     keys: list[str],
     broadcast_dups: bool = True,
-    method: str = "group",
+    method: str | None = None,
 ) -> DataFrame:
     """Exploded per-row violation form: every row whose key is duplicated,
     tagged with the reference-style message catalog extension
     ``Duplicate key: (k1=v1, k2=v2) appears N times``.
 
-    ``method="group"`` finds the duplicate set with :func:`duplicate_keys`;
-    ``method="hash"`` swaps in :func:`duplicate_keys_hashed` (8-byte-hash
-    phase-1 shuffle + exact tail verify) — identical output, the
-    shuffle-lean choice for wide string keys at full scale.
+    The duplicate set is :func:`duplicate_keys`. ``method`` is accepted
+    and ignored: it chose between two detectors, and callers that still
+    pass it (perfbench's traced uniqueness layer passes ``"hash"``) get
+    the one detector.
 
     ``broadcast_dups=True`` hints the join-back (the duplicate set is
     normally the tail, so this is the common fast path). Set it False for
@@ -109,10 +70,7 @@ def uniqueness_violations(
     itself is large — then AQE picks the join strategy from runtime stats
     instead of force-collecting the dup set to the driver.
     """
-    if method == "hash":
-        dups = duplicate_keys_hashed(df, keys, broadcast_candidates=broadcast_dups)
-    else:
-        dups = duplicate_keys(df, keys)
+    dups = duplicate_keys(df, keys)
     if broadcast_dups:
         dups = F.broadcast(dups)
     # null-safe join-back (module docstring); <=> is still a hash-join key

@@ -46,7 +46,6 @@ regex probe). Their error strings are engine-defined.
 from __future__ import annotations
 
 import json
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import Column
@@ -300,11 +299,3 @@ def json_mode_dispatch_validator(schemas: dict[str, dict], spark):
         return pd.Series(out)
 
     return _validate
-
-
-def payload_as_json(row: dict[str, Any]) -> dict[str, Any]:
-    """Canonical relational-row → JSON-object mapping used by differential
-    tests: NULL columns are ABSENT keys (SURVEY.md §1.3 'field absent ≙
-    column NULL'). Keeps oracle and engine semantics aligned in
-    relational mode."""
-    return {k: v for k, v in row.items() if v is not None}

@@ -125,19 +125,3 @@ def extract_features(df: DataFrame, dim: int = 8, decoder: str = "stub") -> Data
             )
 
     return df.mapInPandas(run, FEATURE_SCHEMA)
-
-
-def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling PLAN: one output row per (media_id, frame_ts_ms)
-    the decoder should materialize — pure Column math (sequence over
-    duration), so the expensive decode fan-out is planned and partitioned
-    by Spark before any codec runs."""
-    from pyspark.sql import functions as F
-
-    frames = F.sequence(
-        F.lit(0), F.greatest(F.col("duration_ms") - 1, F.lit(0)), F.lit(every_ms)
-    )
-    return (
-        df.filter(F.col("modality") == "video")
-        .select("media_id", F.explode(frames).alias("frame_ts_ms"))
-    )

@@ -48,13 +48,6 @@ def _threshold(rate: float) -> int:
     return int(rate * _BUCKETS + 0.5)
 
 
-def hash_sample(
-    df: DataFrame, rate: float, key_col: str = "doc_id"
-) -> DataFrame:
-    """Uniform deterministic sample: keep rows whose bucket < rate*10000."""
-    return df.filter(hash_bucket(F.col(key_col)) < _threshold(rate))
-
-
 def rebalanced_hash_sample(
     df: DataFrame,
     baseline_hist: DataFrame,

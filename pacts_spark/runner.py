@@ -12,7 +12,8 @@ are counted per part and joined null-safely, so a NULL-ts partition
 (part NULL) keeps its uniqueness/RI rows — the partition-level
 counterpart of the null-safe key semantics of the uniqueness check.
 
-Shuffles: uniqueness (hashed phase-1 groupBy + candidate re-group), the
+Shuffles: uniqueness (one groupBy on (conv_id, turn_idx); its duplicate
+set is broadcast back, so the branch reads the input twice), the
 verdict groupBys (partition-keyed, AQE-coalesced), stats (ONE groupBy on
 (part, column) over the rows exploded per column), drift (ONE per-part
 role histogram, read as both the current and the baseline input; its
@@ -136,14 +137,13 @@ class ValidationRun:
 
         # ---- engine checks, all in one (conv_id, turn_idx, part, check,
         #      violation) shape.
-        # method="hash": phase-1 shuffle carries (8-byte hash, count)
-        # instead of the string key tuple — measured 20% faster at 16M rows
-        # locally and ~4x fewer shuffle bytes (the win grows with network
-        # shuffle); map-side combine absorbs hot keys, exact tail verify.
+        # uniqueness is the plain groupBy plus a broadcast join-back: two
+        # reads of the input. An 8-byte-hash phase 1 with a candidate
+        # re-group took three, and on perfbench batch_full (4 cores, 10
+        # alternating pairs) wrote more (io_mb 8.99 vs 8.07 MB median)
+        # for no less CPU.
         checks = [
-            uniqueness_violations(
-                transcripts, ["conv_id", "turn_idx"], method="hash"
-            ).select(
+            uniqueness_violations(transcripts, ["conv_id", "turn_idx"]).select(
                 "conv_id", "turn_idx", part.alias("part"),
                 F.lit("uniqueness").alias("check"), "violation",
             )

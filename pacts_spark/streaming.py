@@ -88,18 +88,6 @@ class KafkaStreamSource:
         )
 
 
-def get_stream_source(fmt: str, spark: SparkSession | None = None, **kwargs):
-    """Config-switchable stream source (``file`` default, ``kafka`` for
-    broker parity) — the consume analogue of table.get_adapter."""
-    if fmt == "file":
-        return FileStreamSource(**kwargs)
-    if fmt == "kafka":
-        if spark is None:
-            raise ValueError("kafka source needs the SparkSession (probe)")
-        return KafkaStreamSource(spark, **kwargs)
-    raise ValueError(f"unknown stream source: {fmt!r}")
-
-
 def consume(
     engine: PactsEngine,
     source,

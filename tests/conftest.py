@@ -42,3 +42,10 @@ def engine(registry):
 @pytest.fixture(scope="session")
 def events_small(spark):
     return spark.read.parquet(str(SF_SMALL / "events.parquet"))
+
+
+def payload_as_json(row: dict) -> dict:
+    """Canonical relational-row → JSON-object mapping for the differential
+    tests: NULL columns are ABSENT keys (SURVEY.md §1.3 'field absent ≙
+    column NULL'), so the oracle sees what relational mode validates."""
+    return {k: v for k, v in row.items() if v is not None}

@@ -110,7 +110,7 @@ def exact_gap_ranks(spark, gaps_4m):
 def test_percentile_approx_rank_guarantee(spark, gaps_4m, exact_gap_ranks):
     """percentile_approx(accuracy=10000) must land within ±2n/10000 ranks
     of the exact quantile on ~4M gaps."""
-    approx = gap_quantiles(gaps_4m, exact=False).collect()[0]
+    approx = gap_quantiles(gaps_4m).collect()[0]
     for q, col in ((0.5, "p50"), (0.9, "p90"), (0.99, "p99")):
         lo, hi = exact_gap_ranks["bands"][q]
         assert lo <= approx[col] <= hi, (

@@ -4,7 +4,7 @@
 from __future__ import annotations
 
 import math
-from collections import Counter
+from collections import Counter, defaultdict
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,10 +19,39 @@ from pacts_spark.checks import (
     ts_gaps,
     uniqueness_violations,
 )
-from pacts_spark.checks.drift import drift_scores_pandas
 from pacts_spark.checks.stats import hll_distinct, hll_lg_k
-from pacts_spark.checks.uniqueness import duplicate_keys_hashed
+from pacts_spark.checks.timegaps import gap_quantiles_discrete
 from pacts_spark.transcripts import conversations_dim, tools_dim, transcripts_from_events
+
+
+def drift_reference(current, baseline) -> list[tuple]:
+    """Plain-Python reference for ``drift_scores`` over the collected
+    histograms: per part, Laplace add-one smoothing over the union of
+    both category domains, terms summed in category order (NULL first).
+    A NULL category joins the domain with n = m = 0. Rows
+    ``(part, kl_divergence, chi_squared, n_categories)``, NULL part first."""
+    base = Counter()
+    for r in baseline.collect():
+        base[r.category] += r.n
+    parts = defaultdict(Counter)
+    for r in current.collect():
+        parts[r.part][r.category] += r.n
+    m_tot = sum(m for c, m in base.items() if c is not None)
+    out = []
+    for part, cur in parts.items():
+        cats = sorted(set(cur) | set(base), key=lambda c: (c is not None, c))
+        n_tot = sum(n for c, n in cur.items() if c is not None)
+        k = len(cats)
+        kl = chi = 0.0
+        for c in cats:
+            n = cur[c] if c is not None else 0
+            m = base[c] if c is not None else 0
+            p = (n + 1) / (n_tot + k)
+            q = (m + 1) / (m_tot + k)
+            kl += p * math.log(p / q)
+            chi += (n - q * n_tot) ** 2 / (q * n_tot)
+        out.append((part, round(kl, 6), round(chi, 6), k))
+    return sorted(out, key=lambda r: (r[0] is not None, r[0]))
 
 
 @pytest.fixture(scope="module")
@@ -158,20 +187,16 @@ def test_column_stats_distinct_independent_of_layout(spark):
     assert n_distinct(df.repartition(7)) == base
 
 
-def test_duplicate_keys_plain_hashed_and_counter_agree(transcripts):
+def test_duplicate_keys_and_counter_agree(transcripts):
     keys = ["conv_id", "turn_idx"]
-    plain = {
+    dups = {
         (r.conv_id, r.turn_idx): r.dup_count
         for r in duplicate_keys(transcripts, keys).collect()
     }
-    hashed = {
-        (r.conv_id, r.turn_idx): r.dup_count
-        for r in duplicate_keys_hashed(transcripts, keys).collect()
-    }
     # pure-Python reference: NULL key parts compare equal in a tuple Counter
     counter = Counter(tuple(r) for r in transcripts.select(*keys).collect())
-    assert plain == hashed == {k: n for k, n in counter.items() if n > 1}
-    assert len(plain) > 0  # event_id%97 injection present
+    assert dups == {k: n for k, n in counter.items() if n > 1}
+    assert len(dups) > 0  # event_id%97 injection present
 
 
 def test_uniqueness_violation_rows(spark):
@@ -182,14 +207,18 @@ def test_uniqueness_violation_rows(spark):
          (None, 2, "d"), (None, 2, "e"), (None, 3, "f")],
         "conv_id string, turn_idx int, text string",
     )
-    for method in ("group", "hash"):
-        out = uniqueness_violations(df, ["conv_id", "turn_idx"], method=method)
+    keys = ["conv_id", "turn_idx"]
+    # method is accepted and ignored (perfbench passes method="hash")
+    for out in (
+        uniqueness_violations(df, keys),
+        uniqueness_violations(df, keys, method="hash"),
+    ):
         assert sorted((r.conv_id or "", r.text, r.violation) for r in out.collect()) == [
             ("", "d", "Duplicate key: (turn_idx=2) appears 2 times"),
             ("", "e", "Duplicate key: (turn_idx=2) appears 2 times"),
             ("c1", "a", "Duplicate key: (conv_id=c1, turn_idx=1) appears 2 times"),
             ("c1", "b", "Duplicate key: (conv_id=c1, turn_idx=1) appears 2 times"),
-        ], method
+        ]
 
 
 def test_ri_violations(spark, transcripts, events_small):
@@ -229,13 +258,13 @@ def test_drift_identical_distributions_near_zero(spark):
     assert abs(out.chi_squared) < 1e-6
 
 
-def test_drift_known_shift_and_pandas_parity(spark):
+def test_drift_known_shift_and_reference_parity(spark):
     cur = spark.createDataFrame([("p", "a", 90), ("p", "b", 10)], "part string, category string, n long")
     base = spark.createDataFrame([("x", "a", 50), ("x", "b", 50)], "part string, category string, n long")
     col_row = drift_scores(cur, base).collect()[0]
-    pdf_row = drift_scores_pandas(cur, base).collect()[0]
-    assert col_row.kl_divergence == pdf_row.kl_divergence
-    assert col_row.chi_squared == pdf_row.chi_squared
+    _, ref_kl, ref_chi, _ = drift_reference(cur, base)[0]
+    assert col_row.kl_divergence == ref_kl
+    assert col_row.chi_squared == ref_chi
     # hand-computed: p=(91/102, 11/102), q=(51/102, 51/102)
     p = [91 / 102, 11 / 102]
     q = [51 / 102, 51 / 102]
@@ -257,6 +286,7 @@ def test_drift_null_category_and_null_part(spark):
     rows = [tuple(r) for r in drift_scores(cur, base).collect()]
     # domain (NULL, a, b) for both parts; NULL part: n = (0, 5, 0)
     assert rows == [(None, 0.45876, 5.098039, 3), ("p", 0.626433, 91.764706, 3)]
+    assert drift_reference(cur, base) == rows
 
 
 def test_drift_scores_null_ts_partition(spark):
@@ -270,17 +300,12 @@ def test_drift_scores_null_ts_partition(spark):
         + [(None, "user"), (None, "tool"), (None, "tool")],
         "ts string, role string",
     ).select(F.to_timestamp("ts").alias("ts"), "role")
-    # string part: the pandas twin's output schema declares part string
     cur = category_histogram(df, "role", day_part().cast("string"))
     base = category_histogram(df, "role")
     got = [tuple(r) for r in drift_scores(cur, base).collect()]
     assert [r[0] for r in got] == [None, "2024-01-01"]
     assert [r[3] for r in got] == [3, 3]  # domain: assistant, tool, user
-    ref = sorted(
-        (tuple(r) for r in drift_scores_pandas(cur, base).collect()),
-        key=lambda r: r[0] is not None,
-    )
-    assert got == ref
+    assert got == drift_reference(cur, base)
 
 
 def test_ts_gaps_and_quantiles(spark):
@@ -290,8 +315,10 @@ def test_ts_gaps_and_quantiles(spark):
     )
     gaps = ts_gaps(df).filter(F.col("gap_seconds").isNotNull()).collect()
     assert sorted(r.gap_seconds for r in gaps) == [30.0, 60.0, 120.0]
-    q = gap_quantiles(df, exact=True, quantiles=[0.5]).collect()[0]
+    q = gap_quantiles(df, quantiles=[0.5]).collect()[0]
     assert q.p50 == 60.0 and q.n_gaps == 3 and q.n_negative_gaps == 0
+    d = gap_quantiles_discrete(df, quantile_fracs=((1, 2),)).collect()[0]
+    assert q.p50 * 1_000_000 == d.p50_us
 
 
 def test_gap_quantiles_detects_out_of_order(spark):
@@ -299,38 +326,39 @@ def test_gap_quantiles_detects_out_of_order(spark):
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, epoch long").select(
         "conv_id", "turn_idx", F.timestamp_seconds("epoch").alias("ts")
     )
-    q = gap_quantiles(df, exact=True).collect()[0]
+    q = gap_quantiles(df).collect()[0]
     assert q.n_negative_gaps == 1
+    d = gap_quantiles_discrete(df).collect()[0]
+    assert d.n_negative_gaps == 1 and q.p50 * 1_000_000 == d.p50_us == -50_000_000
 
 
 def test_gap_quantile_columns_named_exactly(spark):
     """Column names carry the exact percent: 0.29 is p29 (not p28), 0.57
     is p57, 0.999 is p99_9 beside p99 — never two columns of one name;
     the default names stay p50/p90/p99 (and p50_us.. in the discrete
-    variant)."""
-    from pacts_spark.checks.timegaps import gap_quantiles_discrete
-
+    variant); on 1,000 gaps the sketch equals the exact discrete
+    quantiles."""
     df = spark.range(1, 1002).select(
         F.lit("c").alias("conv_id"),
         F.col("id").cast("int").alias("turn_idx"),
         # gap before turn i is i seconds: gaps 2..1001
         F.timestamp_seconds(F.col("id") * (F.col("id") + 1) / 2).alias("ts"),
     )
-    q = gap_quantiles(df, quantiles=[0.29, 0.57, 0.99, 0.999], exact=True)
+    q = gap_quantiles(df, quantiles=[0.29, 0.57, 0.99, 0.999])
     assert q.columns[:4] == ["p29", "p57", "p99", "p99_9"]
     row = q.collect()[0]
-    # 1000 gaps 2..1001; percentile() interpolates at rank q * (n - 1)
-    assert [row.p29, row.p57, row.p99, row.p99_9] == pytest.approx(
-        [2 + q * 999 for q in (0.29, 0.57, 0.99, 0.999)]
-    )
     assert gap_quantiles(df).columns[:3] == ["p50", "p90", "p99"]
 
-    d = gap_quantiles_discrete(df, quantile_fracs=((29, 100), (99, 100), (999, 1000)))
-    assert d.columns[1:4] == ["p29_us", "p99_us", "p99_9_us"]
-    row = d.collect()[0]
-    assert (row.p29_us, row.p99_us, row.p99_9_us) == (
-        291_000_000, 991_000_000, 1_000_000_000,
+    d = gap_quantiles_discrete(
+        df, quantile_fracs=((29, 100), (57, 100), (99, 100), (999, 1000))
     )
+    assert d.columns[1:5] == ["p29_us", "p57_us", "p99_us", "p99_9_us"]
+    exact = d.collect()[0]
+    # 1000 gaps 2..1001: the element at rank ceil(q * n)
+    assert (exact.p29_us, exact.p57_us, exact.p99_us, exact.p99_9_us) == (
+        291_000_000, 571_000_000, 991_000_000, 1_000_000_000,
+    )
+    assert [row.p29, row.p57, row.p99, row.p99_9] == [291.0, 571.0, 991.0, 1000.0]
     assert gap_quantiles_discrete(df).columns[1:4] == ["p50_us", "p90_us", "p99_us"]
 
     with pytest.raises(ValueError, match="duplicate"):
@@ -356,14 +384,12 @@ def test_whale_conversation_window_checks(spark):
     """Skew evidence for the WINDOW paths (north_star: 'skew from long
     conversations'): one 2M-turn conversation — a single fat window
     partition for the lag/rank computations — plus a normal one. The
-    whale must flow through gap quantiles and both uniqueness paths with
+    whale must flow through gap quantiles and the uniqueness groupBy with
     exact results (lag is a single streaming pass per partition; map-side
     partial aggregation collapses the whale's hot (conv_id, turn_idx)
     duplicate key before the exchange). Closed-form input: every whale
     gap is exactly 1s."""
     from pyspark.sql import functions as F
-
-    from pacts_spark.checks.timegaps import gap_quantiles_discrete
 
     n = 2_000_000
     whale = spark.range(n).select(
@@ -394,19 +420,15 @@ def test_whale_conversation_window_checks(spark):
             F.timestamp_micros(F.lit(7_000_000) + F.col("id")).alias("ts"),
         )
     )
-    for d in (
-        duplicate_keys(dup, ["conv_id", "turn_idx"]).collect(),
-        duplicate_keys_hashed(dup, ["conv_id", "turn_idx"]).collect(),
-    ):
-        assert len(d) == 1
-        assert d[0]["conv_id"] == "whale" and d[0]["turn_idx"] == 7
-        assert d[0]["dup_count"] == 4
+    d = duplicate_keys(dup, ["conv_id", "turn_idx"]).collect()
+    assert len(d) == 1
+    assert d[0]["conv_id"] == "whale" and d[0]["turn_idx"] == 7
+    assert d[0]["dup_count"] == 4
 
 
-def test_duplicate_keys_hashed_equals_plain(spark):
-    """duplicate_keys_hashed (8-byte-hash shuffle + exact tail verify)
-    must return exactly the plain groupBy's result and a pure-Python
-    Counter's, including under a 5,000-fold hot key."""
+def test_duplicate_keys_hot_key_equals_counter(spark):
+    """duplicate_keys returns exactly a pure-Python Counter's duplicate
+    set, including under a 5,000-fold hot key."""
     df = spark.range(200_000).select(
         F.concat(F.lit("conv-"), (F.col("id") % 40_000)).alias("conv_id"),
         # ids 0..39999 five-fold -> turn collisions by construction, plus a
@@ -421,13 +443,9 @@ def test_duplicate_keys_hashed_equals_plain(spark):
         (r.conv_id, r.turn_idx): r.dup_count
         for r in duplicate_keys(t, ["conv_id", "turn_idx"]).collect()
     }
-    b = {
-        (r.conv_id, r.turn_idx): r.dup_count
-        for r in duplicate_keys_hashed(t, ["conv_id", "turn_idx"]).collect()
-    }
     counter = Counter((f"conv-{i % 40_000}", i % 13) for i in range(200_000))
     counter[("conv-7", 7)] += 5_000
-    assert a == b == {k: n for k, n in counter.items() if n > 1} and len(a) > 0
+    assert a == {k: n for k, n in counter.items() if n > 1} and len(a) > 0
     assert a[("conv-7", 7)] >= 5_000
 
 

@@ -1063,7 +1063,7 @@ def test_doc_fingerprint_normalizes(docs):
 
 
 def test_multimodal_features(spark):
-    from pacts_spark.datapipe.multimodal import MEDIA_SCHEMA, extract_features, frame_sample_plan
+    from pacts_spark.datapipe.multimodal import MEDIA_SCHEMA, extract_features
 
     rows = [
         (1, "image", b"\x89PNGfake", "image/png", 64, 64, None),
@@ -1077,8 +1077,6 @@ def test_multimodal_features(spark):
     # deterministic: same blob → same feature
     feats2 = extract_features(df, dim=8).collect()
     assert [r.feature for r in feats] == [r.feature for r in feats2]
-    plan = frame_sample_plan(df, every_ms=1000).collect()
-    assert [(r.media_id, r.frame_ts_ms) for r in plan] == [(3, 0), (3, 1000), (3, 2000)]
 
 
 def test_multimodal_pillow_hook(spark):
@@ -1222,12 +1220,15 @@ def test_sampling_threshold_rounding():
 
 
 def test_hash_sample_deterministic_and_nested(spark):
-    from pacts_spark.datapipe.sampling import hash_sample, stratified_hash_sample
+    from pacts_spark.datapipe.sampling import stratified_hash_sample
 
     docs = spark.range(0, 2000).select(F.col("id").alias("doc_id"))
-    s10a = {r.doc_id for r in hash_sample(docs, 0.1).collect()}
-    s10b = {r.doc_id for r in hash_sample(docs, 0.1).collect()}
-    s30 = {r.doc_id for r in hash_sample(docs, 0.3).collect()}
+    one = docs.withColumn("s", F.lit("all"))  # a single stratum: a uniform sample
+
+    def sample(rate):
+        return {r.doc_id for r in stratified_hash_sample(one, {"all": rate}, "s").collect()}
+
+    s10a, s10b, s30 = sample(0.1), sample(0.1), sample(0.3)
     assert s10a == s10b                      # deterministic
     assert s10a <= s30                       # nested under rate increase
     assert 0.05 < len(s10a) / 2000 < 0.15    # near the target rate

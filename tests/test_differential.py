@@ -15,8 +15,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from pacts_spark import oracle
-from pacts_spark.compiler import payload_as_json
 from pacts_spark.transcripts import TURN_SCHEMA, generate_transcripts
+from tests.conftest import payload_as_json
 
 
 def _random_payload(rng: random.Random) -> object:
@@ -95,12 +95,11 @@ def test_generator_relational_differential(spark, engine, registry):
 
 def test_generator_skew_uniqueness(spark):
     """SURVEY.md §5.2(5): a whale conversation does not break uniqueness —
-    the plain groupBy, the hashed path and a pure-Python Counter agree on
-    the duplicate set of skewed data."""
+    the groupBy and a pure-Python Counter agree on the duplicate set of
+    skewed data."""
     from collections import Counter
 
     from pacts_spark.checks import duplicate_keys
-    from pacts_spark.checks.uniqueness import duplicate_keys_hashed
 
     t = generate_transcripts(
         spark, n_convs=50, mean_turns=10, seed=11, skew_frac=0.5, dup_rate=0.05
@@ -111,15 +110,11 @@ def test_generator_skew_uniqueness(spark):
     assert top["count"] / total > 0.3  # the whale is real
 
     keys = ["conv_id", "turn_idx"]
-    plain = {
+    dups = {
         (r.conv_id, r.turn_idx): r.dup_count
         for r in duplicate_keys(t, keys).collect()
     }
-    hashed = {
-        (r.conv_id, r.turn_idx): r.dup_count
-        for r in duplicate_keys_hashed(t, keys).collect()
-    }
     counter = Counter(tuple(r) for r in t.select(*keys).collect())
-    assert plain == hashed == {k: n for k, n in counter.items() if n > 1}
-    assert len(plain) > 0
+    assert dups == {k: n for k, n in counter.items() if n > 1}
+    assert len(dups) > 0
     t.unpersist()

@@ -11,8 +11,8 @@ from pyspark.sql import functions as F
 
 from pacts_spark import errors as E
 from pacts_spark import oracle
-from pacts_spark.compiler import payload_as_json
 from pacts_spark.engine import ValidationException
+from tests.conftest import payload_as_json
 
 
 INV_PAYLOADS = [

@@ -22,6 +22,9 @@ reintroduce a scale-killer:
 - no output of a relational ``ValidationRun.run`` holds a Python-fed RDD
   or a Python evaluation in its optimized plan (literal frames are JVM
   ``LocalRelation``s);
+- ``run()``'s uniqueness is the plain groupBy on the key: neither the
+  violations nor the verdicts plan holds an ``xxhash64`` (the removed
+  hash-first detector's phase 1);
 - the vector grid router sizes keyed groups on the scoring exchange
   (one exchange below the LSH block scoring) and the unkeyed grid with
   a broadcast count that runs no job at plan build.
@@ -128,6 +131,27 @@ def test_run_outputs_plan_no_python(spark, engine, tmp_path):
     for name in ("violations", "verdicts", "stats", "drift", "gaps"):
         plan = getattr(res, name)._jdf.queryExecution().optimizedPlan().toString()
         assert not re.search(r"LogicalRDD|ExistingRDD|EvalPython", plan), (name, plan)
+
+
+def test_run_uniqueness_is_plain_groupby(spark, engine, tmp_path):
+    """``run()`` finds duplicate keys with one groupBy on (conv_id,
+    turn_idx): no ``xxhash64`` in the violations or verdicts plan."""
+    from pacts_spark.runner import ValidationRun
+    from pacts_spark.transcripts import conversations_dim, tools_dim
+
+    path = str(tmp_path / "turns")
+    entry._transcripts(spark, str(SF_SMALL)).write.parquet(path)
+    events = spark.read.parquet(f"{SF_SMALL}/events.parquet")
+    res = ValidationRun(engine).run(
+        spark,
+        spark.read.parquet(path),
+        conversations=conversations_dim(events),
+        tools=tools_dim(spark),
+    )
+    for name in ("violations", "verdicts"):
+        plan = getattr(res, name)._jdf.queryExecution().optimizedPlan().toString()
+        assert "xxhash64" not in plan, (name, plan)
+        assert "Aggregate [conv_id#" in plan, (name, plan)
 
 
 def test_ri_check_is_broadcast_anti_join(spark):

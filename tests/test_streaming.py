@@ -49,12 +49,12 @@ def test_stream_validation_matches_batch(spark, engine, tmp_path):
 
 
 def test_consume_seam_batch_equals_stream(spark, engine, tmp_path):
-    """The source-adapter consume path (get_stream_source('file') →
+    """The source-adapter consume path (FileStreamSource →
     consume) must produce EXACTLY the rows the batch JSON-mode validator
     produces on the same payload lines — the seam adds routing, never
     semantics. Kafka differs only in the constructor (same value-column
     shape), so this parity is what broker parity rides on."""
-    from pacts_spark.streaming import consume, get_stream_source
+    from pacts_spark.streaming import FileStreamSource, consume
 
     src = tmp_path / "payloads"
     src.mkdir()
@@ -69,7 +69,7 @@ def test_consume_seam_batch_equals_stream(spark, engine, tmp_path):
     ]
     (src / "m0.txt").write_text("\n".join(lines))
 
-    source = get_stream_source("file")
+    source = FileStreamSource()
     validated = consume(
         engine, source, spark, str(src), "inventory", "inventory_item"
     )
@@ -103,7 +103,7 @@ def test_kafka_source_refuses_without_connector(spark):
     connector on the classpath → clear RuntimeError at construction."""
     import pytest
 
-    from pacts_spark.streaming import KafkaStreamSource, get_stream_source
+    from pacts_spark.streaming import KafkaStreamSource
 
     has_kafka = True
     try:
@@ -118,11 +118,7 @@ def test_kafka_source_refuses_without_connector(spark):
         assert src.format == "kafka"
     else:
         with pytest.raises(RuntimeError, match="Kafka connector"):
-            get_stream_source("kafka", spark, bootstrap_servers="broker:9092")
-    with pytest.raises(ValueError, match="unknown stream source"):
-        get_stream_source("amqp")
-    with pytest.raises(ValueError, match="needs the SparkSession"):
-        get_stream_source("kafka")
+            KafkaStreamSource(spark, "broker:9092")
 
 
 def test_windowed_verdicts_batch_semantics(spark, engine):
