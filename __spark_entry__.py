@@ -178,11 +178,10 @@ def _run(spark: SparkSession, sf_dir: str) -> RunResult:
     """``ValidationRun.run`` over the derived transcripts and dimensions:
     the one source of the violations and verdicts entry/queries return."""
     events = _load(spark, sf_dir, "events")
-    # persist: the check branches fan out from the derived (windowed)
-    # transcripts and Spark does NOT reuse the window exchange across
-    # union branches (measured 6 scans + 6 windows, 5.5s -> 1.3s with the
-    # cache at sf0.001). A materialized table is cheaper re-read than cached.
-    t = transcripts_from_events(events).persist()
+    # not persisted: with the checks on one flagged frame a cache no longer
+    # pays (sf0.001, local[4], violations + verdicts, 5 interleaved warm
+    # reps: 2.30 s median cached, 2.37 s not)
+    t = transcripts_from_events(events)
     return ValidationRun(_engine()).run(
         spark, t, conversations=conversations_dim(events), tools=tools_dim(spark)
     )

@@ -62,14 +62,16 @@ def drift_scores(current: DataFrame, baseline: DataFrame) -> DataFrame:
             F.coalesce(F.max(cat.isNull()), F.lit(False)).alias(has_null),
         ]
 
+    # both inputs hold one row per (part, category), never per input row:
+    # one task scores them, with no shuffle or job after the histograms'
     cur = (
-        current.groupBy("part", "category")
+        current.coalesce(1).groupBy("part", "category")
         .agg(F.sum("n").alias("n"))
         .groupBy("part")
         .agg(*hist("cur", "tot_n", "cur_null"))
     )
     base = (
-        baseline.groupBy("category")
+        baseline.coalesce(1).groupBy("category")
         .agg(F.sum("n").alias("n"))
         .agg(*hist("base", "tot_m", "base_null"))
     )

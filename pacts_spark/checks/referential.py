@@ -16,7 +16,7 @@ violation, not an RI violation — matches SQL FK semantics).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -43,11 +43,13 @@ def ri_violations(
     )
     if select_cols:
         orphans = orphans.select(*select_cols)
-    return orphans.withColumn(
-        "violation",
-        F.concat(
-            F.lit(f"Referential violation: {fact_key}="),
-            F.col(fact_key).cast("string"),
-            F.lit(" not in dimension"),
-        ),
+    return orphans.withColumn("violation", ri_message(fact_key))
+
+
+def ri_message(fact_key: str) -> Column:
+    """``Referential violation: {fact_key}=<v> not in dimension``."""
+    return F.concat(
+        F.lit(f"Referential violation: {fact_key}="),
+        F.col(fact_key).cast("string"),
+        F.lit(" not in dimension"),
     )

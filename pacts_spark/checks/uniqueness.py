@@ -23,18 +23,21 @@ is one groupBy on the key (``duplicate_keys``) whose partial (map-side)
 aggregation collapses a hot key to one row per mapper before the
 exchange, so a whale conversation or a billion-fold duplicate never
 straggles a reducer — no salt is needed for a count.
-``uniqueness_violations`` joins the duplicate set back null-safely: two
-reads of the input. An 8-byte-hash first phase with an exact re-group of
-the candidates (three reads) was the runner's path until it was
-measured on 4 cores: on perfbench ``batch_full`` (10 alternating pairs)
-the plain groupBy wrote fewer shuffle and output bytes per pass (io_mb
-8.99 → 8.07 MB median, lower in 10 of 10) and used no more CPU (cpu_s
-9.02 → 8.01 s, lower in 7 of 10), so it is the one detector.
+``flag_duplicates`` (under ``uniqueness_violations`` and the runner's
+flagged frame) joins it back null-safely: two reads of the input. An
+8-byte-hash first phase with an exact re-group of the candidates (three
+reads) was the runner's path until it was measured on 4 cores: on
+perfbench ``batch_full`` (10 alternating pairs) the plain groupBy wrote
+fewer shuffle and output bytes per pass (io_mb 8.99 → 8.07 MB median,
+lower in 10 of 10) and used no more CPU (cpu_s 9.02 → 8.01 s, lower in
+7 of 10), so it is the one detector.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -49,20 +52,12 @@ def duplicate_keys(df: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
-def uniqueness_violations(
-    df: DataFrame,
-    keys: list[str],
-    broadcast_dups: bool = True,
-    method: str | None = None,
+def flag_duplicates(
+    df: DataFrame, keys: list[str], broadcast_dups: bool = True
 ) -> DataFrame:
-    """Exploded per-row violation form: every row whose key is duplicated,
-    tagged with the reference-style message catalog extension
-    ``Duplicate key: (k1=v1, k2=v2) appears N times``.
-
-    The duplicate set is :func:`duplicate_keys`. ``method`` is accepted
-    and ignored: it chose between two detectors, and callers that still
-    pass it (perfbench's traced uniqueness layer passes ``"hash"``) get
-    the one detector.
+    """``df`` plus ``dup_count``: the multiplicity of the row's key when it
+    is duplicated, NULL when it is unique — :func:`duplicate_keys` joined
+    back null-safely (module docstring; ``<=>`` is still a hash-join key).
 
     ``broadcast_dups=True`` hints the join-back (the duplicate set is
     normally the tail, so this is the common fast path). Set it False for
@@ -73,18 +68,36 @@ def uniqueness_violations(
     dups = duplicate_keys(df, keys)
     if broadcast_dups:
         dups = F.broadcast(dups)
-    # null-safe join-back (module docstring); <=> is still a hash-join key
-    dups_r = dups.select(
-        *[F.col(k).alias(f"__dk_{k}") for k in keys], "dup_count"
+    dups = dups.select(*[F.col(k).alias(f"__dk_{k}") for k in keys], "dup_count")
+    cond = reduce(Column.__and__, [df[k].eqNullSafe(dups[f"__dk_{k}"]) for k in keys])
+    return df.join(dups, on=cond, how="left").drop(*dups.columns[:-1])
+
+
+def uniqueness_violations(
+    df: DataFrame,
+    keys: list[str],
+    broadcast_dups: bool = True,
+    method: str | None = None,
+) -> DataFrame:
+    """Exploded per-row violation form: every row whose key is duplicated
+    (:func:`flag_duplicates`), tagged with the reference-style message
+    catalog extension ``Duplicate key: (k1=v1, k2=v2) appears N times``.
+
+    ``method`` is accepted and ignored: it chose between two detectors,
+    and callers that still pass it (perfbench's traced uniqueness layer
+    passes ``"hash"``) get the one detector.
+    """
+    return (
+        flag_duplicates(df, keys, broadcast_dups)
+        .filter(F.col("dup_count").isNotNull())
+        .withColumn("violation", duplicate_message(keys))
     )
-    cond = None
-    for k in keys:
-        c = df[k].eqNullSafe(F.col(f"__dk_{k}"))
-        cond = c if cond is None else (cond & c)
-    joined = df.join(dups_r, on=cond, how="inner").drop(
-        *[f"__dk_{k}" for k in keys]
-    )
-    msg = F.concat(
+
+
+def duplicate_message(keys: list[str]) -> Column:
+    """``Duplicate key: (k1=v1, k2=v2) appears N times`` from the row's
+    ``keys`` and ``dup_count``; ``concat_ws`` leaves out a NULL key part."""
+    return F.concat(
         F.lit("Duplicate key: ("),
         F.concat_ws(
             ", ", *[F.concat(F.lit(f"{k}="), F.col(k).cast("string")) for k in keys]
@@ -93,4 +106,3 @@ def uniqueness_violations(
         F.col("dup_count").cast("string"),
         F.lit(" times"),
     )
-    return joined.withColumn("violation", msg)

@@ -1,27 +1,27 @@
 """ValidationRun — the end-to-end pipeline (SURVEY.md §3.3 Spark lifecycle).
 
 source scan (pending partitions only) → fused row-check projection →
-engine checks (uniqueness on (conv_id, turn_idx), referential integrity) →
-violations (schema + engine-check rows, range-sorted) / per-partition
-verdicts → stats, drift, gaps → manifest record (``run_and_write``).
+the flagged frame (the validated rows plus one flag per engine check:
+``dup_count`` for uniqueness on (conv_id, turn_idx), one boolean per
+referential-integrity dimension) → violations (the failing rows'
+(check, violation) pairs, range-sorted) / per-partition verdicts →
+stats, drift, gaps → manifest record (``run_and_write``).
 
-One verdict definition, ``_verdicts``: a partition passes iff none of its
-rows has a schema error and no engine-check row falls in it. The row
-checks aggregate in ``engine.partition_verdicts``; the engine-check rows
-are counted per part and joined null-safely, so a NULL-ts partition
-(part NULL) keeps its uniqueness/RI rows — the partition-level
-counterpart of the null-safe key semantics of the uniqueness check.
+One verdict definition: a partition passes iff none of its rows has a
+schema error or a raised flag. The verdicts are one groupBy(part) of the
+flagged frame, so a NULL-ts partition (part NULL) keeps its
+uniqueness/RI violations — the partition-level counterpart of the
+null-safe key semantics of the uniqueness check.
 
 Shuffles: uniqueness (one groupBy on (conv_id, turn_idx); its duplicate
-set is broadcast back, so the branch reads the input twice), the
-verdict groupBys (partition-keyed, AQE-coalesced), stats (ONE groupBy on
+set is broadcast back, so each check output reads the input twice), the
+verdict groupBy (partition-keyed, AQE-coalesced), stats (ONE groupBy on
 (part, column) over the rows exploded per column), drift (ONE per-part
-role histogram, read as both the current and the baseline input; its
-groupBy(part), the baseline reduced to one broadcast row, and the output
-sort), the lag window (conv-keyed) and the violations range sort. RI
-joins are broadcast. Every output is a separate action that re-reads the
-input, so production input should be a materialized table, not an
-expensive derivation.
+role histogram, read as both the current and the baseline input and
+scored in one task), the lag window (conv-keyed) and the violations
+range sort. RI flags are broadcast existence joins. Every output is a
+separate action that re-reads the input, so production input should be
+a materialized table, not an expensive derivation.
 
 A relational ``ValidationRun`` runs no Python; Python runs only in
 JSON-mode/envelope validation, ``pattern`` checks and the datapipe
@@ -47,15 +47,18 @@ from pacts_spark.checks import (
     column_stats,
     drift_scores,
     gap_quantiles,
-    ri_violations,
-    uniqueness_violations,
 )
+from pacts_spark.checks.referential import ri_message
+from pacts_spark.checks.uniqueness import duplicate_message, flag_duplicates
 from pacts_spark.engine import PactsEngine
+
+
+# the uniqueness key of the transcripts table
+KEYS = ["conv_id", "turn_idx"]
 
 
 @dataclass
 class RunResult:
-    validated: DataFrame
     violations: DataFrame
     verdicts: DataFrame
     stats: DataFrame
@@ -86,26 +89,6 @@ class ValidationRun:
         self.category = category
         self.name = name
 
-    def _verdicts(self, validated: DataFrame, checks: DataFrame) -> DataFrame:
-        """Per-partition verdict from the validated rows and the engine-check
-        violation rows (``checks``: one uniqueness or RI row per violation,
-        ``part`` column)."""
-        rows = self.engine.partition_verdicts(validated, day_part())
-        counts = checks.groupBy(F.col("part").alias("check_part")).agg(
-            F.count(F.lit(1)).alias("n_check")
-        )
-        return (
-            rows.join(counts, rows["part"].eqNullSafe(counts["check_part"]), "left")
-            .fillna(0, subset=["n_check"])
-            .select(
-                "part",
-                (F.col("pass") & (F.col("n_check") == 0)).alias("pass"),
-                (F.col("n_violations") + F.col("n_check")).alias("n_violations"),
-                "n_invalid_rows",
-                "n_rows",
-            )
-        )
-
     def run(
         self,
         spark: SparkSession,
@@ -124,53 +107,58 @@ class ValidationRun:
 
         # ---- row-level schema checks (one fused projection, no shuffle)
         validated = self.engine.validate_data(transcripts, self.category, self.name)
-        row_viol = (
-            validated.filter(F.size("errors") > 0)
-            .select(
-                "conv_id",
-                "turn_idx",
-                part.alias("part"),
-                F.lit("schema").alias("check"),
-                F.explode("errors").alias("violation"),
-            )
+
+        # ---- the flagged frame: the validated rows plus one flag per engine
+        #      check, kept as (check, flag, message). Both check outputs
+        #      derive from it, so each reads the input twice (the scan and
+        #      the duplicate-key groupBy).
+        flagged = flag_duplicates(validated, KEYS)
+        checks = [("uniqueness", F.col("dup_count").isNotNull(), duplicate_message(KEYS))]
+        # RI: one broadcast ExistenceJoin per dimension (a left-outer join
+        # multiplies rows on a duplicate dim key; isin collects at plan
+        # build). The outer key is qualified: a bare name that the dim's
+        # lineage also holds resolves inside the subquery. The flags sit
+        # over the join: over a Union input they fail to plan.
+        for check, dim, key in (
+            ("referential_conv", conversations, "conv_id"),
+            ("referential_tool", tools, "tool"),
+        ):
+            if dim is not None:
+                known = F.broadcast(dim.select(key))
+                known = known.where(F.col(key) == F.col(f"__f.{key}").outer())
+                flagged = flagged.alias("__f").withColumn(
+                    check, F.col(key).isNotNull() & ~known.exists()
+                )
+                checks.append((check, F.col(check), ri_message(key)))
+
+        # violations: (check, violation) structs built for failing rows only
+        # (most rows pass; structs built for them are CPU for nothing), one
+        # inline, ONE range sort. No Filter: Catalyst pushes it below the
+        # flags and plans each ExistenceJoin twice.
+        def entry(check: str, violation: Column) -> Column:
+            return F.struct(F.lit(check).alias("check"), violation.alias("violation"))
+
+        failing = reduce(Column.__or__, [F.size("errors") > 0] + [f for _, f, _ in checks])
+        found = F.concat(
+            F.transform("errors", lambda e: entry("schema", e)),
+            F.array_compact(F.array(*[F.when(f, entry(c, m)) for c, f, m in checks])),
         )
-
-        # ---- engine checks, all in one (conv_id, turn_idx, part, check,
-        #      violation) shape.
-        # uniqueness is the plain groupBy plus a broadcast join-back: two
-        # reads of the input. An 8-byte-hash phase 1 with a candidate
-        # re-group took three, and on perfbench batch_full (4 cores, 10
-        # alternating pairs) wrote more (io_mb 8.99 vs 8.07 MB median)
-        # for no less CPU.
-        checks = [
-            uniqueness_violations(transcripts, ["conv_id", "turn_idx"]).select(
-                "conv_id", "turn_idx", part.alias("part"),
-                F.lit("uniqueness").alias("check"), "violation",
-            )
-        ]
-        if conversations is not None:
-            checks.append(
-                ri_violations(transcripts, conversations, "conv_id").select(
-                    "conv_id", "turn_idx", part.alias("part"),
-                    F.lit("referential_conv").alias("check"), "violation",
-                )
-            )
-        if tools is not None:
-            checks.append(
-                ri_violations(transcripts, tools, "tool").select(
-                    "conv_id", "turn_idx", part.alias("part"),
-                    F.lit("referential_tool").alias("check"), "violation",
-                )
-            )
-        engine_viol = reduce(DataFrame.unionByName, checks)
-
-        # ONE repartitionByRange after the union (sorting each branch
-        # separately would range-partition twice). The verdicts read the
-        # unsorted engine-check union, so their action has no range exchange.
         violations = (
-            row_viol.unionByName(engine_viol)
+            flagged.select(
+                "conv_id", "turn_idx", part.alias("part"), F.inline(F.when(failing, found))
+            )
             .repartitionByRange("conv_id", "turn_idx")
             .sortWithinPartitions("conv_id", "turn_idx", "check", "violation")
+        )
+
+        # verdicts: ONE groupBy(part) of the same frame; a partition passes
+        # iff no check fails in it (the NULL-ts rows' part is NULL)
+        n = reduce(Column.__add__, [F.size("errors")] + [f.cast("int") for _, f, _ in checks])
+        verdicts = flagged.groupBy(part.alias("part")).agg(
+            (F.sum(n) == 0).alias("pass"),
+            F.sum(n).alias("n_violations"),
+            F.sum((~F.col("valid")).cast("long")).alias("n_invalid_rows"),
+            F.count(F.lit(1)).alias("n_rows"),
         )
 
         # ---- metrics
@@ -192,9 +180,8 @@ class ValidationRun:
         # persisting outputs: run_and_write() does, or call
         # ``manifest.record(res.verdicts, ...)`` once your sinks commit.
         return RunResult(
-            validated=validated,
             violations=violations,
-            verdicts=self._verdicts(validated, engine_viol),
+            verdicts=verdicts,
             stats=stats,
             drift=drift,
             gaps=gaps,
@@ -211,16 +198,10 @@ class ValidationRun:
         seq: int = 0,
         pending_filtered: bool = False,
     ) -> dict:
-        """Production-shaped run of ``run()``: two actions, then the
+        """Production-shaped run of ``run()``: two actions, writing
+        ``run().violations`` then ``run().verdicts`` (each reads the input
+        twice, plus the violations' range-bound sampling), then the
         manifest record.
-
-          action 1: write ``run().violations`` (all check branches evaluate
-                    inside ONE job);
-          action 2: write the verdicts — ``_verdicts`` over run()'s
-                    validated frame and the engine-check rows read back
-                    from the WRITTEN violations, so no engine check runs
-                    twice. Same definition, so the same rows, as
-                    ``run().verdicts``.
 
         Returns {"violations_path", "verdicts_path"}.
         """
@@ -235,9 +216,8 @@ class ValidationRun:
         # (below) — see run()'s note on crash-safe resume ordering.
         vio_path = f"{out_dir}/violations"
         res.violations.write.mode("overwrite").parquet(vio_path)
-        checks = spark.read.parquet(vio_path).filter(F.col("check") != "schema")
         verd_path = f"{out_dir}/verdicts"
-        self._verdicts(res.validated, checks).write.mode("overwrite").parquet(verd_path)
+        res.verdicts.write.mode("overwrite").parquet(verd_path)
         if self.manifest is not None:
             self.manifest.record(
                 spark.read.parquet(verd_path), run_id=run_id, seq=seq

@@ -16,7 +16,11 @@ reintroduce a scale-killer:
   one HLL sketch in an ObjectHashAggregate (no sort-based aggregate);
 - drift scores plan at most 6 exchanges, and ``ValidationRun.run``'s
   drift scans its input once (the baseline reuses the per-part
-  histogram's exchange);
+  histogram's exchange) and writes in at most 3 jobs;
+- ``ValidationRun.run`` derives violations and verdicts from one
+  flagged frame: each plan reads the input twice (the scan and the
+  duplicate-key groupBy) and holds one broadcast ``ExistenceJoin`` per
+  dimension, with no branch ``Union`` and no RI ``LeftAnti``;
 - the validator's scan is column-pruned to the columns the schema
   actually checks;
 - no output of a relational ``ValidationRun.run`` holds a Python-fed RDD
@@ -84,10 +88,10 @@ def test_validator_is_scan_project_only_on_materialized_table(
 
 
 def test_verdicts_plan_has_no_range_sort_or_explode(spark, engine, tmp_path):
-    """On a materialized transcripts table the verdict action aggregates
-    the row checks and the UNSORTED engine-check union: the violations'
-    range exchange (and its sampling job) and the schema-error explode
-    belong to the violations output only."""
+    """On a materialized transcripts table the verdict action is one
+    aggregate of the flagged frame: the violations' range exchange (and
+    its sampling job) and their (check, violation) inline belong to the
+    violations output only."""
     from pacts_spark.runner import ValidationRun
     from pacts_spark.transcripts import conversations_dim, tools_dim
 
@@ -131,6 +135,32 @@ def test_run_outputs_plan_no_python(spark, engine, tmp_path):
     for name in ("violations", "verdicts", "stats", "drift", "gaps"):
         plan = getattr(res, name)._jdf.queryExecution().optimizedPlan().toString()
         assert not re.search(r"LogicalRDD|ExistingRDD|EvalPython", plan), (name, plan)
+
+
+def test_check_outputs_read_input_twice_with_existence_joins(spark, engine, tmp_path):
+    """Violations and verdicts both derive from the flagged frame: each
+    plan scans the transcripts table twice (the validated rows and the
+    duplicate-key groupBy) and holds one ExistenceJoin per dimension; no
+    per-check branch is unioned and no RI anti-join remains."""
+    from pacts_spark.runner import ValidationRun
+    from pacts_spark.transcripts import conversations_dim, tools_dim
+
+    path = str(tmp_path / "turns")
+    entry._transcripts(spark, str(SF_SMALL)).write.parquet(path)
+    events = spark.read.parquet(f"{SF_SMALL}/events.parquet")
+    res = ValidationRun(engine).run(
+        spark,
+        spark.read.parquet(path),
+        conversations=conversations_dim(events),
+        tools=tools_dim(spark),
+    )
+    for name in ("violations", "verdicts"):
+        plan = _plan(getattr(res, name))
+        # the events scan (conversations dimension) reads no turn_idx
+        scans = [ln for ln in plan.splitlines() if "FileScan" in ln and "turn_idx" in ln]
+        assert len(scans) == 2, (name, plan)
+        assert plan.count("ExistenceJoin") == 2, (name, plan)
+        assert "Union" not in plan and "LeftAnti" not in plan, (name, plan)
 
 
 def test_run_uniqueness_is_plain_groupby(spark, engine, tmp_path):
@@ -201,9 +231,9 @@ def test_colstats_one_hll_sketch_in_object_hash_aggregate(spark):
 
 
 def test_drift_plan_has_at_most_six_exchanges(spark, tmp_path):
-    """Drift over a table's role histograms: the two histogram shuffles,
-    one groupBy(part), the baseline's single-row aggregate, its broadcast
-    and the output sort — no join-built (part, category) domain."""
+    """Drift over a table's role histograms: the two histogram shuffles
+    and the baseline's broadcast (both inputs are scored in one task) —
+    no join-built (part, category) domain."""
     from pacts_spark.checks import category_histogram, drift_scores
     from pacts_spark.runner import day_part
 
@@ -231,6 +261,27 @@ def test_run_drift_scans_input_once(spark, engine, tmp_path):
     final = _plan(drift).split("== Initial Plan ==")[0]
     assert final.count("FileScan") == 1, final
     assert "ReusedExchange" in final, final
+
+
+def test_run_drift_writes_in_at_most_three_jobs(spark, engine, tmp_path):
+    """Both drift inputs are histograms (one row per part and category),
+    scored in one task: writing ``run().drift`` runs the histogram's map
+    stage, the baseline's broadcast and the write — at most 3 jobs."""
+    from pacts_spark.runner import ValidationRun
+
+    path = str(tmp_path / "turns")
+    entry._transcripts(spark, str(SF_SMALL)).write.parquet(path)
+    drift = ValidationRun(engine).run(spark, spark.read.parquet(path)).drift
+    sc = spark.sparkContext
+    group = "test-run-drift-jobs"
+    sc.setJobGroup(group, "run().drift write")
+    try:
+        drift.write.parquet(str(tmp_path / "drift"))
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(jobs) <= 3, list(jobs)
 
 
 def test_validator_scan_is_column_pruned(spark, engine):

@@ -3,13 +3,16 @@
 from __future__ import annotations
 
 from datetime import datetime
+from functools import reduce
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from pacts_spark.checkpoint import MANIFEST_SCHEMA, ValidationManifest
-from pacts_spark.runner import ValidationRun, day_part
+from pacts_spark.checks import ri_violations, uniqueness_violations
+from pacts_spark.runner import KEYS, ValidationRun, day_part
 from pacts_spark.transcripts import (
     conversations_dim,
     tools_dim,
@@ -172,6 +175,113 @@ def test_null_ts_partition_verdicts(spark, engine, tmp_path):
     assert _verdict_rows(written) == _verdict_rows(res.verdicts)
     status = [r.status for r in manifest.read(spark).collect() if r.part is None]
     assert status == ["failed"]
+
+
+_TURNS_DDL = (
+    "conv_id string, turn_idx int, role string, text string, ts timestamp, tool string"
+)
+
+
+def _reference_outputs(engine, transcripts, conversations, tools):
+    """``run()``'s violations and verdicts as a union of separately
+    scanned branches: the schema explode, ``uniqueness_violations`` and
+    one ``ri_violations`` per dimension; the verdicts count that union's
+    engine-check rows per part and join them null-safely to the row
+    checks' per-part aggregate."""
+    part = day_part()
+    cols = ["conv_id", "turn_idx", part.alias("part")]
+    validated = engine.validate_data(transcripts, "transcripts", "turn")
+    schema = validated.select(
+        *cols, F.lit("schema").alias("check"), F.explode("errors").alias("violation")
+    )
+    checks = reduce(
+        DataFrame.unionByName,
+        [
+            v.select(*cols, F.lit(name).alias("check"), "violation")
+            for name, v in (
+                ("uniqueness", uniqueness_violations(transcripts, KEYS)),
+                ("referential_conv", ri_violations(transcripts, conversations, "conv_id")),
+                ("referential_tool", ri_violations(transcripts, tools, "tool")),
+            )
+        ],
+    )
+    rows = engine.partition_verdicts(validated, part)
+    counts = checks.groupBy(F.col("part").alias("check_part")).agg(
+        F.count(F.lit(1)).alias("n_check")
+    )
+    verdicts = (
+        rows.join(counts, rows["part"].eqNullSafe(counts["check_part"]), "left")
+        .fillna(0, subset=["n_check"])
+        .select(
+            "part",
+            (F.col("pass") & (F.col("n_check") == 0)).alias("pass"),
+            (F.col("n_violations") + F.col("n_check")).alias("n_violations"),
+            "n_invalid_rows",
+            "n_rows",
+        )
+    )
+    return schema.unionByName(checks), verdicts
+
+
+def _rows(df) -> list:
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def test_flagged_frame_matches_branch_union_reference(
+    spark, engine, events_small, transcripts
+):
+    """``run()`` derives violations and verdicts from one flagged frame;
+    both equal the branch-union reference row for row on the sf0.001
+    transcripts unioned with rows that hit every corner: duplicates of a
+    NULL-key turn, NULL-ts rows (one of them duplicated, one an orphan
+    tool), orphan conversations and tools, and dimensions holding
+    duplicate and NULL keys. (A Union input is itself a corner: a
+    subquery projection right over one fails to plan.)"""
+    day = datetime(2025, 1, 1, 9)
+    extra = spark.createDataFrame(
+        [
+            (None, 1, "user", "a", day, None),
+            (None, 1, "user", "b", day, "tool-1"),
+            ("conv-x", None, "user", None, day, "tool-9"),
+            ("conv-x", None, "user", "x", None, None),
+            ("conv-1", 7, "user", "x", None, "tool-8"),
+            ("conv-1", 7, None, "x", None, "tool-0"),
+            ("conv-y", 1, "user", "x", day, "tool-7"),
+        ],
+        _TURNS_DDL,
+    )
+    t = transcripts.select(*extra.columns).unionByName(extra)
+    dim_rows = spark.createDataFrame([("conv-1",), ("conv-1",), (None,)], "conv_id string")
+    conversations = conversations_dim(events_small).unionByName(dim_rows)
+    tools = tools_dim(spark).unionByName(
+        spark.createDataFrame([("tool-0",), (None,)], "tool string")
+    )
+    res = ValidationRun(engine).run(spark, t, conversations=conversations, tools=tools)
+    want_viol, want_verd = _reference_outputs(engine, t, conversations, tools)
+    got = _rows(res.violations)
+    assert got == _rows(want_viol)
+    assert {r[3] for r in got} == {
+        "schema", "uniqueness", "referential_conv", "referential_tool"
+    }
+    assert _rows(res.verdicts) == _rows(want_verd)
+
+
+def test_null_key_duplicate_message_matches_standalone(spark, engine):
+    """A duplicated key with a NULL part gets the same message from
+    ``run()`` and from ``uniqueness_violations``: the NULL part is left
+    out, the message is not NULL."""
+    day = datetime(2025, 1, 1, 9)
+    t = spark.createDataFrame(
+        [(None, 1, "user", "a", day, None), (None, 1, "user", "b", day, None)],
+        _TURNS_DDL,
+    )
+    got = ValidationRun(engine).run(spark, t).violations.filter(
+        F.col("check") == "uniqueness"
+    )
+    want = uniqueness_violations(t, KEYS)
+    msgs = sorted(r.violation for r in got.collect())
+    assert msgs == sorted(r.violation for r in want.collect())
+    assert msgs == ["Duplicate key: (turn_idx=1) appears 2 times"] * 2
 
 
 @pytest.mark.parametrize("fmt", ["parquet", "iceberg"])
