@@ -285,8 +285,8 @@ SELECT conv_id, turn_idx, 'schema', 'Required field missing: ts'
 FROM t WHERE ts IS NULL
 UNION ALL
 SELECT t.conv_id, t.turn_idx, 'uniqueness',
-       'Duplicate key: (conv_id=' || t.conv_id || ', turn_idx=' ||
-       CAST(t.turn_idx AS VARCHAR) || ') appears ' ||
+       'Duplicate key: (' || concat_ws(', ', 'conv_id=' || t.conv_id,
+       'turn_idx=' || CAST(t.turn_idx AS VARCHAR)) || ') appears ' ||
        CAST(d.cnt AS VARCHAR) || ' times'
 FROM t JOIN dups d ON t.conv_id IS NOT DISTINCT FROM d.conv_id
                   AND t.turn_idx IS NOT DISTINCT FROM d.turn_idx

@@ -2,9 +2,12 @@
 mode: ``spark-submit --py-files dist/pacts_spark.zip jobs/validate_job.py``).
 
 On a cluster the SparkSession comes from spark-submit's conf (master,
-executor counts, memory); this script only adds job-level SQL conf. The
-same file runs unchanged at N and 4N executors — scaling is a submit-time
-concern, never a code change.
+executor counts, memory, shuffle partitions) plus the engine's settings
+from ``pacts_spark.session.ENGINE_CONF`` (AQE, Arrow, UTC, the zstd
+block codec for shuffle, broadcast and spill), each filled in only where
+the submit conf does not set it: a ``--conf`` value wins. The same file
+runs unchanged at N and 4N executors — scaling is a submit-time concern,
+never a code change.
 
 Usage (local smoke):
   python tools/package_pyfiles.py
@@ -18,7 +21,6 @@ Cluster shape (documented, not runnable in this sandbox):
   spark-submit --master yarn --deploy-mode cluster \\
     --num-executors 250 --executor-cores 4 --executor-memory 16g \\
     --conf spark.sql.shuffle.partitions=2000 \\
-    --conf spark.sql.adaptive.enabled=true \\
     --py-files dist/pacts_spark.zip jobs/validate_job.py \\
     --transcripts iceberg.prod.transcripts --out s3://.../validation \\
     --manifest s3://.../manifest --run-id nightly-2026-08-17 --seq 42
@@ -51,17 +53,9 @@ def main() -> None:
     ap.add_argument("--seq", type=int, required=True, help="monotone sequence (never now())")
     args = ap.parse_args()
 
-    # session comes from spark-submit conf; only SQL-level settings here
-    from pyspark.sql import SparkSession
+    from pacts_spark.session import submit_session
 
-    spark = (
-        SparkSession.builder.appName(f"pacts-validate-{args.run_id}")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = submit_session(f"pacts-validate-{args.run_id}")
 
     from pacts_spark.checkpoint import ValidationManifest
     from pacts_spark.engine import PactsEngine

@@ -1,21 +1,49 @@
-"""SparkSession builder tuned for the validation engine.
+"""SparkSession settings for the validation engine, for both launch paths.
 
-Local-mode settings mirror what a 1000-executor cluster run would set via
-``spark-submit --py-files`` (north_rule launch mode): AQE on (skew-join
-splitting + shuffle coalescing), Arrow for pandas UDFs, shuffle partitions
-sized to the parallelism level. At 100 TB the same job runs unchanged with
-``spark.sql.shuffle.partitions`` raised to O(cores × 2-3) and the table
-behind an Iceberg catalog (this sandbox has no Iceberg jars; the engine's
-table layer is plain parquet with the Iceberg DDL documented in
+``ENGINE_CONF`` holds the engine's session settings once: AQE on
+(skew-join splitting + shuffle coalescing), Arrow for pandas UDFs, UTC
+session time, a 64 MB broadcast threshold and zstd blocks. ``get_spark``
+(local mode: tests, ``bench.py``, perfbench) applies them with the local
+master, shuffle partitions, driver memory and GC. ``submit_session``
+(``jobs/validate_job.py`` under ``spark-submit --py-files``, the north_rule
+launch mode) fills in every key the submit conf does not hold; master,
+executors, memory and shuffle partitions come from spark-submit. At 100 TB
+the same job runs unchanged with ``spark.sql.shuffle.partitions`` raised
+to O(cores × 2-3) and the table behind an Iceberg catalog (the table
+layer defaults to plain parquet; the Iceberg DDL is documented in
 checkpoint.py).
+
+Block codec: ``spark.io.compression.codec`` is zstd, not Spark's default
+LZ4, for every shuffle, broadcast and spill block. The exchanges are the
+bytes that cross the network when a run scales out. On perfbench
+``batch_full`` (4 cores, 10 alternating pairs) zstd cut ``io_mb``
+8.13 → 2.95 MB, lower in every pair, with ``cpu_s`` and ``pass_s``
+inside their spread. Per pass on that table the five outputs shuffle
+2.81 MB with zstd, 7.96 MB with LZ4 and still 7.59 MB with 256 KB LZ4
+blocks. AQE coalesces partitions on the compressed bytes, so a small
+shuffle now runs in fewer reduce tasks. Written outputs keep Spark's
+parquet codec (snappy): those are the files users read.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+ENGINE_CONF: dict[str, str] = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    "spark.io.compression.codec": "zstd",
+}
 
 
 def get_spark(
@@ -26,33 +54,41 @@ def get_spark(
 ) -> SparkSession:
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(cores, 8)
-    b = (
-        SparkSession.builder.appName(app)
-        .master(f"local[{cores}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+    conf = {
+        **ENGINE_CONF,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "8g"),
         # throughput GC: G1 (the JVM default) collapsed under 32 concurrent
         # tasks' allocation pressure — the identical 16M-row pipeline ran
         # 39.3 s with G1 and 17.1 s with ParallelGC (measured round 2,
         # BENCH/BASELINE.md). Batch validation wants max throughput, not
         # pause bounds. On a cluster, set the same via
         # spark.executor.defaultJavaOptions.
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get("SPARK_GC_OPTS", "-XX:+UseParallelGC"),
-        )
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    )
-    for k, v in (extra or {}).items():
-        b = b.config(k, v)
-    return b.getOrCreate()
+        "spark.driver.extraJavaOptions": os.environ.get(
+            "SPARK_GC_OPTS", "-XX:+UseParallelGC"
+        ),
+        "spark.ui.enabled": "false",
+        **(extra or {}),
+    }
+    builder = SparkSession.builder.appName(app).master(f"local[{cores}]")
+    return builder.config(map=conf).getOrCreate()
+
+
+def submit_conf(submitted: Mapping[str, str]) -> dict[str, str]:
+    """``ENGINE_CONF`` under a submit conf: each key takes the value
+    ``submitted`` holds, else the engine's."""
+    return {k: submitted.get(k, v) for k, v in ENGINE_CONF.items()}
+
+
+def submit_session(app: str) -> SparkSession:
+    """The spark-submit path's session: the submit conf (``--conf``,
+    spark-defaults) as given, plus every ``ENGINE_CONF`` key it lacks.
+    Builder options override the submit conf, so the submit conf is read
+    first, from the JVM that spark-submit started."""
+    SparkContext._ensure_initialized()
+    submitted = dict(SparkConf().getAll())
+    builder = SparkSession.builder.appName(app)
+    return builder.config(map=submit_conf(submitted)).getOrCreate()
 
 
 def jvm_class_present(spark: SparkSession, class_name: str) -> bool:

@@ -173,7 +173,10 @@ def main() -> int:
     pq.write_table(pa.concat_tables([e, eextra]), dst / "embeddings.parquet")
 
     # -- events: NULL ts, NULL user, NULL/weird event_type, NaN/Inf
-    #    value, duplicate event_id, far-future/ancient ts, poisoned props
+    #    value, duplicate event_id, far-future/ancient ts, poisoned props,
+    #    and a second NULL-user event whose event_id % 97 = 0: with the
+    #    first one it makes two turns keyed (conv_id NULL, turn_idx 1), a
+    #    duplicated key with a NULL part
     ev = pq.read_table(src / "events.parquet")
     ebase = 9_000_000_000
     ets = pa.array(
@@ -185,8 +188,9 @@ def main() -> int:
          np.datetime64("2026-01-01T00:00:01", "us"),
          np.datetime64("2026-01-01T02:00:00", "us"),
          np.datetime64("2026-01-01T02:00:00.000001", "us"),
-         None],   # NULL ts on a user that ALSO has real events:
+         None,    # NULL ts on a user that ALSO has real events:
                   # exercises mixed-session in-transcript NULL ordering
+         None],
         type=pa.timestamp("us"),
     )
     n = len(ets)
@@ -194,28 +198,28 @@ def main() -> int:
         {
             "event_id": pa.array(
                 [ebase, ebase + 1, ebase + 2, ebase + 3, ebase + 3,
-                 ebase + 5, ebase + 6, ebase + 7, ebase + 8],
+                 ebase + 5, ebase + 6, ebase + 7, ebase + 8, ebase + 82],
                 type=pa.int64()
             ),
             "ts": ets,
             "user_id": pa.array(
                 [None, 7_777_001, 7_777_001, 7_777_002, 7_777_002,
-                 7_777_002, 7_777_002, 7_777_002, 7_777_002],
+                 7_777_002, 7_777_002, 7_777_002, 7_777_002, None],
                 type=pa.int64()
             ),
             "event_type": pa.array(
                 [None, "", "error", "click", "click", "error",
-                 "purchase", "purchase", "nullts"], type=pa.string()
+                 "purchase", "purchase", "nullts", "view"], type=pa.string()
             ),
             "value": pa.array(
                 [float("nan"), float("inf"), float("-inf"), None,
-                 1e308, -1e308, 0.0, 1.5, 2.5], type=pa.float64()
+                 1e308, -1e308, 0.0, 1.5, 2.5, 3.5], type=pa.float64()
             ),
             "props": pa.array(
                 [None, "", "not json", '{"turn_idx": "3"}',
                  '{"turn_idx": null}', '{"nested": {"deep": [1,2]}}',
                  '{"turn_idx": 9.5}', '{"turn_idx": 2}',
-                 '{"turn_idx": 4}'],
+                 '{"turn_idx": 4}', '{"turn_idx": 1}'],
                 type=pa.string(),
             ),
         },
