@@ -124,7 +124,7 @@ def anomalous_partitions(
 ) -> DataFrame:
     """Flag partitions whose violation RATE is a k-sigma outlier against
     the run's own partition population — ranks the per-partition
-    verdicts (engine.partition_verdicts) so a bad ingest day surfaces
+    verdicts (``ValidationRun.run``'s) so a bad ingest day surfaces
     instead of drowning in thousands of green partitions.
 
     EXACT integer math end to end (no float mean/std anywhere): rates

@@ -27,8 +27,7 @@ Scale notes:
   hit a materialized int array post-shuffle, and a single-file corpus
   parallelizes. The shuffle carries (id, int-array of ~n_tokens) — about
   the size of the text itself, linear and skew-free; far cheaper than
-  dim x md5 recompute. ``barrier=False`` restores the pure projection
-  for tiny frames;
+  dim x md5 recompute;
 - counting is O(dim * n_tokens) per row (a filter+size scan per bucket
   over the materialized array) — fine for the dim=32..256 regime this
   targets; all JVM-side.
@@ -52,8 +51,6 @@ def hashed_ngram_embedding(
     n: int = 1,
     text_col: str = "text",
     id_col: str = "doc_id",
-    barrier: bool = True,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """(id_col, embedding: array<double>[dim]) — L2-normalized hashed
     n-gram counts.
@@ -83,14 +80,7 @@ def hashed_ngram_embedding(
         F.transform(
             grams, lambda g: F.pmod(_md5_60(g), F.lit(dim)).cast("int")
         ).alias("__b"),
-    )
-    if barrier:
-        parts = (
-            n_partitions
-            if n_partitions is not None
-            else df.sparkSession.sparkContext.defaultParallelism
-        )
-        bucketed = bucketed.repartition(parts, F.col(id_col))
+    ).repartition(df.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
 
     # projection 2: raw counts per bucket (scans __b per bucket id; __b is
     # a materialized column reference, not a re-evaluated expression)

@@ -41,7 +41,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pacts_spark.checkpoint import ValidationManifest
+from pacts_spark.checkpoint import ValidationManifest, day_part
 from pacts_spark.checks import (
     category_histogram,
     column_stats,
@@ -64,16 +64,6 @@ class RunResult:
     stats: DataFrame
     drift: DataFrame
     gaps: DataFrame
-
-
-def day_part(ts_col: str = "ts") -> Column:
-    """days(ts) partition expression (FIXTURES.md §1 partitioning).
-
-    Stays DateType on purpose: casting to string per row routes every row
-    through java.time's DateTimeFormatter (measured as the pipeline's top
-    CPU consumer at 4M rows). Group/join on the 4-byte date; stringify
-    only tiny aggregated outputs (checkpoint.record does)."""
-    return F.to_date(F.col(ts_col))
 
 
 class ValidationRun:
@@ -100,10 +90,10 @@ class ValidationRun:
         part = day_part()
 
         # pending_filtered=True: the caller already excluded validated
-        # partitions (a table adapter's partition-pruned scan_pending) —
-        # don't anti-join a second time
+        # partitions (a table adapter's scan_pending, possibly on a
+        # physical partition column that need not equal day_part)
         if self.manifest is not None and not pending_filtered:
-            transcripts = self.manifest.filter_pending(spark, transcripts, part)
+            transcripts = transcripts.filter(self.manifest.pending(spark, part))
 
         # ---- row-level schema checks (one fused projection, no shuffle)
         validated = self.engine.validate_data(transcripts, self.category, self.name)

@@ -90,7 +90,7 @@ def test_resume_skips_validated_partitions(spark, engine, transcripts, tmp_path)
     assert done == half
 
     # run 2 over everything: must process ONLY the second half
-    pending = manifest.filter_pending(spark, transcripts, day_part())
+    pending = transcripts.filter(manifest.pending(spark, day_part()))
     seen = {str(r.p) for r in pending.select(day_part().alias("p")).distinct().collect()}
     assert seen == set(parts) - half
 
@@ -165,7 +165,7 @@ def test_null_ts_partition_verdicts(spark, engine, tmp_path):
     assert empty.count() == 0
     plan = empty._jdf.queryExecution().optimizedPlan().toString()
     assert "LocalRelation" in plan and "RDD" not in plan, plan
-    pending = manifest.filter_pending(spark, t, day_part()).collect()
+    pending = t.filter(manifest.pending(spark, day_part())).collect()
     assert sorted(pending, key=str) == sorted(t.collect(), key=str)
     out = ValidationRun(engine, manifest=manifest).run_and_write(
         spark, t, str(tmp_path / "out"), tools=tools_dim(spark),
@@ -284,37 +284,66 @@ def test_null_key_duplicate_message_matches_standalone(spark, engine):
     assert msgs == ["Duplicate key: (turn_idx=1) appears 2 times"] * 2
 
 
-@pytest.mark.parametrize("fmt", ["parquet", "iceberg"])
-def test_resume_scan_keeps_null_partition_pending(spark, tmp_path, fmt):
-    """Rows of a NULL partition were never validated, so a resumed scan
-    must keep them pending on either table format (a bare ``~isin`` is
-    NULL there and would drop them)."""
+@pytest.mark.parametrize(
+    "path",
+    ["parquet", "iceberg", "iceberg_hidden", "parquet_unpartitioned", "run"],
+)
+def test_resume_scan_keeps_null_partition_pending(spark, engine, tmp_path, path):
+    """Every resume path keeps the same rows for one manifest: both
+    adapters over a physical ``part`` column, the Iceberg adapter over a
+    table partitioned by hidden ``days(ts)`` (no ``part`` column), an
+    unpartitioned parquet table, and ``run()`` holding the manifest.
+
+    Rows of a NULL partition were never validated, so they stay pending (a
+    bare ``~isin`` is NULL there and would drop them) — also when the
+    manifest holds a NULL part marked validated: ``validated_parts`` must
+    not list it, or ``NOT IN (..., NULL)`` would drop every row."""
     from pacts_spark.table import IcebergTableAdapter, ParquetTableAdapter
 
     df = spark.createDataFrame(
-        [("c1", 1, "2026-01-01"), ("c2", 1, "2026-01-02"), ("c3", 1, None)],
-        "conv_id string, turn_idx int, part string",
+        [
+            ("c1", 1, "user", "a", datetime(2026, 1, 1, 9), None, "2026-01-01"),
+            ("c2", 1, "user", "b", datetime(2026, 1, 2, 9), None, "2026-01-02"),
+            ("c3", 1, "user", "c", None, None, None),
+        ],
+        f"{_TURNS_DDL}, part string",
     )
     manifest = ValidationManifest(tmp_path / "manifest")
     manifest.record(
         spark.createDataFrame(
-            [("2026-01-01", True, 1, 0)],
+            [("2026-01-01", True, 1, 0), (None, True, 1, 0)],
             "part string, pass boolean, n_rows long, n_violations long",
         ),
         run_id="r1",
         seq=1,
     )
-    if fmt == "parquet":
-        table = str(tmp_path / "parted")
-        df.write.partitionBy("part").parquet(table)
-        adapter = ParquetTableAdapter()
+    assert [r.status for r in manifest.read(spark).collect() if r.part is None] == [
+        "validated"
+    ]
+    assert {r.part for r in manifest.validated_parts(spark).collect()} == {"2026-01-01"}
+    if path == "run":
+        res = ValidationRun(engine, manifest=manifest).run(spark, df.drop("part"))
+        got = {r.part: r.n_rows for r in res.verdicts.collect()}
     else:
-        # a temp view stands in for the catalog table; the adapter is built
-        # without its constructor's classpath probe (the tests run without
-        # the Iceberg runtime jar)
-        table = "null_part_turns"
-        df.createOrReplaceTempView(table)
-        adapter = IcebergTableAdapter.__new__(IcebergTableAdapter)
-    pending = adapter.scan_pending(spark, table, manifest)
-    parts = {None if r.part is None else str(r.part) for r in pending.collect()}
-    assert parts == {"2026-01-02", None}
+        if path == "parquet":
+            table = str(tmp_path / "parted")
+            df.write.partitionBy("part").parquet(table)
+            adapter = ParquetTableAdapter()
+        elif path == "parquet_unpartitioned":
+            table = str(tmp_path / "flat")
+            df.drop("part").write.parquet(table)
+            adapter = ParquetTableAdapter()
+        else:
+            table = f"resume_turns_{path}"
+            (df if path == "iceberg" else df.drop("part")).createOrReplaceTempView(table)
+            # a temp view stands in for the catalog table; the adapter is
+            # built without its constructor's classpath probe (the tests
+            # run without the Iceberg runtime jar)
+            adapter = IcebergTableAdapter.__new__(IcebergTableAdapter)
+        pending = adapter.scan_pending(spark, table, manifest)
+        counts = pending.groupBy(day_part().alias("part")).count()
+        got = {r.part: r["count"] for r in counts.collect()}
+    assert {None if p is None else str(p): n for p, n in got.items()} == {
+        "2026-01-02": 1,
+        None: 1,
+    }

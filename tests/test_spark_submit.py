@@ -1,10 +1,11 @@
 """End-to-end launch-mode test: the north_rule's ``spark-submit
 --py-files`` path, executed for real — package the library zip, submit
 jobs/validate_job.py against sf0.001 events in a fresh JVM, and oracle
-the resulting violations table against DuckDB (the same _VIOLATIONS_SQL
-the driver contract uses). This is the only test that exercises the
-actual cluster entrypoint: the zip artifact, the argparse surface, the
-submit-time conf, and the job's output layout."""
+the resulting violations table and the recorded resume manifest against
+DuckDB (the same _VIOLATIONS_SQL and _VERDICTS_SQL the driver contract
+uses). This is the only test that exercises the actual cluster
+entrypoint: the zip artifact, the argparse surface, the submit-time conf,
+and the job's output layout."""
 
 from __future__ import annotations
 
@@ -37,7 +38,7 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
 
     # 2. real spark-submit in a fresh JVM (the launch mode the north_rule
     #    names; N vs 4N executors is submit-time conf, not code)
-    job_out = tmp_path / "out"
+    job_out, manifest = tmp_path / "out", tmp_path / "manifest"
     res = subprocess.run(
         [
             SPARK_SUBMIT,
@@ -54,6 +55,8 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
             str(job_out),
             "--schemas",
             str(REPO / "schemas"),
+            "--manifest",
+            str(manifest),
             "--run-id",
             "pytest-submit",
             "--seq",
@@ -83,3 +86,12 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
     assert len(got) == len(expected)
     key = lambda d: sorted(map(tuple, d[["conv_id", "turn_idx", "violation"]].values))  # noqa: E731
     assert key(got) == key(expected)
+
+    # 4. the manifest the job recorded: one row per partition, validated
+    #    exactly where the oracle's verdict passes
+    verdicts = con.sql(
+        "SELECT CAST(part AS VARCHAR), CASE WHEN pass THEN 'validated' ELSE 'failed' END"
+        f" FROM ({entry._VERDICTS_SQL})"
+    ).fetchall()
+    recorded = con.sql(f"SELECT part, status FROM '{manifest}/*.parquet'").fetchall()
+    assert sorted(recorded, key=repr) == sorted(verdicts, key=repr)
