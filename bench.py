@@ -1,5 +1,5 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS].
+local[$SPARK_GRAFT_CPUS] (default: the host's usable cores).
 
 Prints ONE JSON line:
   {"metric": "validated turns/sec", "value": N, "unit": "turns/sec",
@@ -9,8 +9,9 @@ Prints ONE JSON line:
 The headline metric follows BASELINE.json: validated turns/sec = rows of
 the transcripts table fully processed by the flagship validation run
 (row checks + uniqueness + RI + verdicts) divided by its wall time.
-Run with SPARK_GRAFT_CPUS at two levels (e.g. 8 and 32) on the same input
-to evidence the north_rule scaling criterion (see BENCH/BASELINE.md).
+Run with SPARK_GRAFT_CPUS at two levels on the same input to compare the
+headline pipeline's throughput across core counts (BENCH/BASELINE.md holds
+the earlier 8- vs 32-core record).
 """
 
 from __future__ import annotations
@@ -104,7 +105,7 @@ HEADLINE = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     sf = float(Path(sf_dir).name.replace("sf", "") or 0.1)
 
     spark = get_spark(app="pacts-bench", cores=cores, shuffle_partitions=max(cores, 16))
@@ -140,9 +141,8 @@ def main() -> None:
     # (Iceberg) transcripts table, i.e. a table scan, not the test
     # fixture's events->transcripts window derivation. Events are
     # replicated deterministically (replica shift keeps conversations
-    # distinct and violation patterns intact — same scheme as
-    # tools/scaling_bench.py) to ~4M turns so the measurement is
-    # compute-bound over the fixed per-action driver term.
+    # distinct and violation patterns intact) to ~4M turns so the
+    # measurement is compute-bound over the fixed per-action driver term.
     import shutil
     import tempfile
 

@@ -13,14 +13,11 @@ Mirrors PactsService (PactsService.java:18-169; rust/src/impl/service.rs:7-102):
 - ``send_validated(df, ...)``            ≙ PactsService.sendValidatedData
   (PactsService.java:106-122): gate — valid rows reach the sink, any
   violation raises ``ValidationException("Validation failed: ...")``.
-- ``explode_violations`` / ``partition_verdicts`` — the north_star outputs:
-  exploded violation rows under stable ``(conv_id, turn_idx)`` ordering and
-  per-partition pass/fail verdicts (ValidationResult.valid lifted from row
-  to partition).
 
 Execution model: the schema compiles ONCE on the driver into a fused
-single-projection plan (no shuffle for row checks); verdict aggregation is
-the only shuffle, keyed by the table's partition column so AQE coalesces it.
+single-projection plan, so validating rows adds no shuffle. Violation rows
+and per-partition verdicts are ``runner.ValidationRun``'s outputs, derived
+from this projection together with the uniqueness and RI checks.
 """
 
 from __future__ import annotations
@@ -163,49 +160,3 @@ class PactsEngine:
             raise ValidationException(E.validation_failed(first[0][0]))
         sender(validated)
         return validated
-
-    # -- outputs ------------------------------------------------------------
-
-    @staticmethod
-    def explode_violations(
-        validated: DataFrame,
-        key_cols: list[str],
-        extra_cols: list[str] | None = None,
-    ) -> DataFrame:
-        """Violation rows: one row per (key, error string), byte-identical
-        strings, stable ``(conv_id, turn_idx)``-style ordering
-        (north_star / input_hint invariant).
-
-        ``posexplode`` keeps the reference's intra-row error ORDER
-        (Validator.java:196-198) as an explicit ``error_idx`` column so the
-        output is fully deterministic under sort (keys..., error_idx).
-        """
-        cols = list(key_cols) + list(extra_cols or [])
-        exploded = (
-            validated.filter(F.size("errors") > 0)
-            .select(*cols, F.posexplode("errors").alias("error_idx", "violation"))
-        )
-        # repartitionByRange + sortWithinPartitions: globally ordered output
-        # files without a single-partition bottleneck at scale
-        return exploded.repartitionByRange(*key_cols).sortWithinPartitions(
-            *key_cols, "error_idx"
-        )
-
-    @staticmethod
-    def partition_verdicts(
-        validated: DataFrame, partition_col: Column | str
-    ) -> DataFrame:
-        """Per-partition pass/fail verdict (ValidationResult.valid lifted to
-        partition granularity — SURVEY.md §2.4). One shuffle keyed by the
-        table partition column (AQE coalesces); partial aggregation does the
-        heavy lifting map-side."""
-        pcol = F.col(partition_col) if isinstance(partition_col, str) else partition_col
-        return (
-            validated.groupBy(pcol.alias("part"))
-            .agg(
-                F.every("valid").alias("pass"),
-                F.sum(F.size("errors")).alias("n_violations"),
-                F.sum((~F.col("valid")).cast("long")).alias("n_invalid_rows"),
-                F.count(F.lit(1)).alias("n_rows"),
-            )
-        )

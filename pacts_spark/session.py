@@ -4,7 +4,8 @@
 (skew-join splitting + shuffle coalescing), Arrow for pandas UDFs, UTC
 session time, a 64 MB broadcast threshold and zstd blocks. ``get_spark``
 (local mode: tests, ``bench.py``, perfbench) applies them with the local
-master, shuffle partitions, driver memory and GC. ``submit_session``
+master (the host's usable cores unless ``cores`` is given), shuffle
+partitions, driver memory and GC. ``submit_session``
 (``jobs/validate_job.py`` under ``spark-submit --py-files``, the north_rule
 launch mode) fills in every key the submit conf does not hold; master,
 executors, memory and shuffle partitions come from spark-submit. At 100 TB
@@ -52,7 +53,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or len(os.sched_getaffinity(0))
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     conf = {
         **ENGINE_CONF,

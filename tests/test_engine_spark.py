@@ -163,31 +163,22 @@ def test_envelope_dispatch_single_arrow_pass(spark, engine, registry):
     assert plan.count("ArrowEvalPython") == 1, plan
 
 
-def test_explode_violations_order(spark, engine):
+def test_validate_data_error_order(spark, engine):
     df = spark.createDataFrame(
         [("c1", 2, None, None, None), ("c1", 1, None, "x", 2.0)],
         "conv_id string, turn_idx int, slot int, material string, amount double",
     )
     v = engine.validate_data(df, "inventory", "inventory_item")
-    out = engine.explode_violations(v, ["conv_id", "turn_idx"]).collect()
-    # sorted by (conv_id, turn_idx, error_idx); intra-row order = schema order
-    assert [(r.conv_id, r.turn_idx, r.violation) for r in out] == [
-        ("c1", 1, "Required field missing: slot"),
-        ("c1", 2, "Required field missing: slot"),
-        ("c1", 2, "Required field missing: material"),
-        ("c1", 2, "Required field missing: amount"),
-    ]
-
-
-def test_partition_verdicts(spark, engine):
-    df = spark.createDataFrame(
-        [("p1", 1, "m", 2.0), ("p1", None, "m", 2.0), ("p2", 3, "m", 4.0)],
-        "part string, slot int, material string, amount double",
-    )
-    v = engine.validate_data(df, "inventory", "inventory_item")
-    out = {r.part: r for r in engine.partition_verdicts(v, "part").collect()}
-    assert out["p1"]["pass"] is False and out["p1"].n_violations == 1
-    assert out["p2"]["pass"] is True and out["p2"].n_rows == 1
+    out = {r.turn_idx: r.errors for r in v.collect()}
+    # intra-row order = required[] in schema order (Validator.java:196-198)
+    assert out == {
+        2: [
+            "Required field missing: slot",
+            "Required field missing: material",
+            "Required field missing: amount",
+        ],
+        1: ["Required field missing: slot"],
+    }
 
 
 def test_send_validated_gate(spark, engine):

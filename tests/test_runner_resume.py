@@ -205,7 +205,12 @@ def _reference_outputs(engine, transcripts, conversations, tools):
             )
         ],
     )
-    rows = engine.partition_verdicts(validated, part)
+    rows = validated.groupBy(part.alias("part")).agg(
+        F.every("valid").alias("pass"),
+        F.sum(F.size("errors")).alias("n_violations"),
+        F.sum((~F.col("valid")).cast("long")).alias("n_invalid_rows"),
+        F.count(F.lit(1)).alias("n_rows"),
+    )
     counts = checks.groupBy(F.col("part").alias("check_part")).agg(
         F.count(F.lit(1)).alias("n_check")
     )
