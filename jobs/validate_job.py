@@ -4,10 +4,10 @@ mode: ``spark-submit --py-files dist/pacts_spark.zip jobs/validate_job.py``).
 On a cluster the SparkSession comes from spark-submit's conf (master,
 executor counts, memory, shuffle partitions) plus the engine's settings
 from ``pacts_spark.session.ENGINE_CONF`` (AQE, Arrow, UTC, the zstd
-block codec for shuffle, broadcast and spill), each filled in only where
-the submit conf does not set it: a ``--conf`` value wins. The same file
-runs unchanged at N and 4N executors — scaling is a submit-time concern,
-never a code change.
+block codec for shuffle, broadcast and spill, the codegen cache size),
+each filled in only where the submit conf does not set it: a ``--conf``
+value wins. The same file runs unchanged at N and 4N executors —
+scaling is a submit-time concern, never a code change.
 
 Usage (local smoke):
   python tools/package_pyfiles.py

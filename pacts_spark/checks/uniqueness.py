@@ -23,14 +23,18 @@ is one groupBy on the key (``duplicate_keys``) whose partial (map-side)
 aggregation collapses a hot key to one row per mapper before the
 exchange, so a whale conversation or a billion-fold duplicate never
 straggles a reducer — no salt is needed for a count.
-``flag_duplicates`` (under ``uniqueness_violations`` and the runner's
-flagged frame) joins it back null-safely: two reads of the input. An
-8-byte-hash first phase with an exact re-group of the candidates (three
-reads) was the runner's path until it was measured on 4 cores: on
-perfbench ``batch_full`` (10 alternating pairs) the plain groupBy wrote
-fewer shuffle and output bytes per pass (io_mb 8.99 → 8.07 MB median,
-lower in 10 of 10) and used no more CPU (cpu_s 9.02 → 8.01 s, lower in
-7 of 10), so it is the one detector.
+``flag_duplicates`` joins a duplicate set back null-safely. It takes the
+set rather than building it, so its caller decides how often the set is
+computed: ``uniqueness_violations`` passes ``duplicate_keys(df, keys)``
+(two reads of the input), while ``ValidationRun.run`` builds the set
+once per run as a local checkpoint that both of its check outputs
+broadcast (one read of the input each). An 8-byte-hash first phase with
+an exact re-group of the candidates (three reads) was the runner's path
+until it was measured on 4 cores: on perfbench ``batch_full`` (10
+alternating pairs) the plain groupBy wrote fewer shuffle and output
+bytes per pass (io_mb 8.99 → 8.07 MB median, lower in 10 of 10) and
+used no more CPU (cpu_s 9.02 → 8.01 s, lower in 7 of 10), so it is the
+one detector.
 """
 
 from __future__ import annotations
@@ -53,11 +57,12 @@ def duplicate_keys(df: DataFrame, keys: list[str]) -> DataFrame:
 
 
 def flag_duplicates(
-    df: DataFrame, keys: list[str], broadcast_dups: bool = True
+    df: DataFrame, keys: list[str], dups: DataFrame, broadcast_dups: bool = True
 ) -> DataFrame:
     """``df`` plus ``dup_count``: the multiplicity of the row's key when it
-    is duplicated, NULL when it is unique — :func:`duplicate_keys` joined
-    back null-safely (module docstring; ``<=>`` is still a hash-join key).
+    is duplicated, NULL when it is unique. ``dups`` is ``df``'s duplicate
+    set (:func:`duplicate_keys`, or a checkpoint of it), joined back
+    null-safely (module docstring; ``<=>`` is still a hash-join key).
 
     ``broadcast_dups=True`` hints the join-back (the duplicate set is
     normally the tail, so this is the common fast path). Set it False for
@@ -65,7 +70,6 @@ def flag_duplicates(
     itself is large — then AQE picks the join strategy from runtime stats
     instead of force-collecting the dup set to the driver.
     """
-    dups = duplicate_keys(df, keys)
     if broadcast_dups:
         dups = F.broadcast(dups)
     dups = dups.select(*[F.col(k).alias(f"__dk_{k}") for k in keys], "dup_count")
@@ -88,7 +92,7 @@ def uniqueness_violations(
     passes ``"hash"``) get the one detector.
     """
     return (
-        flag_duplicates(df, keys, broadcast_dups)
+        flag_duplicates(df, keys, duplicate_keys(df, keys), broadcast_dups)
         .filter(F.col("dup_count").isNotNull())
         .withColumn("violation", duplicate_message(keys))
     )

@@ -13,15 +13,23 @@ flagged frame, so a NULL-ts partition (part NULL) keeps its
 uniqueness/RI violations — the partition-level counterpart of the
 null-safe key semantics of the uniqueness check.
 
-Shuffles: uniqueness (one groupBy on (conv_id, turn_idx); its duplicate
-set is broadcast back, so each check output reads the input twice), the
-verdict groupBy (partition-keyed, AQE-coalesced), stats (ONE groupBy on
+Shuffles: uniqueness (one groupBy on (conv_id, turn_idx), once per run:
+``run()`` local-checkpoints the duplicate set, and both check outputs
+broadcast that one set, so each reads the input once), the verdict
+groupBy (partition-keyed, AQE-coalesced), stats (ONE groupBy on
 (part, column) over the rows exploded per column), drift (ONE per-part
 role histogram, read as both the current and the baseline input and
 scored in one task), the lag window (conv-keyed) and the violations
 range sort. RI flags are broadcast existence joins. Every output is a
 separate action that re-reads the input, so production input should be
-a materialized table, not an expensive derivation.
+a materialized table, not an expensive derivation. The checkpoint is
+the one exception: ``run()`` itself runs the duplicate-key groupBy's map
+stage (AQE materializes a shuffle when the checkpoint's RDD is built),
+and the checkpoint's blocks live on the executors as long as the
+``RunResult`` frames that read them. A local checkpoint is not
+recomputed: an executor lost between the two check outputs' writes
+takes its blocks along, and the second write fails instead of
+re-running the groupBy.
 
 A relational ``ValidationRun`` runs no Python; Python runs only in
 JSON-mode/envelope validation, ``pattern`` checks and the datapipe
@@ -49,7 +57,11 @@ from pacts_spark.checks import (
     gap_quantiles,
 )
 from pacts_spark.checks.referential import ri_message
-from pacts_spark.checks.uniqueness import duplicate_message, flag_duplicates
+from pacts_spark.checks.uniqueness import (
+    duplicate_keys,
+    duplicate_message,
+    flag_duplicates,
+)
 from pacts_spark.engine import PactsEngine
 
 
@@ -87,6 +99,12 @@ class ValidationRun:
         tools: DataFrame | None = None,
         pending_filtered: bool = False,
     ) -> RunResult:
+        """The five outputs' plans over the pending partitions of
+        ``transcripts``. Building them runs one Spark job: the map stage of
+        the duplicate-key groupBy, whose result is local-checkpointed so
+        that violations and verdicts share one duplicate set. Each output
+        runs when the caller acts on it (``run_and_write`` writes the two
+        check outputs)."""
         part = day_part()
 
         # pending_filtered=True: the caller already excluded validated
@@ -100,9 +118,11 @@ class ValidationRun:
 
         # ---- the flagged frame: the validated rows plus one flag per engine
         #      check, kept as (check, flag, message). Both check outputs
-        #      derive from it, so each reads the input twice (the scan and
-        #      the duplicate-key groupBy).
-        flagged = flag_duplicates(validated, KEYS)
+        #      derive from it; the duplicate set is checkpointed, so the
+        #      key shuffle runs once per run and each output reads the
+        #      input once.
+        dups = duplicate_keys(validated, KEYS).localCheckpoint(eager=False)
+        flagged = flag_duplicates(validated, KEYS, dups)
         checks = [("uniqueness", F.col("dup_count").isNotNull(), duplicate_message(KEYS))]
         # RI: one broadcast ExistenceJoin per dimension (a left-outer join
         # multiplies rows on a duplicate dim key; isin collects at plan
@@ -188,10 +208,11 @@ class ValidationRun:
         seq: int = 0,
         pending_filtered: bool = False,
     ) -> dict:
-        """Production-shaped run of ``run()``: two actions, writing
-        ``run().violations`` then ``run().verdicts`` (each reads the input
-        twice, plus the violations' range-bound sampling), then the
-        manifest record.
+        """Production-shaped run of ``run()``: its duplicate-key job, then
+        two actions, writing ``run().violations`` then ``run().verdicts``
+        (each reads the input once and broadcasts the checkpointed
+        duplicate set; the violations add their range-bound sampling),
+        then the manifest record.
 
         Returns {"violations_path", "verdicts_path"}.
         """

@@ -2,7 +2,8 @@
 
 ``ENGINE_CONF`` holds the engine's session settings once: AQE on
 (skew-join splitting + shuffle coalescing), Arrow for pandas UDFs, UTC
-session time, a 64 MB broadcast threshold and zstd blocks. ``get_spark``
+session time, a 64 MB broadcast threshold, zstd blocks and a codegen
+cache that holds a run's generated classes. ``get_spark``
 (local mode: tests, ``bench.py``, perfbench) applies them with the local
 master (the host's usable cores unless ``cores`` is given), shuffle
 partitions, driver memory and GC. ``submit_session``
@@ -24,6 +25,14 @@ inside their spread. Per pass on that table the five outputs shuffle
 blocks. AQE coalesces partitions on the compressed bytes, so a small
 shuffle now runs in fewer reduce tasks. Written outputs keep Spark's
 parquet codec (snappy): those are the files users read.
+
+Codegen cache: ``spark.sql.codegen.cache.maxEntries`` (a static conf,
+default 100) is 2,000. One ``ValidationRun`` pass with its five writes
+generates about 104 classes, so at 100 the LRU cache evicted in a cycle
+and every pass over the same plans compiled dozens of classes again
+(Janino on task threads, then the JIT). At 2,000 a JVM that runs the
+same plans again (a resumed daily run, a benchmark's timed passes,
+streaming micro-batches) compiles none of them twice.
 """
 
 from __future__ import annotations
@@ -44,6 +53,7 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.io.compression.codec": "zstd",
+    "spark.sql.codegen.cache.maxEntries": "2000",
 }
 
 

@@ -18,17 +18,18 @@ reintroduce a scale-killer:
   drift scans its input once (the baseline reuses the per-part
   histogram's exchange) and writes in at most 3 jobs;
 - ``ValidationRun.run`` derives violations and verdicts from one
-  flagged frame: each plan reads the input twice (the scan and the
-  duplicate-key groupBy) and holds one broadcast ``ExistenceJoin`` per
-  dimension, with no branch ``Union`` and no RI ``LeftAnti``;
+  flagged frame: each plan reads the input once, broadcasts the one
+  checkpointed duplicate-key set that ``run()`` builds, and holds one
+  broadcast ``ExistenceJoin`` per dimension, with no branch ``Union``
+  and no RI ``LeftAnti``;
 - the validator's scan is column-pruned to the columns the schema
   actually checks;
 - no output of a relational ``ValidationRun.run`` holds a Python-fed RDD
   or a Python evaluation in its optimized plan (literal frames are JVM
   ``LocalRelation``s);
-- ``run()``'s uniqueness is the plain groupBy on the key: neither the
-  violations nor the verdicts plan holds an ``xxhash64`` (the removed
-  hash-first detector's phase 1);
+- ``run()``'s uniqueness is the plain groupBy on the key: neither its
+  duplicate set nor the violations and verdicts plans hold an
+  ``xxhash64`` (the removed hash-first detector's phase 1);
 - a resumed read of a table without a partition column, and ``run()``
   holding a manifest, is one filter on ``cast(ts as date) IN (<date
   literals>)``: no manifest join, no per-row string cast;
@@ -117,8 +118,8 @@ def test_run_outputs_plan_no_python(spark, engine, tmp_path):
     """A relational ``run()`` over a materialized table, parquet
     conversations and ``tools_dim`` runs no Python: no output's optimized
     plan holds a Python-fed RDD (``createDataFrame`` over a list) or a
-    Python UDF evaluation."""
-    import re
+    Python UDF evaluation. The one RDD leaf allowed is the checkpointed
+    duplicate set, whose lineage is JVM-only."""
 
     from pacts_spark.runner import ValidationRun
     from pacts_spark.transcripts import conversations_dim, tools_dim
@@ -136,15 +137,22 @@ def test_run_outputs_plan_no_python(spark, engine, tmp_path):
         tools=tools,
     )
     for name in ("violations", "verdicts", "stats", "drift", "gaps"):
-        plan = getattr(res, name)._jdf.queryExecution().optimizedPlan().toString()
-        assert not re.search(r"LogicalRDD|ExistingRDD|EvalPython", plan), (name, plan)
+        plan = getattr(res, name)._jdf.queryExecution().optimizedPlan()
+        assert "EvalPython" not in plan.toString(), (name, plan.toString())
+        leaves = plan.collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if leaf.getClass().getSimpleName() == "LogicalRDD":
+                lineage = leaf.rdd().toDebugString()
+                assert "PythonRDD" not in lineage, (name, lineage)
 
 
-def test_check_outputs_read_input_twice_with_existence_joins(spark, engine, tmp_path):
+def test_check_outputs_read_input_once_with_existence_joins(spark, engine, tmp_path):
     """Violations and verdicts both derive from the flagged frame: each
-    plan scans the transcripts table twice (the validated rows and the
-    duplicate-key groupBy) and holds one ExistenceJoin per dimension; no
-    per-check branch is unioned and no RI anti-join remains."""
+    plan scans the transcripts table once, reads the duplicate-key set
+    from ``run()``'s one checkpoint and holds one ExistenceJoin per
+    dimension; no per-check branch is unioned and no RI anti-join
+    remains."""
     from pacts_spark.runner import ValidationRun
     from pacts_spark.transcripts import conversations_dim, tools_dim
 
@@ -161,16 +169,29 @@ def test_check_outputs_read_input_twice_with_existence_joins(spark, engine, tmp_
         plan = _plan(getattr(res, name))
         # the events scan (conversations dimension) reads no turn_idx
         scans = [ln for ln in plan.splitlines() if "FileScan" in ln and "turn_idx" in ln]
-        assert len(scans) == 2, (name, plan)
+        assert len(scans) == 1, (name, plan)
+        assert plan.count("Scan ExistingRDD") == 1, (name, plan)
         assert plan.count("ExistenceJoin") == 2, (name, plan)
         assert "Union" not in plan and "LeftAnti" not in plan, (name, plan)
 
 
-def test_run_uniqueness_is_plain_groupby(spark, engine, tmp_path):
+def test_run_uniqueness_is_plain_groupby(spark, engine, tmp_path, monkeypatch):
     """``run()`` finds duplicate keys with one groupBy on (conv_id,
-    turn_idx): no ``xxhash64`` in the violations or verdicts plan."""
+    turn_idx): the duplicate set it checkpoints is that aggregate, and
+    no ``xxhash64`` is in it or in the violations or verdicts plan."""
+    import re
+
+    from pacts_spark import runner
     from pacts_spark.runner import ValidationRun
     from pacts_spark.transcripts import conversations_dim, tools_dim
+
+    duplicate_keys, built = runner.duplicate_keys, []
+
+    def recording(df, keys):
+        built.append(duplicate_keys(df, keys))
+        return built[-1]
+
+    monkeypatch.setattr(runner, "duplicate_keys", recording)
 
     path = str(tmp_path / "turns")
     entry._transcripts(spark, str(SF_SMALL)).write.parquet(path)
@@ -181,10 +202,13 @@ def test_run_uniqueness_is_plain_groupby(spark, engine, tmp_path):
         conversations=conversations_dim(events),
         tools=tools_dim(spark),
     )
+    (dups,) = built
+    plan = dups._jdf.queryExecution().optimizedPlan().toString()
+    assert re.search(r"Aggregate \[conv_id#\d+, turn_idx#\d+\]", plan), plan
+    assert "xxhash64" not in plan, plan
     for name in ("violations", "verdicts"):
         plan = getattr(res, name)._jdf.queryExecution().optimizedPlan().toString()
         assert "xxhash64" not in plan, (name, plan)
-        assert "Aggregate [conv_id#" in plan, (name, plan)
 
 
 def test_ri_check_is_broadcast_anti_join(spark):
